@@ -116,15 +116,18 @@ def connected_components(
     # round 1 to one task on small graphs; big graphs keep full width
     # either way.
     prev_sig = None
+    # the checkpoint itself, not a coalesce over it: only the checkpoint's
+    # plan reaches the persisted RDD that _unpersist_checkpoint frees
+    ckpt = e
     for _ in range(max_iter):
-        prev = e
+        prev = ckpt
         # LAZY checkpoint + signature aggregate: one action per round
         # instead of two (the eager materialization job and the
         # signature job) — the aggregate computes every partition, so
         # the checkpoint blocks persist as a side effect of the same
         # job (r15; the k_core convergence-count fold, applied here).
         e = _small_star(_large_star(_symmetrize(e)))
-        e = e.localCheckpoint(eager=False)  # truncate iterative lineage
+        e = ckpt = e.localCheckpoint(eager=False)  # truncate iterative lineage
         row = e.agg(
             F.count("*").alias("n"),
             # decimal(38,0) sum: a long sum of 64-bit hashes would

@@ -6,8 +6,11 @@ on plain parquet:
 - Q3 date partitioning (PARTITION BY toDate(timestamp),
   clickhouse.py:86)  -> write.partitionBy("event_date")
 - Q4 sort key (ORDER BY (timestamp, message_id), clickhouse.py:87)
-  -> sortWithinPartitions before write (parquet min/max row-group
-  stats then give the same scan-skipping a ClickHouse sort key does)
+  -> sortWithinPartitions(event_date, timestamp, message_id) before
+  write (parquet min/max row-group stats then give the same
+  scan-skipping a ClickHouse sort key does). The partition column
+  leads: a partitioned write whose input is not already ordered by it
+  re-sorts by event_date alone and loses the sort key.
 - S10 additive schema evolution (clickhouse.py:185-191)
   -> parquet mergeSchema on read; appends may add columns freely
 - Q1/Q2 ReplacingMergeTree read semantics -> read views in
@@ -32,6 +35,15 @@ from ..operators import dedup
 from .warehouse import Warehouse
 
 PARTITION_COL = "event_date"
+
+
+def _clustered(df: DataFrame) -> DataFrame:
+    """Add the date partition column (Q3) and order each task's rows by
+    (event_date, timestamp, message_id) so every written date file
+    keeps the Q4 sort key."""
+    out = df.withColumn(PARTITION_COL, F.to_date("timestamp"))
+    sort_cols = [c for c in (PARTITION_COL, "timestamp", "message_id") if c in out.columns]
+    return out.sortWithinPartitions(*sort_cols)
 
 
 class ParquetWarehouse(Warehouse):
@@ -78,18 +90,14 @@ class ParquetWarehouse(Warehouse):
     def insert_df(self, schema: str, table: str, df: DataFrame) -> None:
         """S11 bulk insert. Adds the date partition column (Q3) and
         clusters rows by the sort key (Q4) before writing."""
-        out = df
-        sort_cols = [c for c in ("timestamp", "message_id") if c in out.columns]
-        if "timestamp" in out.columns:
-            out = out.withColumn(PARTITION_COL, F.to_date("timestamp"))
-            out = out.sortWithinPartitions(*sort_cols)
+        if "timestamp" in df.columns:
             (
-                out.write.mode("append")
+                _clustered(df).write.mode("append")
                 .partitionBy(PARTITION_COL)
                 .parquet(self._path(schema, table))
             )
         else:
-            out.write.mode("append").parquet(self._path(schema, table))
+            df.write.mode("append").parquet(self._path(schema, table))
 
     # -- read side -----------------------------------------------------
     def read_table(self, schema: str, table: str) -> DataFrame:
@@ -116,14 +124,10 @@ class ParquetWarehouse(Warehouse):
         view = self.read_view(schema, table).drop(PARTITION_COL)
         path = self._path(schema, table)
         tmp = path + "__compact"
-        sort_cols = [c for c in ("timestamp", "message_id") if c in view.columns]
-        out = view
         if "timestamp" in view.columns:
-            out = out.withColumn(PARTITION_COL, F.to_date("timestamp"))
-            out = out.sortWithinPartitions(*sort_cols)
-            out.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(tmp)
+            _clustered(view).write.mode("overwrite").partitionBy(PARTITION_COL).parquet(tmp)
         else:
-            out.write.mode("overwrite").parquet(tmp)
+            view.write.mode("overwrite").parquet(tmp)
         import shutil
 
         shutil.rmtree(path)

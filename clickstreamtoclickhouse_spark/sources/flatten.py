@@ -12,15 +12,16 @@ Reference semantics being reproduced (cites into /root/reference):
 Spark-first design: the reference flattens row-at-a-time in Python;
 here flattening is a *schema rewrite* — a driver-side walk over
 ``df.schema`` emitting one ``select`` of Column expressions
-(``col("a.b")``, ``element_at(col("a"), i)``), all JVM-side and
+(``col("a.b")``, ``try_element_at(col("a"), i)``), all JVM-side and
 whole-stage-codegen'd. Per-row cost is zero Python.
 
 Array raggedness: the reference materializes the per-batch union of
 keys, so ``a_i`` exists up to the *maximum observed* length, null for
 shorter rows. We reproduce that with ONE aggregate pass computing
 ``max(size(c))`` for every array column in the batch (map-side
-partial agg — a single cheap job even at scale), then ``element_at``
-(null past the end, matching the reference's missing-key -> NaN).
+partial agg — a single cheap job even at scale), then
+``try_element_at`` (null past the end, matching the reference's
+missing-key -> NaN; ``element_at`` raises there under ANSI mode).
 ``max_array_elements`` caps the expansion to keep schema width bounded
 on hostile data (documented deviation when the cap bites).
 """
@@ -89,9 +90,9 @@ def flatten(
                     names.append(f"{base}_{rename(sub.name)}")
             elif isinstance(f.dataType, T.ArrayType):
                 for i in range(lengths.get(f.name, 0)):
-                    # element_at is 1-based; returns null past the end
+                    # 1-based; null past the end of a shorter row
                     # (reference: missing key -> NaN, json_util.py:11-15)
-                    cols.append(F.element_at(F.col(f"`{f.name}`"), i + 1))
+                    cols.append(F.try_element_at(F.col(f"`{f.name}`"), F.lit(i + 1)))
                     names.append(f"{base}_{i}")
             else:
                 cols.append(F.col(f"`{f.name}`"))

@@ -187,3 +187,31 @@ def test_copurchase_edges_session_cache(spark):
     assert a.columns == ["u", "v"]
     assert a.filter("u >= v").count() == 0
     assert a.count() == a.distinct().count()
+
+
+def test_cc_releases_checkpoints_after_coalesce(spark, monkeypatch):
+    # without AQE partition coalescing every round's checkpoint keeps
+    # the session's shuffle width, so each round takes the coalesce
+    # branch; the checkpoints under those coalesces must still be freed
+    coalesced = []
+    df_cls = type(spark.range(1))
+    real_coalesce = df_cls.coalesce
+
+    def spy(self, n):
+        coalesced.append(n)
+        return real_coalesce(self, n)
+
+    monkeypatch.setattr(df_cls, "coalesce", spy)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = _cc_dict(spark, [(i, i + 1) for i in range(63)], max_iter=10)
+    finally:
+        spark.conf.set(key, old)
+    assert set(got.values()) == {0}
+    assert coalesced
+    # only the last round's checkpoint, which backs the result, is held
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1

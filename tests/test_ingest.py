@@ -235,6 +235,21 @@ def test_flatten_idempotent_on_flat(spark):
     assert flatten(out).columns == ["x", "some_key"]
 
 
+def test_flatten_ragged_and_empty_arrays(spark):
+    # indexed columns run to the longest row; shorter and empty rows
+    # read null past their end (reference: missing key -> NaN)
+    df = spark.createDataFrame(
+        [(1, ["x", "y"]), (2, []), (3, ["z"])], "id long, tags array<string>"
+    )
+    out = flatten(df)
+    assert out.columns == ["id", "tags_0", "tags_1"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "x", "y"),
+        (2, None, None),
+        (3, "z", None),
+    ]
+
+
 def test_s3a_read_path_classpath_story(spark):
     # S1: S3 ingest = spark.read over s3a:// in place (reference
     # downloads via aws-cli first, seghouse/util/aws_wrapper.py:10-26).

@@ -4,8 +4,10 @@ the Structured Streaming ingest path."""
 from __future__ import annotations
 
 import json
+import random
 import time
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -70,6 +72,35 @@ def test_parquet_users_view_and_compact(spark, landing, tmp_path):
     wh.compact("ns", "users")
     assert wh.read_table("ns", "users").count() == 1  # at-rest now deduped
     assert wh.read_view("ns", "users").first()["traits_plan"] == "enterprise"
+
+
+def test_parquet_sink_files_keep_sort_key(spark, tmp_path):
+    # Q4: every date file is ordered by (timestamp, message_id) after an
+    # insert of shuffled rows and after compact
+    rng = random.Random(3)
+    rows = [(f"m{i:05d}", 1767225600 + rng.randrange(3 * 86400)) for i in range(3000)]
+    rng.shuffle(rows)
+    df = (
+        spark.createDataFrame(rows, "message_id string, ts long")
+        .repartition(4)
+        .select("message_id", F.col("ts").cast("timestamp").alias("timestamp"))
+    )
+    wh = ParquetWarehouse(spark, str(tmp_path / "lake"))
+    table = tmp_path / "lake" / "ns" / "t"
+
+    def assert_files_sorted():
+        files = sorted(table.glob("event_date=*/*.parquet"))
+        assert len({f.parent for f in files}) == 3
+        for f in files:
+            t = pq.read_table(f, columns=["timestamp", "message_id"])
+            keys = list(zip(t["timestamp"].to_pylist(), t["message_id"].to_pylist()))
+            assert keys == sorted(keys), f
+
+    wh.insert_df("ns", "t", df)
+    assert_files_sorted()
+    wh.compact("ns", "t")
+    assert_files_sorted()
+    assert wh.read_table("ns", "t").count() == 3000
 
 
 def test_clickhouse_ddl_generation():
