@@ -45,8 +45,6 @@ def run_pass(
     passes: dict[str, list[float]],
     n: int,
 ) -> None:
-    from clickstreamtoclickhouse_spark.util import release_transient_checkpoints
-
     for name in names:
         t0 = time.perf_counter()
         # noop sink forces full JVM-side execution with zero
@@ -58,17 +56,6 @@ def run_pass(
         passes.setdefault(name, []).append(round(elapsed, 3))
         print(f"# pass{n} {name}: {elapsed:.2f}s (best {timings[name]:.2f}s)",
               file=sys.stderr, flush=True)
-        # r15: drop finished queries' checkpoint blocks (per-query
-        # pins, loop-round checkpoints) so late-running heavy queries
-        # don't execute under 295 queries' accumulated storage pressure
-        # (the r14 part_* end-of-suite degradation). Session-cache
-        # checkpoints are protected; the threshold makes the sweep
-        # fire every ~dozen queries (the sweep itself costs ~50-100 ms,
-        # measured ~9% on sub-second queries when unconditional).
-        # Timing is unaffected (outside the timed region, same relief a
-        # production driver applies between jobs); methodology (noop
-        # sink, interleaved min-of-N) unchanged.
-        release_transient_checkpoints(spark, min_rdds=64)
 
 
 def main() -> None:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import ckpt_once
 from .text import _ngrams, normalized_text, words
 
 
@@ -170,7 +171,7 @@ def _shingle_pair_candidates(
             "shingle",
             "left_semi",
         )
-    sh = sh.cache()
+    sh = ckpt_once(sh)
     sizes = sh.groupBy("did").agg(F.count("*").alias("sz"))
     # expansion join (see similarity.sparse_cosine_pairs): the shuffle
     # input is one row per (doc, shingle) but the output multiplies by
@@ -413,7 +414,7 @@ def simhash_near_dup_pairs(
     pair within Hamming k must agree on ≥1 band (pigeonhole), so
     candidates come from 4 equi-joins on (band_idx, band_value), never
     a crossJoin. Exact Hamming then filters candidates."""
-    sigs = simhash(docs, id_col, text_col).cache()
+    sigs = ckpt_once(simhash(docs, id_col, text_col))
     bands = sigs.select(
         F.col(id_col).alias("did"),
         F.col("simhash"),

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..util import conf_broadcast, release_local_checkpoint
+
 
 def _symmetrize(e: DataFrame) -> DataFrame:
     """Both orientations of each edge, self-loops dropped. No
@@ -75,18 +77,6 @@ def _small_star(e_down: DataFrame) -> DataFrame:
     return nbrs.union(self_edge).distinct()
 
 
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint's persisted RDD. ``Dataset.unpersist``
-    only consults the cacheManager (a no-op for checkpoints), so reach
-    through the LogicalRDD to the materialized RDD. Best-effort: if
-    the plan shape ever changes, the ContextCleaner still reclaims the
-    blocks once the JVM-side reference is garbage-collected."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -117,7 +107,7 @@ def connected_components(
     # either way.
     prev_sig = None
     # the checkpoint itself, not a coalesce over it: only the checkpoint's
-    # plan reaches the persisted RDD that _unpersist_checkpoint frees
+    # plan reaches the persisted RDD that release_local_checkpoint frees
     ckpt = e
     for _ in range(max_iter):
         prev = ckpt
@@ -138,7 +128,7 @@ def connected_components(
         # previous round's checkpoint blocks are dead weight now — drop
         # them instead of accumulating O(log n) edge sets. (Must happen
         # AFTER the aggregate: the new round's lineage reads them.)
-        _unpersist_checkpoint(prev)
+        release_local_checkpoint(prev)
         sig = (row["n"], row["h"])
         if sig == prev_sig:
             break
@@ -225,8 +215,6 @@ def k_core(
             .distinct()
             .localCheckpoint(eager=True)
         )
-    from ..util import conf_broadcast
-
     # The survivor set is node-volume and checkpointed, so the planner
     # sees no stats and falls back to TWO SortMergeJoins per round —
     # shuffling + sorting the full edge list twice per peel round
@@ -263,7 +251,7 @@ def k_core(
         core = survivors
         # the new survivor set is materialized; the previous round's
         # blocks are dead weight now (the connected_components stance)
-        _unpersist_checkpoint(prev_core)
+        release_local_checkpoint(prev_core)
         if n_now == n_prev:
             break
         n_prev = n_now
@@ -317,8 +305,6 @@ def label_propagation(
         .select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=True)
     )
-    from ..util import conf_broadcast
-
     for _ in range(rounds):
         prev_labels = labels
         # r15: the label table is node-volume and checkpointed (no
@@ -360,8 +346,8 @@ def label_propagation(
         )
         # the new round's labels are materialized; drop the previous
         # round's blocks (the connected_components stance)
-        _unpersist_checkpoint(prev_labels)
+        release_local_checkpoint(prev_labels)
     # the returned labels are a materialized checkpoint, so the edge
     # table this function built is dead weight from here on
-    _unpersist_checkpoint(und)
+    release_local_checkpoint(und)
     return labels

@@ -19,7 +19,12 @@ from ..functions.dedup_text import (
     bloom_positions,
     sql_bloom_positions,
 )
-from ..util import SessionDFCache, portable_id_hash, widen_scan
+from ..util import (
+    SessionDFCache,
+    portable_id_hash,
+    release_local_checkpoint,
+    widen_scan,
+)
 from .ext import _COPY_OFFSET
 from .registry import load, query
 
@@ -969,13 +974,6 @@ def _bpe_oracle_sql(final: str = "merges") -> str:
 
 
 _BPE_CACHE = SessionDFCache("bpe_learn")
-# The learned merge list is NOT a DataFrame, so it lives OUTSIDE the
-# cache's entry convention (evict() releases tuple entries element-wise
-# expecting DataFrames — r14 advice): parallel plain dict, same key,
-# swept with the cache. A stale merges entry after an evict() is
-# harmless (hits are gated on _BPE_CACHE membership and a rebuild
-# overwrites it).
-_BPE_MERGES: dict[tuple, tuple] = {}
 
 
 def _bpe_learn(
@@ -988,18 +986,17 @@ def _bpe_learn(
     bpe_detok_roundtrip each consume the SAME {_BPE_ROUNDS}-round loop
     (driver argmax round trips included), so one build serves all
     three (the manifest/topic-cluster cache stance). The cache entry is
-    the final symbol table (the loop's own eager checkpoint, released
-    by the registry-wide eviction hook); the merges tuple rides in the
-    parallel _BPE_MERGES dict (r14 advice: non-DataFrame payloads stay
-    out of the evictor's tuple convention)."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _BPE_CACHE if k[0] != app_id]:
-        del _BPE_CACHE[k]
-        _BPE_MERGES.pop(k, None)
-    key = (app_id, sf_dir)
-    hit = _BPE_CACHE.get(key)
-    if hit is not None:
-        return list(_BPE_MERGES[key]), hit
+    (symbol table, merges): the table is the loop's own eager
+    checkpoint, the merge tuple rides along unpinned."""
+    l, merges = _BPE_CACHE.get_or_build(
+        spark, sf_dir, lambda: _bpe_build(spark, sf_dir)
+    )
+    return list(merges), l
+
+
+def _bpe_build(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, tuple[tuple[int, str, str, int], ...]]:
     d = load(spark, sf_dir, "documents")
     vocab = (
         d.select(F.explode(tx.words(F.lower(F.col("text")))).alias("word"))
@@ -1017,8 +1014,6 @@ def _bpe_learn(
         ).alias("x"),
     ).select("word", "freq", "x.pos", "x.sym")
     l = l.localCheckpoint(eager=True)
-
-    from ..util import release_local_checkpoint
 
     w_pos = Window.partitionBy("word").orderBy("pos")
     merges: list[tuple[int, str, str, int]] = []
@@ -1082,9 +1077,7 @@ def _bpe_learn(
         # checkpoint blocks are dead weight now (the graph-loop stance)
         release_local_checkpoint(prev_l)
 
-    _BPE_CACHE[key] = l
-    _BPE_MERGES[key] = tuple(merges)
-    return merges, l
+    return l, tuple(merges)
 
 
 @query("bpe_merges", oracle=_bpe_oracle_sql())

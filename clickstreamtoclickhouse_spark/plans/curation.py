@@ -39,6 +39,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text as tx
+from ..util import (
+    DRIVER_SOLVE_LIMIT,
+    bounded_collect,
+    ckpt_once,
+    round_half_up,
+)
 from .llmprep import CHUNK_SIZE, CHUNK_STRIDE
 from .registry import load, query
 
@@ -1033,7 +1039,9 @@ def bt_source_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # r15: the MM fit runs DRIVER-SIDE over the collected duel matrix
-    # (|sources|^2 rows by construction, guarded below). The r14 Spark
+    # (|sources|^2 rows by construction: the source set is guarded
+    # before the matrix is collected, and the pin makes both reads one
+    # execution of the winrates plan). The r14 Spark
     # loop — eager checkpoint + four broadcast hints per iteration on
     # |sources|-row tables — paid the local-mode stage-launch floor
     # five times over (~2.6-3.9 s in-bench for microseconds of
@@ -1042,25 +1050,19 @@ def bt_source_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly-replicated arithmetic (every intermediate 9dp HALF_UP,
     # identical to the oracle's unrolled MATERIALIZED CTEs), emit the
     # result. Zero per-round job launches.
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def _rnd(x: float, places: int) -> float:
-        return float(
-            Decimal(repr(x)).quantize(
-                Decimal(1).scaleb(-places), rounding=ROUND_HALF_UP
-            )
+    both = ckpt_once(both)
+    sources = sorted(
+        r.i
+        for r in bounded_collect(
+            both.select("i").distinct(),
+            DRIVER_SOLVE_LIMIT,
+            "bt_source_strengths: sources",
         )
-
+    )
     duels = sorted(
         ((r.i, r.j, r.wx2, r.nij) for r in both.collect()),
         key=lambda t: (t[0], t[1]),
     )
-    sources = sorted({i for i, _, _, _ in duels})
-    if len(sources) > 10_000:
-        raise ValueError(
-            f"bt_source_strengths: {len(sources)} sources (> 10,000); "
-            "the driver-side MM loop assumes a source-bounded domain set"
-        )
     k = len(sources)
     wtot = {s: 0 for s in sources}
     for i, _, wx2, _ in duels:
@@ -1069,12 +1071,12 @@ def bt_source_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(_BT_ITERS):
         denom = {s: 0.0 for s in sources}
         for i, j, _, nij in duels:
-            denom[i] += _rnd(nij / (p[i] + p[j]), 9)
-        praw = {s: _rnd((wtot[s] / 2.0) / denom[s], 9) for s in sources}
+            denom[i] += round_half_up(nij / (p[i] + p[j]), 9)
+        praw = {s: round_half_up((wtot[s] / 2.0) / denom[s], 9) for s in sources}
         tot = sum(praw[s] for s in sources)
-        p = {s: _rnd(praw[s] * k / tot, 9) for s in sources}
-    out = sorted(sources, key=lambda s: (-_rnd(p[s], 6), s))
+        p = {s: round_half_up(praw[s] * k / tot, 9) for s in sources}
+    out = sorted(sources, key=lambda s: (-round_half_up(p[s], 6), s))
     return spark.createDataFrame(
-        [(s, _rnd(p[s], 6), i + 1) for i, s in enumerate(out)],
+        [(s, round_half_up(p[s], 6), i + 1) for i, s in enumerate(out)],
         "source string, strength double, rank int",
     )

@@ -17,7 +17,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import dedup_text, graph, multimodal, similarity, text as tx
-from ..util import SessionDFCache, widen_scan
+from ..util import (
+    DRIVER_SOLVE_LIMIT,
+    SessionDFCache,
+    bounded_collect,
+    round_half_up,
+    widen_scan,
+)
 from .curation import _SQL_Q_MILLI
 from .registry import load, query
 
@@ -136,7 +142,7 @@ def _decon_band_tables(
         ).select(F.col("did").alias("doc_id"), "band", "bk")
         return band_b, band_c
 
-    return _DECON_BANDS_CACHE.get_or_build_group(spark, sf_dir, build)
+    return _DECON_BANDS_CACHE.get_or_build(spark, sf_dir, build)
 
 
 def _light_edit_corpus(docs: DataFrame) -> DataFrame:
@@ -1030,11 +1036,6 @@ def _topic_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _TOPIC_ASSIGN_CACHE.get_or_build(spark, sf_dir, build)
 
 
-def evict_topic_assignments(sf_dir: str | None = None) -> int:
-    """Explicit unpersist hook (the evict_chain_assignments twin)."""
-    return _TOPIC_ASSIGN_CACHE.evict(sf_dir)
-
-
 @query(
     "doc_topic_clusters",
     oracle=_kmeans_oracle_sql(_PKM_K, _PKM_ITERS, _PKM_DIMS),
@@ -1376,11 +1377,6 @@ def _chain_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return _CHAIN_ASSIGN_CACHE.get_or_build(spark, sf_dir, build)
-
-
-def evict_chain_assignments(sf_dir: str | None = None) -> int:
-    """Explicit unpersist hook (the evict_copurchase_edges twin)."""
-    return _CHAIN_ASSIGN_CACHE.evict(sf_dir)
 
 
 # Shared recursive-CC oracle CTE block (chain corpus -> jaccard pairs
@@ -3723,15 +3719,7 @@ def _manifest_dedup_base(
         )
         return ex, pairs
 
-    ex, pairs = _MANIFEST_BASE_CACHE.get_or_build_group(
-        spark, sf_dir, build_both
-    )
-    return ex, pairs
-
-
-def evict_manifest_base(sf_dir: str | None = None) -> int:
-    """Explicit unpersist hook (the evict_chain_assignments twin)."""
-    return _MANIFEST_BASE_CACHE.evict(sf_dir)
+    return _MANIFEST_BASE_CACHE.get_or_build(spark, sf_dir, build_both)
 
 
 @query("corpus_build_manifest", oracle=_manifest_oracle())
@@ -7185,21 +7173,14 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the two LM scorings are the existing vocab-broadcast plans
     (corpus scanned twice, shuffles keyed on word/bigram/doc_id);
     everything after is a |sources|-row aggregate."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def _rnd(x: float, places: int) -> float:
-        return float(
-            Decimal(repr(x)).quantize(
-                Decimal(1).scaleb(-places), rounding=ROUND_HALF_UP
-            )
-        )
+    from decimal import Decimal
 
     d = load(spark, sf_dir, "documents")
     u = unigram_lm_quality(spark, sf_dir).select("doc_id", "avg_logprob")
     b = bigram_lm_quality(spark, sf_dir).select(
         "doc_id", "avg_bigram_logprob"
     )
-    per = (
+    per = bounded_collect(
         d.select("doc_id", "source")
         .join(u, "doc_id")
         .join(b, "doc_id")
@@ -7218,42 +7199,37 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("sb"),
-        )
-        .collect()
+        ),
+        DRIVER_SOLVE_LIMIT,
+        "doremi_domain_weights: sources (bucket sources first)",
     )
-    if len(per) > 10_000:
-        raise ValueError(
-            f"doremi_domain_weights: {len(per)} sources (> 10,000); the "
-            "driver-side MW loop assumes a source-bounded domain set — "
-            "bucket sources first"
-        )
     rows = sorted(per, key=lambda r: r.source)
     k = len(rows)
     inv_k = 1.0 / k
     nd = sum(r.n for r in rows)
     excess = {}
     for r in rows:
-        mu = _rnd(r.su / 1000000.0 / r.n, 9)
-        mb = _rnd(r.sb / 1000000.0 / r.n, 9)
-        excess[r.source] = _rnd(max(0.0, mb - mu), 9)
+        mu = round_half_up(r.su / 1000000.0 / r.n, 9)
+        mb = round_half_up(r.sb / 1000000.0 / r.n, 9)
+        excess[r.source] = round_half_up(max(0.0, mb - mu), 9)
     a = {r.source: inv_k for r in rows}
     for _ in range(_DOREMI_ITERS):
         wgt = {
-            s: Decimal(repr(_rnd(a[s] * (1.0 + 0.1 * excess[s]), 9)))
+            s: Decimal(repr(round_half_up(a[s] * (1.0 + 0.1 * excess[s]), 9)))
             for s in a
         }
         tot = float(sum(wgt[s] for s in sorted(wgt)))
         a = {
-            s: _rnd(0.99 * (float(wgt[s]) / tot) + 0.01 * inv_k, 9)
+            s: round_half_up(0.99 * (float(wgt[s]) / tot) + 0.01 * inv_k, 9)
             for s in a
         }
     out = [
         (
             r.source,
             r.n,
-            _rnd(excess[r.source], 6),
-            _rnd(r.n * 1.0 / nd, 6),
-            _rnd(a[r.source], 6),
+            round_half_up(excess[r.source], 6),
+            round_half_up(r.n * 1.0 / nd, 6),
+            round_half_up(a[r.source], 6),
         )
         for r in rows
     ]

@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..operators import coerce
+from ..util import DRIVER_SOLVE_LIMIT, bounded_collect, round_half_up
 from .registry import load, query
 
 # ---------------------------------------------------------------------------
@@ -2588,17 +2589,6 @@ def transition_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration runs driver-side — the corpus is never re-read and no
     per-round jobs launch (r15; the transition_shortest_paths/doremi
     bounded-state stance)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def _rnd(x: float, places: int) -> float:
-        # bit-matches F.round: BigDecimal.valueOf(double) HALF_UP on
-        # the shortest decimal repr (the doremi/markov stance)
-        return float(
-            Decimal(repr(x)).quantize(
-                Decimal(1).scaleb(-places), rounding=ROUND_HALF_UP
-            )
-        )
-
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     tr = (
@@ -2613,7 +2603,11 @@ def transition_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nodes = sorted(
         r.event_type
-        for r in e.select("event_type").distinct().collect()
+        for r in bounded_collect(
+            e.select("event_type").distinct(),
+            DRIVER_SOLVE_LIMIT,
+            "transition_pagerank: event types",
+        )
     )
     outw = tr.groupBy("from_type").agg(F.sum("n").cast("long").alias("o"))
     ew = tr.join(outw, "from_type").select(
@@ -2628,13 +2622,7 @@ def transition_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bounded model, iterate in exactly-replicated arithmetic
     # (9dp HALF_UP per round, identical to the oracle's unrolled
     # CTEs), emit the result. Zero per-round job launches.
-    ew_rows = ew.collect()
-    if len(nodes) > 10_000:
-        raise ValueError(
-            f"transition_pagerank: {len(nodes)} event types (> 10,000); "
-            "the driver-side power iteration assumes a type-bounded "
-            "vertex set"
-        )
+    ew_rows = ew.collect()  # <= |nodes|^2 rows, nodes guarded above
     n_nodes = len(nodes)
     base = (1 - _PR_D) / n_nodes
     edges = sorted(
@@ -2647,12 +2635,13 @@ def transition_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         for to_t, from_t, wgt in edges:
             inc[to_t] = inc.get(to_t, 0.0) + ranks[from_t] * wgt
         ranks = {
-            v: _rnd(base + _PR_D * inc.get(v, 0.0), 9) for v in nodes
+            v: round_half_up(base + _PR_D * inc.get(v, 0.0), 9)
+            for v in nodes
         }
-    out = sorted(nodes, key=lambda v: (-_rnd(ranks[v], 9), v))
+    out = sorted(nodes, key=lambda v: (-round_half_up(ranks[v], 9), v))
     return spark.createDataFrame(
         [
-            (v, _rnd(ranks[v], 6), i + 1)
+            (v, round_half_up(ranks[v], 6), i + 1)
             for i, v in enumerate(out)
         ],
         "event_type string, rank_score double, rank int",
@@ -4269,22 +4258,16 @@ def transition_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
     )
     outw = tr.groupBy("from_type").agg(F.sum("n").cast("long").alias("o"))
-    edge_rows = (
-        tr.join(outw, "from_type")
-        .select(
+    edge_rows = bounded_collect(
+        tr.join(outw, "from_type").select(
             "from_type",
             "to_type",
             F.round(-F.log(F.col("n") * 1.0 / F.col("o")), 9).alias("w"),
-        )
-        .collect()
+        ),
+        DRIVER_SOLVE_LIMIT,
+        "transition_shortest_paths: transition edges (bucket event "
+        "types first)",
     )
-    if len(edge_rows) > 10_000:
-        raise ValueError(
-            "transition_shortest_paths: transition graph has "
-            f"{len(edge_rows)} edges (> 10,000); the driver-side "
-            "relaxation assumes an event-type-bounded vocabulary — "
-            "bucket event types first"
-        )
     src_row = (
         e.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -6232,13 +6215,6 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _Q9 = Decimal(1).scaleb(-9)
 
-    def _rnd(x: float, places: int) -> float:
-        return float(
-            Decimal(repr(x)).quantize(
-                Decimal(1).scaleb(-places), rounding=ROUND_HALF_UP
-            )
-        )
-
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.select(
@@ -6276,25 +6252,24 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.col("state").alias("f"), F.lit("NULL").alias("t"))
     )
     cnt = raw.groupBy("f", "t").agg(F.count(F.lit(1)).alias("n"))
-    base_rows = cnt.select(
-        "f",
-        "t",
-        F.round(
-            F.col("n") * 1.0 / F.sum("n").over(Window.partitionBy("f")), 9
-        ).alias("p"),
-    ).collect()
     # event-type-bounded INVARIANT, asserted (not just commented): the
     # chain has one row per (from, to) state pair, |states|² at most.
     # On a channel vocabulary that isn't event-type-shaped the
     # driver-side value iteration would silently become unbounded —
     # fail loudly instead so the caller knows to bucket channels first.
-    if len(base_rows) > 10_000:
-        raise ValueError(
-            "markov_attribution: transition matrix has "
-            f"{len(base_rows)} rows (> 10,000); the driver-side value "
-            "iteration assumes an event-type-bounded state space — "
-            "bucket the channel vocabulary before attribution"
-        )
+    base_rows = bounded_collect(
+        cnt.select(
+            "f",
+            "t",
+            F.round(
+                F.col("n") * 1.0 / F.sum("n").over(Window.partitionBy("f")),
+                9,
+            ).alias("p"),
+        ),
+        DRIVER_SOLVE_LIMIT,
+        "markov_attribution: transition matrix (bucket the channel "
+        "vocabulary first)",
+    )
 
     out_rows = []
     variants = ["none"] + list(_MK_CHANNELS)
@@ -6333,7 +6308,9 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = []
     for c in _MK_CHANNELS:
         re_c = (
-            _rnd(max(0.0, 1.0 - pconv[c] / base_p), 6) if base_p else None
+            round_half_up(max(0.0, 1.0 - pconv[c] / base_p), 6)
+            if base_p
+            else None
         )
         res.append((c, re_c))
     tot = sum(r for _, r in res if r is not None)
@@ -6341,7 +6318,9 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             c,
             re_c,
-            _rnd(re_c / tot, 6) if (re_c is not None and tot) else None,
+            round_half_up(re_c / tot, 6)
+            if (re_c is not None and tot)
+            else None,
         )
         for c, re_c in res
     ]

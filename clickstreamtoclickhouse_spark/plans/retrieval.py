@@ -173,9 +173,8 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # retrieval query (bm25 / hybrid / snippets / eval / prf) rebuilds:
 # one token explode + one keyed count over the whole documents table.
 # Cached per (applicationId, sf_dir) behind a LAZY localCheckpoint —
-# util.SessionDFCache (dead-app sweep + explicit unpersist hook) — so
-# a session running the family pays for the explode-aggregate once;
-# assumes the input dir is immutable for the app's lifetime (the same
+# util.SessionDFCache — so a session running the family pays for the
+# explode-aggregate once; assumes the input dir is immutable for the app's lifetime (the same
 # contract registry.load testdata already has).
 _TF_CACHE = SessionDFCache("corpus_tf")
 _TF_CACHE_ENABLED = True
@@ -196,16 +195,6 @@ def _corpus_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not _TF_CACHE_ENABLED:
         return build()
     return _TF_CACHE.get_or_build(spark, sf_dir, build)
-
-
-def evict_corpus_tf(sf_dir: str | None = None) -> int:
-    """Explicit unpersist hook for the session tf cache: a LONG-LIVED
-    application iterating over many sf_dirs accumulates one
-    materialized localCheckpoint per dir (the dead-appId sweep only
-    reclaims OTHER apps' entries). Call with a dir to release that
-    dir's checkpoint blocks, or with no argument to drop them all.
-    Returns the number of entries evicted."""
-    return _TF_CACHE.evict(sf_dir)
 
 
 def _tf_tables(
@@ -243,14 +232,14 @@ def _retrieval_rankings(
     twin of _SQL_RETRIEVAL_CTES, shared by bm25_topk_docs and
     hybrid_search_rrf so the two registered queries cannot drift.
 
-    r14: the PAIR is session-cached (one group entry — the
-    get_or_build_group contract) on top of the tf cache: five
+    r14: the PAIR is session-cached (one tuple entry, so both tables
+    live and die together) on top of the tf cache: five
     registered queries (bm25_topk_docs, hybrid_search_rrf{,_exact},
     search_snippets, retrieval_eval_report, prf via lexrank) each
     re-ran the BM25 scoring joins and both rank windows from the tf
     checkpoint; now the first consumer materializes each rank table
     once and the rest read it."""
-    return _RANKINGS_CACHE.get_or_build_group(
+    return _RANKINGS_CACHE.get_or_build(
         spark, sf_dir, lambda: _build_rankings(spark, sf_dir)
     )
 

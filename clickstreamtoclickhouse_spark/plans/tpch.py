@@ -1134,9 +1134,9 @@ def order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One co-purchase edge build shared by the graph family (triangles /
 # k-core / link prediction all consume the identical distinct
 # lineitem self-join), cached per (application, sf_dir) behind a LAZY
-# localCheckpoint — util.SessionDFCache (dead-app sweep + explicit
-# unpersist hook) — so a session running the whole family pays for
-# the lineitem scan + co-order self-join + distinct exactly once.
+# localCheckpoint — util.SessionDFCache — so a session running the
+# whole family pays for the lineitem scan + co-order self-join +
+# distinct exactly once.
 _COPURCHASE_CACHE = SessionDFCache("copurchase_edges")
 # per-node triangle counts: shared by part_copurchase_triangles and
 # part_clustering_coefficient (which composes on top of them)
@@ -1172,16 +1172,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return _COPURCHASE_CACHE.get_or_build(spark, sf_dir, build)
-
-
-def evict_copurchase_edges(sf_dir: str | None = None) -> int:
-    """Explicit unpersist hook (twin of retrieval.evict_corpus_tf):
-    releases the edge checkpoints a long-lived app accumulated across
-    sf_dirs — the dead-appId sweep only reclaims OTHER apps'
-    entries. Also drops the DERIVED per-node triangle counts for the
-    same dirs (they checkpoint off the edge build and must not
-    outlive it). Returns the number of entries evicted."""
-    return _COPURCHASE_CACHE.evict(sf_dir) + _TRIANGLE_CACHE.evict(sf_dir)
 
 
 @query(
@@ -2461,7 +2451,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys = [f"n{i}" for i in range(t)] + ["k"]
         # r15 NOTE: broadcasting adj here (the k_core/HITS treatment)
         # was tried and measured a 3x LOSS in a same-JVM interleaved
-        # A/B (scripts/ab_r15_graph.py: broadcast 8.4s vs shuffle 2.8s
+        # A/B (broadcast 8.4s vs shuffle 2.8s
         # min-of-3 at sf0.1) — the per-hop broadcast build of the
         # cap-bounded adjacency dwarfs the SMJ it replaces, and the
         # frontier shuffle it saves is the cheap side. Kept as the

@@ -253,7 +253,7 @@ def stream_merge_upsert(
     spark = updates_stream.sparkSession
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..util import try_read_parquet
+        from ..util import release_local_checkpoint, try_read_parquet
 
         # None ONLY when the table doesn't exist yet (first batch);
         # real read failures propagate instead of silently rebuilding
@@ -279,18 +279,10 @@ def stream_merge_upsert(
         try:
             merged.write.mode("overwrite").parquet(table_dir)
         finally:
-            # reclaim the checkpoint's cached blocks NOW rather than
-            # waiting on GC/ContextCleaner — in a long-running stream
-            # un-freed blocks accumulate across micro-batches. The
-            # analyzed plan of a localCheckpoint'd Dataset is a
-            # LogicalRDD whose rdd() IS the cached checkpoint RDD;
-            # unpersisting it empties getRDDStorageInfo (verified
-            # empirically — toRdd() by contrast returns a DERIVED rdd
-            # whose unpersist is a no-op on the cached blocks).
-            try:
-                merged._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass
+            # reclaim the checkpoint's blocks NOW rather than waiting on
+            # GC/ContextCleaner — in a long-running stream un-freed
+            # blocks accumulate across micro-batches
+            release_local_checkpoint(merged)
 
     return (
         updates_stream.writeStream.foreachBatch(process_batch)

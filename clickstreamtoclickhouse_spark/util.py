@@ -10,67 +10,44 @@ _SESSION_CACHES: list["SessionDFCache"] = []
 
 
 class SessionDFCache(dict):
-    """Session-scoped cache of expensive shared builds, keyed
-    (applicationId, sf_dir) -> lazily-localCheckpointed DataFrame —
-    the ONE implementation behind the co-purchase edge, retrieval tf,
-    and dedup cluster-assignment caches (three divergent copies of
-    this pattern would be the portable_id_hash mistake all over).
+    """The engine's ONE holder of cross-query state: a build shared by
+    several registered queries, keyed (applicationId, sf_dir) -> the
+    lazily localCheckpointed build. Library code never reaches for
+    `.cache()` to share work between queries; it registers a cache here.
 
     Contract: the input dir is IMMUTABLE for the application's
-    lifetime (the registry.load testdata contract); keys from stopped
-    applications are swept on every access so a long-lived Python
+    lifetime (the registry.load testdata contract); keys of stopped
+    applications are dropped on every access, so a long-lived Python
     process restarting Spark sessions cannot accumulate stale
-    DataFrames; `evict()` is the explicit unpersist hook for a
-    long-lived app iterating over many sf_dirs (the sweep only
-    reclaims OTHER apps' entries). Plain dict subclass so tests can
-    inspect/plant entries directly.
+    DataFrames. Plain dict subclass so tests can inspect/plant entries
+    directly.
 
     Memory ceiling: each cache holds ONE materialized localCheckpoint
     per (app, sf_dir) it has served, so a session's cache footprint is
     bounded by (number of distinct input dirs) x (sum of the
-    registered caches' per-dir build sizes) — unbounded only if a
-    long-lived app walks unboundedly many dirs WITHOUT calling
-    `evict(dir)` / `evict_session_caches(dir)` when done with one.
-    bench.py and scripts/sf_probe.py call evict_session_caches() in
-    their teardown for exactly this reason. Every instance
-    self-registers in `_SESSION_CACHES` (the `name` is diagnostic), so
-    registry-wide teardown and the registry-wide eviction test cannot
-    silently miss a new cache."""
+    registered caches' per-dir build sizes). A long-lived app walking
+    many dirs releases one with `evict_session_caches(dir)` when done
+    with it; bench.py and scripts/sf_probe.py call it in teardown.
+    Every instance self-registers in `_SESSION_CACHES` (the `name` is
+    diagnostic), so registry-wide teardown and the registry-wide
+    eviction test cannot silently miss a new cache."""
 
     def __init__(self, name: str = ""):
         super().__init__()
         self.name = name
         _SESSION_CACHES.append(self)
 
-    @staticmethod
-    def _ckpt_once(df: DataFrame) -> DataFrame:
-        """Delegates to the module-level ckpt_once (one implementation
-        of the wrap-once rule, not two)."""
-        return ckpt_once(df)
-
     def get_or_build(self, spark: SparkSession, sf_dir: str, builder):
-        app_id = spark.sparkContext.applicationId
-        for k in [k for k in self if k[0] != app_id]:
-            del self[k]
-        key = (app_id, sf_dir)
-        cached = self.get(key)
-        if cached is not None:
-            return cached
-        df = self._ckpt_once(builder())
-        self[key] = df
-        return df
+        """The entry for (this app, `sf_dir`), built on a miss.
 
-    def get_or_build_group(self, spark: SparkSession, sf_dir: str, builder):
-        """Like get_or_build, but `builder` returns a TUPLE of
-        DataFrames that live and die together — one cache entry, one
-        eviction. Use when a derived DataFrame (e.g. a pair table)
-        closes over a sibling build: caching them separately lets the
-        derived entry outlive an evicted base whose checkpoint blocks
-        are gone, failing with checkpoint-block-not-found on first
-        use. Each element is lazily localCheckpointed; `builder` may
-        chain later elements off earlier ones (an element it already
-        checkpointed itself — plan is a LogicalRDD — is not wrapped
-        again, which would double the stored blocks)."""
+        `builder` returns one DataFrame or a tuple. Every DataFrame in
+        the entry is pinned with `ckpt_once` (an element the builder
+        already checkpointed, e.g. one a later element chains off, is
+        not wrapped twice); other tuple elements (the BPE merge list)
+        ride along unchanged. Return a tuple when a derived DataFrame
+        closes over a sibling build: cached separately, the derived
+        entry could outlive an evicted base whose checkpoint blocks
+        are gone, failing with checkpoint-block-not-found."""
         app_id = spark.sparkContext.applicationId
         for k in [k for k in self if k[0] != app_id]:
             del self[k]
@@ -78,35 +55,41 @@ class SessionDFCache(dict):
         cached = self.get(key)
         if cached is not None:
             return cached
-        dfs = tuple(self._ckpt_once(df) for df in builder())
-        self[key] = dfs
-        return dfs
+        entry = builder()
+        if isinstance(entry, tuple):
+            entry = tuple(
+                ckpt_once(x) if isinstance(x, DataFrame) else x for x in entry
+            )
+        else:
+            entry = ckpt_once(entry)
+        self[key] = entry
+        return entry
 
     def evict(self, sf_dir: str | None = None) -> int:
         """Release entries for `sf_dir` (or all); returns the count.
 
-        The evicted DataFrame objects must not be reused afterwards
-        (callers rebuild via get_or_build); tuple-group entries are
-        released element-wise."""
+        Every DataFrame of an entry has its checkpoint blocks released;
+        the evicted objects must not be reused afterwards (callers
+        rebuild via get_or_build)."""
         n = 0
         for k in list(self):
             if sf_dir is None or k[1] == sf_dir:
                 entry = self.pop(k)
-                dfs = entry if isinstance(entry, tuple) else (entry,)
-                for df in dfs:
-                    release_local_checkpoint(df)
+                for x in entry if isinstance(entry, tuple) else (entry,):
+                    if isinstance(x, DataFrame):
+                        release_local_checkpoint(x)
                 n += 1
         return n
 
 
 def ckpt_once(df: DataFrame) -> DataFrame:
-    """Lazy localCheckpoint, skipped when the plan is already a
-    LogicalRDD (a checkpoint the caller made) — wrapping again would
-    double the stored blocks. The module-level twin of
-    SessionDFCache._ckpt_once for shared operators (r14: used where a
-    library function fans a caller-provided DataFrame into several
-    consumers and must pin ONE execution without knowing whether the
-    caller checkpointed already)."""
+    """Pin `df` so that one query's several consumers share ONE
+    execution: a lazy localCheckpoint, skipped when the plan is
+    already a LogicalRDD (a checkpoint the caller made) — wrapping
+    again would double the stored blocks. The pin lives as long as the
+    DataFrame: the ContextCleaner reclaims its blocks once the object
+    is garbage, or `release_local_checkpoint` frees them at once.
+    Reuse ACROSS queries goes through SessionDFCache instead."""
     plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() == "LogicalRDD":
         return df
@@ -114,17 +97,20 @@ def ckpt_once(df: DataFrame) -> DataFrame:
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
-    """Release a localCheckpointed DataFrame's storage blocks NOW.
+    """Release a localCheckpointed DataFrame's storage blocks NOW — the
+    engine's one release call (loop rounds, stream batches, session
+    cache eviction).
 
     The blocks live on the underlying checkpoint RDD, which
     `DataFrame.unpersist()` does NOT touch (that only clears
     cacheManager entries — measured: blocks survive) and which the
     JVM ContextCleaner only reclaims at driver GC — too lazy for a
-    long-running stream checkpointing every micro-batch. Release the
-    LogicalRDD's backing RDD directly so storage actually shrinks;
-    the DataFrame must not be used afterwards. Safe no-op if the app
-    is already stopped (its blocks are gone anyway) or the plan is
-    not a materialized checkpoint."""
+    loop or a long-running stream checkpointing every round or
+    micro-batch. Unpersist the LogicalRDD's backing RDD directly,
+    blocking, so storage has shrunk when this returns; the DataFrame
+    must not be used afterwards. Safe no-op if the app is already
+    stopped (its blocks are gone anyway) or the plan is not a
+    materialized checkpoint."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
@@ -135,84 +121,48 @@ def release_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
-def protected_checkpoint_rdd_ids() -> set[int]:
-    """RDD ids backing every registered SessionDFCache entry — the
-    checkpoints that must SURVIVE a between-queries storage sweep
-    (they are the cross-query state by design; everything else
-    persisted in the context is a single-query transient). Non-
-    DataFrame payloads inside tuple-group entries (e.g. the BPE merge
-    list) are skipped."""
-    ids: set[int] = set()
-    for c in _SESSION_CACHES:
-        for entry in c.values():
-            dfs = entry if isinstance(entry, tuple) else (entry,)
-            for df in dfs:
-                if not isinstance(df, DataFrame):
-                    continue
-                try:
-                    plan = df._jdf.queryExecution().analyzed()
-                    if plan.getClass().getSimpleName() == "LogicalRDD":
-                        ids.add(plan.rdd().id())
-                except Exception:  # noqa: BLE001 — stopped app, etc.
-                    pass
-    return ids
-
-
-def release_transient_checkpoints(
-    spark: SparkSession, min_rdds: int = 0
-) -> int:
-    """Release every context-persisted RDD that is NOT a session-cache
-    checkpoint; returns the count released.
-
-    Per-query lazy localCheckpoint pins (the r14 shared-subtree pins)
-    and iterative-loop round checkpoints are persisted on the context
-    and reclaimed only at driver GC — across a 295-query bench the
-    accumulated block pressure measurably degrades late-running heavy
-    queries (the r14 part_* signature). A multi-query session calls
-    this AFTER a query's action completes: the finished query's pins
-    can never be recomputed or reused (builders construct fresh plans
-    per call), so dropping their blocks is pure storage relief.
-    sc.getPersistentRDDs() tracks exactly the RDD-level persists
-    (localCheckpoint marks included, materialized or not); DataFrame
-    .cache()/.persist() entries live in the CacheManager and are not
-    touched.
-
-    `min_rdds`: skip the sweep while the context holds at most this
-    many persistent RDDs. The full sweep costs ~50-100 ms of py4j
-    round-trips (measured: ~9% on sub-second queries when run after
-    EVERY query), so a per-query caller passes a threshold — the size
-    probe is a single cheap JVM call, the sweep then amortizes over
-    the ~dozens of queries it takes to accumulate that many pins,
-    and storage stays bounded either way."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        if min_rdds and jmap.size() <= min_rdds:
-            return 0
-        keep = protected_checkpoint_rdd_ids()
-        n = 0
-        for rdd_id, jrdd in dict(jmap).items():
-            if int(rdd_id) in keep:
-                continue
-            try:
-                jrdd.unpersist(False)
-                n += 1
-            except Exception:  # noqa: BLE001
-                pass
-        return n
-    except Exception:  # noqa: BLE001 — app already stopped
-        return 0
-
-
 def evict_session_caches(sf_dir: str | None = None) -> int:
     """Release every registered SessionDFCache's entries for `sf_dir`
-    (or all dirs); returns the total evicted. The one teardown hook a
-    multi-sf_dir session (bench, probe, a long-lived service) calls
+    (or all dirs); returns the total evicted. The one eviction hook: a
+    multi-sf_dir session (bench, probe, a long-lived service) calls it
     between dirs so checkpoint storage actually shrinks instead of
-    accumulating one build per cache per dir. NOTE: derived-layer
-    coupling (e.g. the triangle cache checkpointing off the edge
-    build) is already safe here — both layers are registered, so the
-    registry-wide call drops them together."""
+    accumulating one build per cache per dir. Derived layers (the
+    triangle cache checkpointing off the edge build) are registered
+    too, so one call drops them together."""
     return sum(c.evict(sf_dir) for c in _SESSION_CACHES)
+
+
+#: row bound of every table a driver-side solve collects (nodes, edges,
+#: transition matrices, sources) — see bounded_collect
+DRIVER_SOLVE_LIMIT = 10_000
+
+
+def bounded_collect(df: DataFrame, limit: int, what: str) -> list:
+    """`df.collect()` for a table that must stay driver-sized: fetches
+    at most `limit + 1` rows and raises ValueError when more than
+    `limit` come back, so the driver never holds more than that — the
+    guard runs BEFORE anything unbounded reaches it. `what` names the
+    table in the error."""
+    rows = df.limit(limit + 1).collect()
+    if len(rows) > limit:
+        raise ValueError(
+            f"{what}: more than {limit:,} rows; the driver-side solve "
+            "assumes a bounded table"
+        )
+    return rows
+
+
+def round_half_up(x: float, places: int) -> float:
+    """Round like Spark's F.round — BigDecimal.valueOf(double) HALF_UP
+    on the shortest decimal repr — so driver-side solves bit-match the
+    engine (and DuckDB, whose round agrees on non-negative values)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(
+        Decimal(repr(x)).quantize(
+            Decimal(1).scaleb(-places), rounding=ROUND_HALF_UP
+        )
+    )
 
 
 def is_path_not_found(e: Exception) -> bool:
@@ -302,7 +252,7 @@ def widen_scan(df: DataFrame) -> DataFrame:
 
     NOT a blanket default: apply only where an A/B shows a win. For
     pure fan-out+reduce plans (substring_dup_spans 2.8s->1.3s, the PQ
-    subspace encode) it wins big; for join-heavy consumers that cache
+    subspace encode) it wins big; for join-heavy consumers that pin
     the exploded table and lean on AQE runtime broadcasts
     (jaccard/minhash/simhash pair generation) or iterate over a
     checkpoint (k-means, BoW) the extra exchange measured 1.2-3x

@@ -165,20 +165,22 @@ def test_txlog_commit_txn_metadata_only(spark, tmp_path):
     assert empty.last_txn_version("boot") == 0
 
 
-# -- verdict r9 #6: explicit unpersist hooks for the session caches --
+# -- verdict r9 #6: explicit eviction of the session caches --
 
 
 def test_session_cache_unpersist_hooks(spark, tmp_path):
     """A long-lived app iterating over many sf_dirs accumulates one
     localCheckpoint per dir (the dead-appId sweep only reclaims OTHER
-    apps' entries) — the evict hooks must release per-dir or all, and
-    the next call must rebuild fresh."""
+    apps' entries) — eviction must release per-dir or all, and the
+    next call must rebuild fresh."""
+    from clickstreamtoclickhouse_spark import plans, util
     from clickstreamtoclickhouse_spark.plans import tpch
     from clickstreamtoclickhouse_spark.plans.retrieval import (
         _TF_CACHE,
         _corpus_tf,
-        evict_corpus_tf,
     )
+
+    from .conftest import SF_DIR
 
     rows = [(0, "apple banana", "en", "s"), (1, "banana cherry", "en", "s")]
     schema = "doc_id long, text string, lang string, source string"
@@ -194,35 +196,31 @@ def test_session_cache_unpersist_hooks(spark, tmp_path):
     a1.count(), a2.count()  # materialize the checkpoints
     assert len(_TF_CACHE) == 2
     # per-dir eviction releases only that dir; rebuild is a new object
-    assert evict_corpus_tf(str(d1)) == 1
+    assert _TF_CACHE.evict(str(d1)) == 1
     assert len(_TF_CACHE) == 1
     assert _corpus_tf(spark, str(d2)) is a2
     assert _corpus_tf(spark, str(d1)) is not a1
     # evict-all clears the rest
-    assert evict_corpus_tf() == 2
+    assert _TF_CACHE.evict() == 2
     assert _TF_CACHE == {}
 
-    # the copurchase twin exposes the same hook — which also drops the
-    # DERIVED triangle-count cache (r10: it checkpoints off the edge
-    # build and must not outlive it)
-    tpch._COPURCHASE_CACHE.clear()
-    tpch._TRIANGLE_CACHE.clear()
-    e = tpch._copurchase_edges(spark, "/root/testdata/sf0.001")
+    # the registry-wide hook evicts the copurchase edges — and drops
+    # the DERIVED triangle-count cache with them (r10: it checkpoints
+    # off the edge build and must not outlive it)
+    util.evict_session_caches(SF_DIR)  # no entry for the dir in any cache
+    tpch._COPURCHASE_CACHE.clear()  # other dirs' entries: dropped, not
+    tpch._TRIANGLE_CACHE.clear()  # released, so their holders still work
+    e = tpch._copurchase_edges(spark, SF_DIR)
     assert len(tpch._COPURCHASE_CACHE) == 1
-    assert tpch.evict_copurchase_edges("/root/testdata/sf0.001") == 1
+    assert util.evict_session_caches(SF_DIR) == 1
     assert tpch._COPURCHASE_CACHE == {}
-    assert tpch._copurchase_edges(spark, "/root/testdata/sf0.001") is not e
+    assert tpch._copurchase_edges(spark, SF_DIR) is not e
     # with triangle counts materialized, the hook evicts BOTH layers
-    from clickstreamtoclickhouse_spark import plans
-
-    t = plans.QUERIES["part_copurchase_triangles"](
-        spark, "/root/testdata/sf0.001"
-    )
+    t = plans.QUERIES["part_copurchase_triangles"](spark, SF_DIR)
     t.count()
     assert len(tpch._TRIANGLE_CACHE) == 1
-    assert tpch.evict_copurchase_edges("/root/testdata/sf0.001") == 2
+    assert util.evict_session_caches(SF_DIR) == 2
     assert tpch._TRIANGLE_CACHE == {} and tpch._COPURCHASE_CACHE == {}
-    tpch.evict_copurchase_edges()
 
 
 def test_near_dup_shingle_cache_shared(spark):

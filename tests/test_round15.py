@@ -1,69 +1,14 @@
-"""Round-15 (optimization round 2) tests: the transient-checkpoint
-release machinery behind bench.py's between-queries sweep, and the
-graphNodeJoin=shuffle fallback parity the r14 advisor flagged as
-untested (a typo'd conf key or a broken fallback path must fail HERE,
-not on a production graph that outgrows the broadcast limit)."""
+"""Round-15 (optimization round 2) tests: the graphNodeJoin=shuffle
+fallback parity the r14 advisor flagged as untested (a typo'd conf
+key or a broken fallback path must fail HERE, not on a production
+graph that outgrows the broadcast limit)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from clickstreamtoclickhouse_spark import plans, util
+from clickstreamtoclickhouse_spark import plans
 
 SF_DIR = "/root/testdata/sf0.001"
 NODE_KEY = "spark.clickstreamtoclickhouse.graphNodeJoin"
-
-
-def _storage_ids(spark) -> set[int]:
-    return {
-        i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    }
-
-
-def _ckpt_rdd_id(df) -> int:
-    plan = df._jdf.queryExecution().analyzed()
-    assert plan.getClass().getSimpleName() == "LogicalRDD", plan
-    return plan.rdd().id()
-
-
-def test_release_transient_checkpoints_spares_session_caches(spark, tmp_path):
-    """The bench sweep must drop per-query pins but NEVER a registered
-    SessionDFCache entry — the cross-query state the whole session
-    relies on (releasing a materialized localCheckpoint makes it
-    unrecomputable, so a protection bug here is a hard crash on the
-    next cache hit, not a slowdown)."""
-    cache = util.SessionDFCache("r15_release_test")
-    try:
-        protected = cache.get_or_build(
-            spark, str(tmp_path), lambda: spark.range(100).selectExpr(
-                "id", "id * 3 as x"
-            )
-        )
-        assert protected.count() == 100  # materialize the blocks
-        transient = spark.range(50).selectExpr("id", "id + 1 as y")
-        transient = transient.localCheckpoint(eager=False)
-        assert transient.count() == 50
-        pid, tid = _ckpt_rdd_id(protected), _ckpt_rdd_id(transient)
-        live = _storage_ids(spark)
-        assert {pid, tid} <= live, (pid, tid, live)
-
-        # threshold arm: a sky-high floor means no sweep at all
-        assert util.release_transient_checkpoints(
-            spark, min_rdds=10_000_000
-        ) == 0
-        assert {pid, tid} <= _storage_ids(spark)
-
-        n = util.release_transient_checkpoints(spark)
-        assert n >= 1
-        live = _storage_ids(spark)
-        assert tid not in live, "transient pin survived the sweep"
-        assert pid in live, "session-cache checkpoint was released"
-        # the protected entry stays USABLE (blocks intact, not just
-        # listed): a re-read must not raise checkpoint-block-not-found
-        assert protected.count() == 100
-    finally:
-        cache.evict()
-        util._SESSION_CACHES.remove(cache)
 
 
 def test_graph_node_join_shuffle_fallback_parity(spark):
