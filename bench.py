@@ -97,19 +97,6 @@ def main() -> None:
         "queries": timings,
         "passes": passes,
         "sf": sf_val,
-        # Root cause of the r3->r4 drift (round-5 analysis): the ~31%
-        # slowdown on unchanged queries is a UNIFORM multiplicative
-        # shift (median per-query ratio r5/r3 = 1.43, p10 1.23, p90
-        # 1.66, across scan-bound TPC-H aggregates and shuffle-bound
-        # dedup alike), while r5 == r4 within ~3% on their common
-        # queries. Uniformity across disparate plan shapes rules out
-        # plan regressions (the r4 judge's plan audit found identical
-        # shapes); the shift coincides with the round-4 testdata
-        # regeneration (new parquet files, timestamp[ns]->[us]) on a
-        # microVM whose DAMON reclaim already causes run-to-run
-        # stalls. Treat r4/r5 numbers as the new baseline.
-        "notes": "r13: 292 queries (284 -> 292: dedup_cluster_best_keeper, corpus_build_manifest_best_keeper, keeper_quality_gain, contamination_by_split_source, minhash_decontamination_by_source, semantic_diversity_by_source, contamination_span_scrub, decontamination_method_agreement; plus streaming_contamination_screen test-side). doc_topic_clusters' final assignment is now session-cached and shared with semantic_diversity_by_source (one Lloyd build serves both), and the manifest family (both keeper variants + the gain audit) shares one session-cached stages-1-4 build — per-pass history shows cold/warm splits for all of them. The bench teardown is wrapped in try/except so eviction/stop failures cannot suppress the final JSON line (r12 advice #1). SF1_PROBE gains a 30x saturation arm for the r12 shuffle-byte watch items. --- r12 history: 283 queries (278 -> 283: packing_efficiency_report, bpe_detok_roundtrip, dedup_cluster_size_histogram, source_quality_winrates, bt_source_strengths registered; streaming_source_quota added test-side). NEW: per-pass timing history in 'passes' (pass 1 = cold, later = warm) — min-of-N collapses exactly the signal that exposes a session-cache failure; this is how the r11 hybrid_search_rrf flag was settled. That settlement (BENCH_NOTES_r12.md, AB_HYBRID*.json): storage eviction REFUTED (checkpoint blocks survive bench-grade pressure fully in-memory), codegen-cache thrash was reported REFUTED (warm 2.1s after a 110-query flush) but was not: that experiment's isolated-warm baseline itself recompiled 45-54 classes per run, so the 100-entry class cache thrashed on both sides (session.get_spark now sets spark.sql.codegen.cache.maxEntries=8192; tests/test_session.py pins the reuse); and a clean full-context reproduction (full 280-query pass + pass-2 prefix) runs warm hybrid at 1.57/1.23/1.18s — r10's level — so the r11 6.0s/8.55s was a host-window artifact, not a plan/cache regression. Also this round: the final JSON prints AFTER cache eviction + spark.stop so eviction WARNs can no longer behead the captured output's tail (r11's BENCH_r11.json parsed null). --- r10/r11 history: ",
-        "notes_r10": "r10 final: 265 queries. Second+third waves (+21): experimentation/causal family (mann_whitney_u, chi_square_independence, diff_in_diff, ratio_metric_delta_ci, ab_power_mde, ipw_treatment_effect, bh_fdr_report, ab_sequential_msprt, granger_lag_test, daily_acf, conformal_interval_report), fellegi_sunter_weights, mmr_diverse_topk, part_degree_assortativity, doc_pareto_front, readability_by_source, isotonic_calibration_map, lang_id_confusion, quantile_treatment_effects, part_clustering_coefficient, user_event_overdispersion, forecast_backtest_mae, vocab_coverage_curve, dedup_impact_by_source — all with exact-integer or rounded-moment determinism, all DuckDB-oracled, planted/brute-force behavioral tests, plan pins, and probe entries for the heavy ones. First wave (+5 to 241): target_encoding_oof, pmi_collocations, part_hits_authorities, embedding_drift_report, hybrid_search_rrf_exact. hybrid_search_rrf primary SWAPPED to the LSH-bucketed dense arm (hashed-BoW tf-idf portable hyperplanes; candidates by (table,bucket) equi-join, exact TF-cosine re-rank on candidates only; recall 0.83 vs the exact arm, pinned) with the bucket index session-cached — warm 1.2s vs the exact form's 1.0s, index build amortized across the query stream (BENCH_NOTES_r10.md). matryoshka_recall_report _let-shares its prefix dot/norm arrays and widens the corpus scan (1.63s -> ~1.0s; the r10 probe's 16.3x flag is fixed, clean ratio ~1.2x). Session caches unified behind util.SessionDFCache and extended: dedup_clusters+representatives share one CC build (7.3s -> 0.4s warm), seven near-dup queries share one shingle table (jaccard 1.5s -> 0.4s, recall report 4.9s -> 3.3s). Graph trio re-measured at r8 levels after the r10 alternating-tree A/B showed the r9 inflation was host/measurement, not plan regression. --- r9 history: closed at 236 queries (219 -> 236 over the round: retrieval family BM25/RRF/snippets/eval/RM1, lattice Shapley, uplift/Qini, covariate balance, seasonality, curriculum ordering, memorization spans, source ablation, kappa/Zipf/Good-Turing, l-diversity/Matryoshka/t-closeness/DP-sensitivity, txlog IVM, late-arrival accounting). transition_shortest_paths moved driver-side with a fixpoint early-exit (0.73s; the |V|-1 Spark rounds each paid ~1s scheduler floor). user_activity_similarity primary is now the CAPPED sparse cosine (0.41s) with the old exact form benched alongside as _uncapped (2.03s) — see BENCH_NOTES_r09.md for the same-session rename A/B. Host noise is +/-20% between sessions; only compare within one BENCH_FULL.json. r3->r4 drift was a uniform host/testdata-layout shift (median x1.43); no plan regressions since.",
     }
     # attach the 10x-rows scale probe if scripts/sf_probe.py has run
     probe_path = Path(__file__).resolve().parent / "SF1_PROBE.json"

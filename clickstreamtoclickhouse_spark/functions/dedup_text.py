@@ -9,10 +9,12 @@ Scale design notes (100 TB stance):
   count per pair. The shingle join is the scalable formulation (no
   O(n²) crossJoin); frequency-capping drops degenerate shingles that
   would explode the join (standard trick; cap is a parameter).
-- MinHash+LSH: pure Column-expression k-min signatures + banded
-  hashing — near-dup search becomes an equi-join on band buckets.
-- SimHash: 64-bit signature via per-token xxhash64 bit votes — one
-  aggregation; candidate pairs via band equi-join on signature bytes.
+- MinHash+LSH and SimHash: one formulation each, with portable
+  arithmetic hashes (a polynomial codepoint fold and fixed
+  (a*x+b) mod p literals shared with the DuckDB oracle twins), so
+  signatures, band keys and candidate sets are all oracle-checked.
+  Every banded family gets its candidates from ``band_pairs``: an
+  equi-join on band buckets, never all-pairs.
 """
 
 from __future__ import annotations
@@ -264,188 +266,40 @@ def _cap_buckets(
     )
 
 
-# ---------------------------------------------------------------------------
-# MinHash + LSH (pure Column expressions — no MLlib fit step)
-# ---------------------------------------------------------------------------
-
-def minhash_signatures(
-    docs: DataFrame,
-    n: int = 3,
-    num_hashes: int = 48,
-    seed: int = 42,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+def band_pairs(
+    banded: DataFrame,
+    keys: list[str],
+    id_col: str = "did",
+    names: tuple[str, str] = ("doc_a", "doc_b"),
+    carry: str | None = None,
+    right_ids: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-document MinHash signature as `num_hashes` long columns
-    ``mh0..mh{k-1}`` plus the id as ``did``.
+    """The one candidate builder of every banded near-dup family
+    (MinHash, SimHash, hyperplane LSH, the incremental embedding
+    screen, lsh_banding_sweep): self equi-join of a band table on its
+    band key `keys` -> keep a < b -> one row per pair, however many
+    bands the pair shares. Output: the two ids, named `names`, plus
+    `carry` of each side as ``<carry>_a`` / ``<carry>_b`` when given
+    (the signature the caller's verify step compares). `right_ids`
+    (a one-column `id_col` DataFrame) restricts the b side. Callers
+    apply any hot-bucket cap (``_cap_buckets``) before, and their own
+    verify after."""
+    a_id, b_id = names
 
-    Each shingle is hashed ONCE to a 64-bit base (`xxhash64`), then
-    the k-th permutation hash re-mixes (base, k, seed) — two-long
-    xxhash64, whole-stage codegen. The signature is one hash-partition
-    aggregate of k `min()`s: a single shuffle of (did, k longs),
-    never the shingle text. No model fit, no driver round trip —
-    unlike MLlib's MinHashLSH this is a stateless projection, so it
-    runs identically in batch and foreachBatch streaming."""
-    sh = _doc_shingles(docs, id_col, text_col, n).withColumn(
-        "h", F.xxhash64("shingle")
-    )
-    mins = [
-        F.min(F.xxhash64("h", F.lit(k), F.lit(seed))).alias(f"mh{k}")
-        for k in range(num_hashes)
-    ]
-    return sh.groupBy("did").agg(*mins)
+    def side(df: DataFrame, new_id: str, sfx: str) -> DataFrame:
+        cols = [F.col(id_col).alias(new_id)]
+        if carry is not None:
+            cols.append(F.col(carry).alias(f"{carry}_{sfx}"))
+        return df.select(*cols, *keys)
 
-
-def minhash_near_dup_pairs(
-    docs: DataFrame,
-    threshold: float = 0.6,
-    n: int = 3,
-    num_hashes: int = 48,
-    num_bands: int = 12,
-    seed: int = 42,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Approximate near-dup pairs via banded MinHash LSH, entirely in
-    Column expressions: word n-gram shingles -> k min-hashes -> b
-    bands of r=k/b rows -> candidate pairs by (band, band_hash)
-    equi-join -> estimated Jaccard = matching-component fraction.
-    Returns (doc_a, doc_b, jaccard_distance) with doc_a < doc_b,
-    distance = 1 - estimate. Deterministic for a fixed seed; no SQL
-    oracle (xxhash64 isn't portable) — driver records the rows-only
-    check.
-
-    Scale shape: one shuffle for signatures, one explode to b rows
-    per doc, one equi-join on (band, band_hash) — a pair collides iff
-    some band matches exactly (P = 1-(1-s^r)^b; r=4, b=12 puts the
-    S-curve knee near s≈0.55). No crossJoin, no per-row Python, no
-    MLlib fit. Band hash includes the band index, so one partitioned
-    table on band_hash still separates bands.
-
-    Shingles (n=3 default), not unigrams: word-SET similarity
-    saturates on any shared-vocabulary corpus (every doc is a
-    "near-dup" of every other), while shingle sets keep word order and
-    stay discriminative — same reason jaccard_pairs defaults to
-    n-grams."""
-    if num_hashes % num_bands:
-        raise ValueError("num_hashes must be divisible by num_bands")
-    rows_per_band = num_hashes // num_bands
-    sig = minhash_signatures(docs, n, num_hashes, seed, id_col, text_col)
-
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"mh{b * rows_per_band + j}") for j in range(rows_per_band)]
-                ).alias("bh"),
-            )
-            for b in range(num_bands)
-        ]
-    )
-    sig = sig.withColumn("sig", F.array(*[f"mh{k}" for k in range(num_hashes)]))
-    banded = sig.select("did", "sig", F.explode(bands).alias("b")).select(
-        "did", "sig", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
-    banded = _cap_buckets(banded, ["band", "bh"], max_bucket_size)
-    a = banded.select(
-        F.col("did").alias("doc_a"), F.col("sig").alias("sig_a"), "band", "bh"
-    )
-    b = banded.select(
-        F.col("did").alias("doc_b"), F.col("sig").alias("sig_b"), "band", "bh"
-    )
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sig_a", "sig_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    matches = sum(
-        (F.element_at("sig_a", k + 1) == F.element_at("sig_b", k + 1)).cast("int")
-        for k in range(num_hashes)
-    )
-    est = matches / F.lit(float(num_hashes))
+    b_src = banded if right_ids is None else banded.join(right_ids, id_col, "left_semi")
+    carried = [] if carry is None else [f"{carry}_a", f"{carry}_b"]
     return (
-        cand.filter(est >= threshold)
-        .select(
-            "doc_a", "doc_b", F.round(1.0 - est, 6).alias("jaccard_distance")
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document: per-token xxhash64, majority vote
-    per bit. One explode + one aggregation (64 conditional sums) —
-    no UDF, scales as a single shuffle on doc id."""
-    toks = docs.select(
-        F.col(id_col),
-        F.explode(words(normalized_text(F.col(text_col)))).alias("w"),
-    ).withColumn("h", F.xxhash64("w"))
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{b}")
-        for b in range(64)
-    ]
-    agg = toks.groupBy(id_col).agg(*votes)
-    sig = F.lit(0).cast("long")
-    for b in range(64):
-        sig = sig.bitwiseOR(
-            F.when(F.col(f"b{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(0)
-        )
-    return agg.select(F.col(id_col), sig.alias("simhash"))
-
-
-def simhash_near_dup_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Near-dup candidate pairs by SimHash Hamming distance ≤ k.
-
-    Banding: split the 64-bit signature into k+1 16-bit bands — any
-    pair within Hamming k must agree on ≥1 band (pigeonhole), so
-    candidates come from 4 equi-joins on (band_idx, band_value), never
-    a crossJoin. Exact Hamming then filters candidates."""
-    sigs = ckpt_once(simhash(docs, id_col, text_col))
-    bands = sigs.select(
-        F.col(id_col).alias("did"),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("simhash"), i * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bv"),
-    ).select("did", "simhash", "bv.band", "bv.val")
-    bands = _cap_buckets(bands, ["band", "val"], max_bucket_size)
-    a = bands.select(F.col("did").alias("doc_a"), F.col("simhash").alias("sig_a"), "band", "val")
-    b = bands.select(F.col("did").alias("doc_b"), F.col("simhash").alias("sig_b"), "band", "val")
-    cand = (
-        a.join(b, ["band", "val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sig_a", "sig_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+        side(banded, a_id, "a")
+        .join(side(b_src, b_id, "b"), keys)
+        .filter(F.col(a_id) < F.col(b_id))
+        .select(a_id, b_id, *carried)
+        .dropDuplicates([a_id, b_id])
     )
 
 
@@ -550,12 +404,11 @@ def minhash_portable_pairs(
     bands -> candidate pairs by band-key equi-join -> estimated
     Jaccard = matching-signature fraction, thresholded.
 
-    Same plan topology as ``minhash_near_dup_pairs`` (one signature
-    shuffle, band explode, equi-join — no crossJoin), but every hash
-    is engine-neutral arithmetic, so the whole pipeline — candidate
-    generation INCLUDED — is value-checkable against a SQL oracle
-    rather than rows-only. Returns (doc_a, doc_b, est_jaccard),
-    doc_a < doc_b."""
+    One signature shuffle, one band explode, one band-key equi-join —
+    no crossJoin. Every hash is engine-neutral arithmetic, so the
+    whole pipeline — candidate generation INCLUDED — is
+    value-checkable against a SQL oracle rather than rows-only.
+    Returns (doc_a, doc_b, est_jaccard), doc_a < doc_b."""
     banded = minhash_portable_bands(
         docs, n, num_bands, id_col, text_col, shingles=shingles
     )
@@ -568,34 +421,17 @@ def verified_pairs_from_bands(
     threshold: float,
     right_ids: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate generation + signature verify over an
-    already-capped band table (did, sig, band, bk): band-key
-    equi-join -> doc_a < doc_b -> estimated Jaccard =
-    matching-signature fraction >= threshold. The ONE implementation
-    behind ``minhash_portable_pairs`` and the incremental manifest's
-    fuzzy screen (streaming/manifest.py), so the two can never
+    """Candidate generation (``band_pairs``) + signature verify over
+    an already-capped band table (did, sig, band, bk): estimated
+    Jaccard = matching-signature fraction >= threshold. The ONE
+    implementation behind ``minhash_portable_pairs`` and the
+    incremental manifest's fuzzy screen (streaming/manifest.py), so the two can never
     diverge on pair semantics. `right_ids` (a one-column `did`
     DataFrame) restricts the doc_b side — the incremental screen
     passes the arriving batch's ids so only NEW docs are candidates
     for dropping while the index side still supplies partners."""
     k = len(MH_AB)
-    a = banded.select(
-        F.col("did").alias("doc_a"), F.col("sig").alias("sig_a"), "band", "bk"
-    )
-    b_src = (
-        banded
-        if right_ids is None
-        else banded.join(right_ids, "did", "left_semi")
-    )
-    b = b_src.select(
-        F.col("did").alias("doc_b"), F.col("sig").alias("sig_b"), "band", "bk"
-    )
-    cand = (
-        a.join(b, ["band", "bk"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sig_a", "sig_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    cand = band_pairs(banded, ["band", "bk"], carry="sig", right_ids=right_ids)
     matches = sum(
         (F.element_at("sig_a", j + 1) == F.element_at("sig_b", j + 1)).cast("int")
         for j in range(k)
@@ -795,10 +631,10 @@ def simhash_portable(
     """SH_BITS-wide (56-bit) SimHash per document over word n-gram
     shingles, with
     PORTABLE arithmetic: shingle -> polynomial base hash -> bit i =
-    majority vote of parity((a_i*h + b_i) mod p). Same one-explode +
-    one-aggregation shape as ``simhash`` (SH_BITS conditional sums on one
-    doc-id shuffle); no engine-native hash anywhere, so the
-    fingerprints value-match a SQL twin."""
+    majority vote of parity((a_i*h + b_i) mod p). One explode + one
+    aggregation (SH_BITS conditional sums on one doc-id shuffle); no
+    engine-native hash anywhere, so the fingerprints value-match a
+    SQL twin."""
     sh = shingles if shingles is not None else _doc_shingles(docs, id_col, text_col, n)
     if "h" not in sh.columns:
         sh = sh.withColumn("h", _portable_hash(F.col("shingle")))
@@ -834,10 +670,17 @@ def simhash_portable_near_dup_pairs(
     candidate join (4 x 14-bit bands — any pair within hamming 3
     shares at least one intact band, so recall at the threshold is
     EXACT, not probabilistic), then bit_count(xor) verification.
-    Returns (doc_a, doc_b, hamming), doc_a < doc_b. Same plan shape
-    as ``simhash_near_dup_pairs``; every value checkable in SQL."""
-    sig = simhash_portable(docs, n, id_col, text_col, shingles=shingles)
+    Returns (doc_a, doc_b, hamming), doc_a < doc_b; every value
+    checkable in SQL. The guarantee needs `max_hamming` below the
+    band count (one flipped bit per band shares no band), so a larger
+    cutoff raises ValueError instead of silently dropping pairs."""
     n_bands = SH_BITS // SH_BAND_BITS
+    if max_hamming >= n_bands:
+        raise ValueError(
+            f"max_hamming must be below the {n_bands} SimHash bands for "
+            f"exact pigeonhole recall, got {max_hamming}"
+        )
+    sig = simhash_portable(docs, n, id_col, text_col, shingles=shingles)
     mask = (1 << SH_BAND_BITS) - 1
     bands = F.array(
         *[
@@ -854,19 +697,8 @@ def simhash_portable_near_dup_pairs(
         "did", "simhash", F.col("b.band").alias("band"), F.col("b.bv").alias("bv")
     )
     banded = _cap_buckets(banded, ["band", "bv"], max_bucket_size)
-    a = banded.select(
-        F.col("did").alias("doc_a"), F.col("simhash").alias("sh_a"), "band", "bv"
-    )
-    b = banded.select(
-        F.col("did").alias("doc_b"), F.col("simhash").alias("sh_b"), "band", "bv"
-    )
-    cand = (
-        a.join(b, ["band", "bv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    cand = band_pairs(banded, ["band", "bv"], carry="simhash")
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return cand.filter(hamming <= max_hamming).select(
         "doc_a", "doc_b", hamming.cast("int").alias("hamming")
     )

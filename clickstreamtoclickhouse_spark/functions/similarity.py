@@ -11,17 +11,19 @@ Scale notes:
   (broadcast the queries, stream the corpus — no shuffle of the
   corpus); the per-query top-k window shuffles only (nq × k) rows.
 - random-hyperplane LSH buckets candidates by signature; recall is
-  tunable by bands/bits. Hyperplanes are a seeded numpy draw
-  broadcast as literals — deterministic, tiny (d × bits floats).
+  tunable by tables/bits. Plane components are md5-derived
+  (``portable_planes``), so buckets are bit-reproducible in the
+  DuckDB oracle; same-corpus pairs come from
+  ``dedup_text.band_pairs``, the builder every banded family shares.
 """
 
 from __future__ import annotations
 
-import numpy as np
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .dedup_text import band_pairs
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -118,7 +120,7 @@ def cosine_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (exact, O(n²) compare —
     the oracle-checkable baseline, bounded to small corpora; the
-    at-scale entry is ``lsh_near_dup_pairs``, whose bucketed
+    at-scale entry is ``lsh_portable_near_dup_pairs``, whose bucketed
     self-equi-join replaces this crossJoin).
 
     The left side is repartitioned so the quadratic compare spreads
@@ -385,249 +387,6 @@ def quantized_rerank_topk(
     )
 
 
-def _hyperplanes(dim: int, bits: int, seed: int) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((bits, dim))
-
-
-def lsh_signatures(
-    embeddings: DataFrame,
-    dim: int,
-    bits: int = 4,
-    num_tables: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Multi-table random-hyperplane signatures: per table t, bucket =
-    bits-bit sign pattern of (v · h). Emits one row per (vector,
-    table) with a (table, bucket) key — the standard AND-OR LSH
-    construction (AND within a table's bits, OR across tables), which
-    is what makes recall tunable: P[collide in ≥1 table] =
-    1-(1-p^bits)^num_tables for per-plane agreement p.
-
-    Hyperplanes are a seeded numpy draw embedded as plan literals
-    (tiny: num_tables × bits × dim floats, folded by codegen).
-
-    The whole signature is ONE F.expr string parsed JVM-side: building
-    it from per-literal Column objects (num_tables × bits × dim
-    F.lit calls) costs seconds of py4j round trips at plan-build time
-    — driver overhead that would dwarf execution on every query."""
-    planes = _hyperplanes(dim, bits * num_tables, seed)
-
-    def plane_gt0(plane) -> str:
-        arr = ",".join(repr(float(x)) + "D" for x in plane)
-        return (
-            f"aggregate(zip_with(__v, array({arr}), (x, y) -> x * y), "
-            f"0.0D, (acc, v) -> acc + v) > 0"
-        )
-
-    tables = []
-    for t in range(num_tables):
-        terms = " + ".join(
-            f"(CASE WHEN {plane_gt0(planes[t * bits + i])} "
-            f"THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-            for i in range(bits)
-        )
-        tables.append(f"named_struct('tbl', {t}, 'bucket', ({terms}))")
-    tb = f"explode(array({', '.join(tables)}))"
-    return (
-        embeddings.withColumn("__v", F.col(vec_col).cast("array<double>"))
-        .select(F.col(id_col), F.col(vec_col), F.expr(tb).alias("tb"))
-        .select(id_col, vec_col, "tb.tbl", "tb.bucket")
-    )
-
-
-def lsh_near_dup_pairs(
-    embeddings: DataFrame,
-    dim: int,
-    threshold: float = 0.95,
-    bits: int = 8,
-    num_tables: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate PAIRS via hyperplane LSH — the
-    at-scale replacement for ``cosine_near_dup_pairs``' exact O(n²)
-    crossJoin: candidates are pairs sharing ANY (table, bucket) cell,
-    produced by a self-equi-join on the signature key; exact cosine
-    then filters candidates, so precision is 1.0 and only recall is
-    approximate.
-
-    Near-dup thresholds make hyperplane LSH highly effective: at
-    cos θ ≥ 0.95 the per-plane agreement is p = 1 − θ/π ≈ 0.90, so a
-    true near-dup pair collides in an 8-bit table with p⁸ ≈ 0.43 and
-    in ≥1 of 8 tables with 1−(1−p⁸)⁸ ≈ 0.99. Recall is pinned by a
-    test against the exact baseline.
-
-    Norms are computed once per (vector, table) row before the join;
-    distinct() dedups multi-table collisions before the cosine kernel
-    so each candidate pair is scored once."""
-    dvec = F.col(vec_col).cast("array<double>")
-    sigs = lsh_signatures(
-        embeddings.select(F.col(id_col), dvec.alias(vec_col)),
-        dim, bits, num_tables, seed, id_col, vec_col,
-    )
-    a = sigs.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "tbl", "bucket"
-    )
-    b = sigs.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "tbl", "bucket"
-    )
-    cand = (
-        a.join(b, ["tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "va", "id_b", "vb")
-        .distinct()
-    )
-    sim = dot(F.col("va"), F.col("vb")) / (norm(F.col("va")) * norm(F.col("vb")))
-    return (
-        cand.withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
-    )
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: k-means coarse quantizer
-    partitions the corpus into cells; each query probes its n_probe
-    nearest centroids and searches only those cells.
-
-    Scale path: the corpus is assigned to cells ONCE (reused across
-    query batches in a real deployment); the search join is an
-    equi-join on cell id — the crossJoin shrinks by ~n_cells/n_probe.
-    KMeans fit is seeded for determinism; at 100 TB fit on a sample
-    (KMeans cost is per-row × iterations, the sample bounds it)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    corpus_vec = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("fvec"),
-    )
-    km = KMeans(
-        k=n_cells, seed=seed, maxIter=8, featuresCol="fvec", predictionCol="cell"
-    )  # coarse IVF cells need few Lloyd rounds; recall pinned by test
-    model = km.fit(corpus_vec.select("fvec"))
-    assigned = model.transform(corpus_vec).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        norm(F.col(vec_col)).alias("cnorm"),
-        "cell",
-    )
-
-    # query → n_probe nearest centroids (centroids are tiny: broadcast
-    # as a literal-free small DF and crossJoin)
-    centroids = [
-        (int(i), [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    cent_df = F.broadcast(
-        embeddings.sparkSession.createDataFrame(
-            centroids, "cell int, centroid array<double>"
-        )
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("qnorm"),
-    )
-    qcells = (
-        q.crossJoin(cent_df)
-        .withColumn(
-            "cdist",
-            -dot(F.col("qvec"), F.col("centroid")),  # max dot = nearest by angle
-        )
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy("cdist", "cell")
-            ),
-        )
-        .filter(F.col("crank") <= n_probe)
-        .select("query_id", "qvec", "qnorm", "cell")
-    )
-
-    cand = F.broadcast(qcells).join(assigned, "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("sim", 9)), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn(
-            "sim", dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm"))
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"),
-                F.round("sim", 6).alias("sim"))
-    )
-
-
-def lsh_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 5,
-    bits: int = 4,
-    num_tables: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: candidates = corpus vectors sharing ANY
-    (table, bucket) cell with the query; exact cosine + top-k within
-    candidates. At scale the (tbl, bucket) equi-join replaces the
-    crossJoin — corpus signatures shuffle once, queries broadcast;
-    distinct() dedups multi-table collisions before the cosine
-    kernel so each candidate is scored once."""
-    corpus_sig = lsh_signatures(embeddings, dim, bits, num_tables, seed, id_col, vec_col)
-    query_sig = F.broadcast(
-        lsh_signatures(queries, dim, bits, num_tables, seed, id_col, vec_col).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            "tbl",
-            "bucket",
-        )
-    )
-    cand = (
-        query_sig.join(
-            corpus_sig.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"),
-                "tbl", "bucket",
-            ),
-            ["tbl", "bucket"],
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "qvec", "neighbor_id", "cvec")
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("sim", 9)), F.col("neighbor_id")
-    )
-    sim_expr = dot(F.col("qvec"), F.col("cvec")) / (
-        norm(F.col("qvec")) * norm(F.col("cvec"))
-    )
-    return (
-        cand.withColumn("sim", sim_expr)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"),
-                F.round("sim", 6).alias("sim"))
-    )
-
-
 def portable_planes(
     spark, dim: int, num_tables: int, bits: int
 ) -> DataFrame:
@@ -776,14 +535,7 @@ def incremental_lsh_dedup(
     lb = buckets.join(live_ids, "vid", "left_semi").localCheckpoint(
         eager=False
     )
-    a = lb.select(F.col("vid").alias("id_a"), "t", "bucket")
-    b = lb.select(F.col("vid").alias("id_b"), "t", "bucket")
-    pairs = (
-        a.join(b, ["t", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    pairs = band_pairs(lb, ["t", "bucket"], id_col="vid", names=("id_a", "id_b"))
     va = vecs.select(
         F.col("vid").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
     )
@@ -826,9 +578,9 @@ def lsh_portable_near_dup_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Hyperplane-LSH near-dup pairs with PORTABLE plane generation —
-    the oracle-checkable twin of ``lsh_near_dup_pairs`` (whose seeded
-    engine-side hyperplane draw can't be reproduced in SQL). Plane
-    component p(t,b,d) = md5("pl:t:b:d") first-8-hex as uint32,
+    the at-scale replacement for ``cosine_near_dup_pairs``' exact
+    O(n²) crossJoin, oracle-checked candidate generation included.
+    Plane component p(t,b,d) = md5("pl:t:b:d") first-8-hex as uint32,
     affinely mapped to [-1,1) — pure arithmetic any engine
     reproduces bit-for-bit. Bucket(vec, table) packs the 'bits' sign
     projections into an integer; candidates share (table, bucket);
@@ -848,13 +600,8 @@ def lsh_portable_near_dup_pairs(
     buckets = lsh_portable_buckets(
         emb, dim, num_tables, bits, id_col, vec_col
     ).localCheckpoint(eager=False)
-    a = buckets.select(F.col(id_col).alias("id_a"), "t", "bucket")
-    b = buckets.select(F.col(id_col).alias("id_b"), "t", "bucket")
-    cand = (
-        a.join(b, ["t", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
+    cand = band_pairs(
+        buckets, ["t", "bucket"], id_col=id_col, names=("id_a", "id_b")
     )
     vecs = emb.select(
         F.col(id_col),

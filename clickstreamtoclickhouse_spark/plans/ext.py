@@ -424,9 +424,8 @@ def quality_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprinting: md5 over normalized text. (The
-    order-sensitive rolling-hash variant is covered rows-only by
-    doc_rolling_fingerprints — crc32 isn't portable to the oracle.)"""
+    """Document fingerprinting: md5 over normalized text. The
+    order-sensitive rolling-hash variant is doc_rolling_fingerprints."""
     d = load(spark, sf_dir, "documents")
     return d.select("doc_id", tx.fingerprint_md5(F.col("text")).alias("fp_md5"))
 
@@ -1051,8 +1050,7 @@ def doc_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match. (An earlier MLlib KMeans variant was registered
     rows-only — its k-means|| init RNG is engine-internal and not
     SQL-replicable; this portable formulation is now THE registered
-    query, per the round-6 verdict. MLlib k-means integration stays
-    exercised by similarity.ivf_topk's library tests.)
+    query, per the round-6 verdict.)
 
     Scale: per round, ONE distributed job over the checkpointed
     embedding table (64 map-side-combinable sums per cluster); only
@@ -1688,13 +1686,6 @@ def incremental_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_text.incremental_exact_dedup(batch, docs)
 
 
-# NOTE: `minhash_near_dups` / `simhash_near_dups` are registered
-# further down with their PORTABLE formulations (fully oracle-checked,
-# per the round-6 verdict). The engine-native xxhash64 kernels
-# (dedup_text.minhash_near_dup_pairs / simhash_near_dup_pairs) remain
-# library fast paths, pinned by behavioral tests in test_extensions.
-
-
 # ---------------------------------------------------------------------------
 # Vector similarity
 # ---------------------------------------------------------------------------
@@ -1749,12 +1740,6 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_near_dup_pairs(corpus, threshold=0.995)
 
 
-# NOTE: `embedding_lsh_near_dups` is registered further down with its
-# PORTABLE (md5-derived hyperplane) formulation — fully oracle-checked.
-# The seeded-numpy kernel (similarity.lsh_near_dup_pairs) remains the
-# engine-native library fast path, recall-pinned in test_extensions.
-
-
 @query(
     "embedding_norm_by_label",
     oracle="""
@@ -1802,7 +1787,7 @@ def doc_bow_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checkable per-doc stats (nnz / total count / L2 norm)
     computed FROM the assembled dense vector — so the hash-mod
     bucketing, map assembly, and densification are all on the checked
-    path. The dense output feeds quantize_int8 / lsh_topk / ivf_topk
+    path. The dense output feeds quantize_int8 / quantized_rerank_topk
     directly (pinned in test_extensions)."""
     d = load(spark, sf_dir, "documents")
     emb = similarity.hashed_bow_embeddings(d, n_dims=64)
@@ -2134,15 +2119,13 @@ def embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest cell, matching the oracle's ORDER BY dist, cl); each query
     probes its `_IVF_PROBE` nearest cells; final ranking is exact
     cosine on the full-precision vectors with round(·,9)+id tie-break.
-    The MLlib-quantizer kernel (similarity.ivf_topk, whose k-means||
-    RNG is engine-internal) stays the library fast path, recall-pinned
-    in test_extensions.
+    Recall against exact top-k is pinned in test_extensions.
 
     Scale: training reads `_IVF_TRAIN`×`EMB_DIM` doubles to the driver
     once; cell assignment is one linear projection against literal
     centroids (no shuffle); the probe table is nq×`_IVF_PROBE` rows
     broadcast onto the cell-keyed corpus — the crossJoin shrinks by
-    ~n_cells/n_probe exactly as in the engine-native variant."""
+    ~n_cells/n_probe."""
     import numpy as np
 
     from ..functions.text import _let
@@ -2313,8 +2296,7 @@ def embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-internal re-aggregation can drift a 6-dp-rounded projection
     across the two sides); candidates share any (table, bucket) cell;
     exact cosine + round(·,9)+id tie-broken top-5 within candidates.
-    The seeded-numpy kernel (similarity.lsh_topk) stays the
-    engine-native library fast path, recall-pinned in test_extensions.
+    Recall against exact top-k is pinned in test_extensions.
 
     Scale: the (t, bucket) equi-join replaces the crossJoin — corpus
     buckets shuffle once, the filtered query buckets broadcast."""
@@ -3211,13 +3193,10 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     so this capped form owns the primary name and
     `minhash_near_dups_uncapped` remains the sf-bounded baseline.
 
-    The xxhash64 kernel (dedup_text.minhash_near_dup_pairs) stays the
-    engine-native library fast path because its hashes don't port to
-    SQL; here the registered query's base hash is a polynomial
-    codepoint fold and the permutations are fixed (a*x+b) mod p
-    literals shared verbatim with the DuckDB twin, so banding,
-    collision sets, and signature-match estimates agree
-    value-for-value cross-engine."""
+    The base hash is a polynomial codepoint fold and the permutations
+    are fixed (a*x+b) mod p literals shared verbatim with the DuckDB
+    twin, so banding, collision sets, and signature-match estimates
+    agree value-for-value cross-engine."""
     corpus = _near_dup_corpus(load(spark, sf_dir, "documents"))
     return dedup_text.minhash_portable_pairs(
         corpus, threshold=0.5, n=3, num_bands=_MH_BANDS,
@@ -3343,9 +3322,7 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (companion to minhash_near_dups): 56 random-parity projections of
     the portable shingle hash, majority vote per bit, 4 x 14-bit
     pigeonhole bands, bit_count(xor) verification at hamming <= 3.
-    The 64-bit xxhash64 simhash (dedup_text.simhash_near_dup_pairs)
-    stays the engine-native library fast path; this registered
-    formulation pins fingerprints, banding, and the recall guarantee
+    The oracle pins fingerprints, banding, and the recall guarantee
     value-for-value cross-engine.
 
     Corpus/width choice: a small absolute hamming cutoff over a WIDE
@@ -3490,8 +3467,9 @@ def embedding_dedup_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     The pair stage here is the sf-bounded exact baseline so the WHOLE
     composition is oracle-checked (pairs, transitive clustering, and
     representative choice); at scale the drop-in pair source is
-    `similarity.lsh_near_dup_pairs` (bucketed equi-join) feeding the
-    same components + argmin — identical plan shape from pairs on."""
+    `similarity.lsh_portable_near_dup_pairs` (bucketed equi-join)
+    feeding the same components + argmin — identical plan shape from
+    pairs on."""
     corpus = _perturbed_embeddings(load(spark, sf_dir, "embeddings"))
     pairs = similarity.cosine_near_dup_pairs(corpus, threshold=0.995)
     assign = graph.cluster_assignments(
@@ -3559,9 +3537,7 @@ def embedding_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle check, completing the portable family (MinHash, SimHash,
     vector LSH): plane components are md5-derived uniforms both
     engines compute bit-identically, so buckets, collision sets, and
-    survivors all hash-match. The seeded-numpy kernel
-    (similarity.lsh_near_dup_pairs) stays the engine-native library
-    fast path; recall pinned by the same planted
+    survivors all hash-match. Recall is pinned by the planted
     (original, +0.01 copy) pairs — cosine ≈ 0.9968, per-table bucket
     match P ≈ 0.81, miss probability across 6 tables ≈ 4e-5."""
     corpus = _perturbed_embeddings(load(spark, sf_dir, "embeddings"))
@@ -7000,18 +6976,10 @@ def lsh_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["band", "bk"],
             _MH_CAP,
         ).localCheckpoint(eager=False)  # feeds BOTH join sides
-        left = banded.select(
-            F.col("did").alias("doc_a"), "band", "bk"
-        )
-        right = banded.select(F.col("did").alias("doc_b"), "band", "bk")
         # one execution per config: the candidate table feeds both the
         # count and the overlap join below
-        cand = (
-            left.join(right, ["band", "bk"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
-            .localCheckpoint(eager=False)
+        cand = dedup_text.band_pairs(banded, ["band", "bk"]).localCheckpoint(
+            eager=False
         )
         nc = cand.agg(F.count("*").alias("n_candidates"))
         no = truth.join(cand, ["doc_a", "doc_b"]).agg(

@@ -1,7 +1,7 @@
 """Extension operators: dedup family, similarity search, text
 analysis, multimodal plumbing. Oracle-matched queries are covered by
-test_oracle_parity's parametrization; here we pin the semantics of the
-rows-only (non-SQL-expressible) operators."""
+test_oracle_parity's parametrization; here we pin behaviour parity
+cannot see: planted recall, precision, guards and edge cases."""
 
 from __future__ import annotations
 
@@ -25,8 +25,12 @@ def emb(spark):
     return plans.load(spark, SF_DIR, "embeddings").cache()
 
 
-def test_minhash_finds_planted_pairs(spark, docs):
-    pairs = dedup_text.minhash_near_dup_pairs(_near_dup_corpus(docs), threshold=0.5)
+def test_portable_minhash_finds_planted_pairs(spark, docs):
+    # 8 bands x 2 rows: P[catch] = 1-(1-s^2)^8 ~ 0.98 at s=0.65 (the
+    # 80%-truncation regime); the default 4x4 layout misses ~1 in 4
+    pairs = dedup_text.minhash_portable_pairs(
+        _near_dup_corpus(docs), threshold=0.5, num_bands=8
+    )
     got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     planted = {(i, i + 1_000_000) for i in range(0, 50)}
     hits = sum(1 for p in planted if p in got)
@@ -34,16 +38,21 @@ def test_minhash_finds_planted_pairs(spark, docs):
 
 
 def test_simhash_exact_copies_hamming_zero(spark, docs):
-    pairs = dedup_text.simhash_near_dup_pairs(_dup_corpus(docs), max_hamming=3)
+    pairs = dedup_text.simhash_portable_near_dup_pairs(
+        _dup_corpus(docs), max_hamming=3
+    )
     rows = {(r.doc_a, r.doc_b): r.hamming for r in pairs.collect()}
     for i in range(0, 30):
         assert rows.get((i, i + 1_000_000)) == 0, f"exact copy pair {i} missing"
 
 
-def test_simhash_deterministic(spark, docs):
-    s1 = {r.doc_id: r.simhash for r in dedup_text.simhash(docs.limit(50)).collect()}
-    s2 = {r.doc_id: r.simhash for r in dedup_text.simhash(docs.limit(50)).collect()}
-    assert s1 == s2
+def test_portable_simhash_rejects_hamming_beyond_pigeonhole(spark, docs):
+    # 4 bands of 14 bits: at hamming 4 one flipped bit per band shares
+    # no band, so the pair would be dropped without a word
+    n_bands = dedup_text.SH_BITS // dedup_text.SH_BAND_BITS
+    with pytest.raises(ValueError, match="max_hamming"):
+        dedup_text.simhash_portable_near_dup_pairs(docs, max_hamming=n_bands)
+    dedup_text.simhash_portable_near_dup_pairs(docs, max_hamming=n_bands - 1)
 
 
 def test_exact_dedup_keeps_min_id(spark, docs):
@@ -53,34 +62,38 @@ def test_exact_dedup_keeps_min_id(spark, docs):
     assert all(i < 1_000_000 for i in ids)  # originals kept, copies dropped
 
 
-def test_lsh_topk_recall_vs_exact(spark, emb):
+def _topk_recall(spark, emb, name):
+    """(recall vs exact cosine top-5, approx rows, exact sims) of a
+    registered top-5 query over queries vec_id < 10."""
     queries = emb.filter(F.col("vec_id") < 10)
-    exact = similarity.cosine_topk(emb, queries, k=5)
-    approx = similarity.lsh_topk(emb, queries, dim=64, k=5, bits=4, num_tables=8)
-    e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
-    # AND-OR LSH (4 bits × 8 tables): P[collide] ≈ 0.8 for the ~0.5
-    # cosine neighborhood these embeddings have — require decent recall
-    assert len(a & e) / len(e) >= 0.5
-    # every approx result must carry the true cosine (same kernel)
-    exact_all = {
+    exact = {
+        (r.query_id, r.neighbor_id)
+        for r in similarity.cosine_topk(emb, queries, k=5).collect()
+    }
+    rows = plans.QUERIES[name](spark, SF_DIR).collect()
+    got = {(r.query_id, r.neighbor_id) for r in rows}
+    sims = {
         (r.query_id, r.neighbor_id): r.sim
         for r in similarity.cosine_topk(emb, queries, k=1000).collect()
     }
-    for r in approx.collect():
-        assert abs(exact_all[(r.query_id, r.neighbor_id)] - r.sim) < 1e-9
+    return len(got & exact) / len(exact), rows, sims
 
 
-def test_ivf_topk_recall_vs_exact(spark, emb):
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = similarity.cosine_topk(emb, queries, k=5)
-    approx = similarity.ivf_topk(emb, queries, k=5, n_cells=16, n_probe=4)
-    e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
-    # random near-uniform embeddings are the ANN worst case; require a
-    # floor well above the 4/16-cells random baseline (25%)
-    assert len(a & e) / len(e) >= 0.4
-    assert len(a) == 50  # full k for every query (cells are dense)
+def test_embedding_lsh_topk_recall_vs_exact(spark, emb):
+    recall, rows, sims = _topk_recall(spark, emb, "embedding_lsh_topk")
+    # portable AND-OR hyperplane LSH on near-uniform embeddings (the
+    # ANN worst case): require decent recall
+    assert recall >= 0.5, f"LSH top-k recall {recall:.2f}"
+    # every approx result carries the true cosine (same kernel)
+    for r in rows:
+        assert abs(sims[(r.query_id, r.neighbor_id)] - r.sim) < 1e-9
+
+
+def test_embedding_ivf_topk_recall_vs_exact(spark, emb):
+    recall, rows, _ = _topk_recall(spark, emb, "embedding_ivf_topk")
+    # a floor well above the 4/16-cells random baseline (25%)
+    assert recall >= 0.4, f"IVF top-k recall {recall:.2f}"
+    assert len(rows) == 50  # full k for every query (cells are dense)
 
 
 def test_media_feature_plumbing(spark, docs):
@@ -134,7 +147,7 @@ def test_lsh_near_dup_pairs_recall(spark, emb):
 
     corpus = _perturbed_embeddings(emb)
     exact = similarity.cosine_near_dup_pairs(corpus, threshold=0.995)
-    approx = similarity.lsh_near_dup_pairs(
+    approx = similarity.lsh_portable_near_dup_pairs(
         corpus, dim=64, threshold=0.995, bits=8, num_tables=8
     )
     e = {(r.id_a, r.id_b) for r in exact.collect()}
