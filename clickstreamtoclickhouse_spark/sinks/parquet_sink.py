@@ -1,10 +1,13 @@
 """Parquet lakehouse sink — the engine's primary at-rest format.
 
 Reproduces the reference's ClickHouse table semantics (SURVEY.md §2.9)
-on plain parquet:
+on plain parquet. Every table is a ``sinks/txlog.TxLogTable``: each
+insert and each compaction is one atomic commit, and readers take the
+file list and the schema from the commit log.
 
 - Q3 date partitioning (PARTITION BY toDate(timestamp),
-  clickhouse.py:86)  -> write.partitionBy("event_date")
+  clickhouse.py:86)  -> ``event_date=<d>/`` hive directories
+  (the table's partition column)
 - Q4 sort key (ORDER BY (timestamp, message_id), clickhouse.py:87)
   -> sortWithinPartitions(event_date, timestamp, message_id) before
   write (parquet min/max row-group stats then give the same
@@ -12,10 +15,12 @@ on plain parquet:
   leads: a partitioned write whose input is not already ordered by it
   re-sorts by event_date alone and loses the sort key.
 - S10 additive schema evolution (clickhouse.py:185-191)
-  -> parquet mergeSchema on read; appends may add columns freely
+  -> each commit records the previous schema plus the new columns;
+  older files read the new columns as null
 - Q1/Q2 ReplacingMergeTree read semantics -> read views in
   operators.dedup applied by read_view(); compact() makes them
-  at-rest (the analog of ClickHouse background merges)
+  at-rest in one overwrite commit (the analog of ClickHouse
+  background merges)
 
 Scale: each append writes date partitions; readers prune by
 event_date; sort-within-partition keeps row groups clustered so
@@ -32,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import dedup
+from .txlog import TxLogTable
 from .warehouse import Warehouse
 
 PARTITION_COL = "event_date"
@@ -40,7 +46,9 @@ PARTITION_COL = "event_date"
 def _clustered(df: DataFrame) -> DataFrame:
     """Add the date partition column (Q3) and order each task's rows by
     (event_date, timestamp, message_id) so every written date file
-    keeps the Q4 sort key."""
+    keeps the Q4 sort key. Tables without a timestamp pass through."""
+    if "timestamp" not in df.columns:
+        return df
     out = df.withColumn(PARTITION_COL, F.to_date("timestamp"))
     sort_cols = [c for c in (PARTITION_COL, "timestamp", "message_id") if c in out.columns]
     return out.sortWithinPartitions(*sort_cols)
@@ -58,8 +66,15 @@ class ParquetWarehouse(Warehouse):
     def close(self) -> None:
         pass
 
-    def _path(self, schema: str, table: str) -> str:
-        return os.path.join(self.root, schema, table)
+    def _table(self, schema: str, table: str) -> TxLogTable:
+        t = TxLogTable(os.path.join(self.root, schema, table), partition_col=PARTITION_COL)
+        if t.latest_version() == -1 and any(t.path.glob("**/*.parquet")):
+            # treated as a new table, its existing rows would be invisible
+            raise ValueError(
+                f"{t.path} holds parquet files but no _txlog commit: it was "
+                "written without the commit log; insert_df its rows into a new table"
+            )
+        return t
 
     # -- DDL surface ---------------------------------------------------
     def create_schema(self, schema: str) -> None:
@@ -70,43 +85,29 @@ class ParquetWarehouse(Warehouse):
         self.create_schema(schema)
 
     def describe_table(self, schema: str, table: str) -> dict[str, T.DataType]:
-        from ..util import try_read_parquet
-
-        path = self._path(schema, table)
-        # {} ONLY when the table doesn't exist yet; real read failures
-        # propagate (an empty dict here would make the evolution path
-        # re-ADD every column as new)
-        df = try_read_parquet(self.spark, path, mergeSchema="true")
-        if df is None:
+        """The committed schema; {} ONLY when the table has no commit
+        (an empty dict makes the evolution path re-ADD every column)."""
+        committed = self._table(schema, table).schema()
+        if committed is None:
             return {}
-        return {f.name: f.dataType for f in df.schema.fields if f.name != PARTITION_COL}
+        return {f.name: f.dataType for f in committed.fields if f.name != PARTITION_COL}
 
     def add_column(self, schema, table, column, column_type) -> None:
         # additive evolution is free: the next append carries the new
-        # column; mergeSchema surfaces it on read with nulls for old files
+        # column into the committed schema; older files read it as null
         pass
 
     # -- data path -----------------------------------------------------
     def insert_df(self, schema: str, table: str, df: DataFrame) -> None:
-        """S11 bulk insert. Adds the date partition column (Q3) and
-        clusters rows by the sort key (Q4) before writing."""
-        if "timestamp" in df.columns:
-            (
-                _clustered(df).write.mode("append")
-                .partitionBy(PARTITION_COL)
-                .parquet(self._path(schema, table))
-            )
-        else:
-            df.write.mode("append").parquet(self._path(schema, table))
+        """S11 bulk insert: one append commit. Adds the date partition
+        column (Q3) and clusters rows by the sort key (Q4)."""
+        self._table(schema, table).append(_clustered(df))
 
     # -- read side -----------------------------------------------------
     def read_table(self, schema: str, table: str) -> DataFrame:
         """Raw at-rest rows (duplicates possible — parity with
         ClickHouse before background merges)."""
-        return (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(self._path(schema, table))
-        )
+        return self._table(schema, table).read(self.spark)
 
     def read_view(self, schema: str, table: str) -> DataFrame:
         """Q1/Q2 read semantics: what a ClickHouse SELECT ... FINAL
@@ -120,15 +121,10 @@ class ParquetWarehouse(Warehouse):
 
     def compact(self, schema: str, table: str) -> None:
         """At-rest dedup — the analog of ClickHouse background merges
-        (clickhouse.py:85,116). Rewrites the table as its read view."""
-        view = self.read_view(schema, table).drop(PARTITION_COL)
-        path = self._path(schema, table)
-        tmp = path + "__compact"
-        if "timestamp" in view.columns:
-            _clustered(view).write.mode("overwrite").partitionBy(PARTITION_COL).parquet(tmp)
-        else:
-            view.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        shutil.rmtree(path)
-        shutil.move(tmp, path)
+        (clickhouse.py:85,116): the table's read view replaces its
+        contents in one overwrite commit, then ``vacuum`` deletes the
+        superseded files. A crash before the commit leaves the table
+        as it was."""
+        t = self._table(schema, table)
+        t.overwrite(_clustered(self.read_view(schema, table).drop(PARTITION_COL)))
+        t.vacuum()

@@ -8,7 +8,13 @@ actually exercised in this repo, not just designed:
 
 - **Log-derived listings.** A table is a directory with ``_txlog/``
   holding one JSON file per version: ``{version, adds, removes,
-  schema}``. Readers reconstruct the active file set from the log —
+  schema}``. Data files sit beside it in Spark's own layout
+  (``part-…parquet``, or ``<col>=<value>/part-…parquet`` hive
+  directories when the table has a partition column); a write lands
+  in ``_staging/<uuid>/`` and renames its files into place before it
+  commits. The committed schema is the previous commit's plus any new
+  columns, so readers get the table schema from the log as well.
+  Readers reconstruct the active file set from the log —
   never from a directory listing. At 100 TB this is the difference
   between an O(1)-ish metadata read and a multi-minute S3 LIST, and
   it is why Delta/Iceberg exist (Armbrust et al., VLDB 2020 — public
@@ -27,11 +33,11 @@ actually exercised in this repo, not just designed:
   de-referenced (and reclaimed by an explicit ``vacuum``).
 - **Atomic MERGE.** ``merge_upsert`` = read snapshot -> merge
   (operators/merge semantics) -> write new files -> ONE commit that
-  adds them and removes the old set. This closes the non-atomic
-  two-step window called out in ``streaming/stateful.py``'s
-  parquet-overwrite CDC path: with the log, replayed micro-batches
-  and concurrent readers see version N or N+1, never a truncated
-  table.
+  adds them and removes the old set, so replayed micro-batches and
+  concurrent readers see version N or N+1, never a truncated table
+  (``streaming/stateful.py:stream_merge_upsert`` applies each CDC
+  micro-batch this way; ``ParquetWarehouse.compact`` is one
+  ``overwrite`` commit plus ``vacuum``).
 
 Scale stance: the log carries file PATHS and a schema string —
 kilobytes per commit, independent of data size. Data moves only
@@ -45,6 +51,7 @@ from __future__ import annotations
 import json
 import logging
 import os
+import shutil
 import uuid
 from dataclasses import dataclass
 from pathlib import Path
@@ -53,8 +60,6 @@ logger = logging.getLogger(__name__)
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-from ..util import release_local_checkpoint
 
 
 class CommitConflict(Exception):
@@ -76,13 +81,22 @@ class TxLogTable:
     `stats_cols`: columns whose per-FILE min/max are captured from the
     parquet footers at write time and stored in the commit — the zone
     maps behind ``read(where=...)`` data skipping. Footer reads happen
-    once per written file; queries prune from the log alone."""
+    once per written file; queries prune from the log alone.
 
-    def __init__(self, path: str, stats_cols: tuple[str, ...] = ()) -> None:
+    `partition_col`: written files go to ``<col>=<value>/`` hive
+    directories (``partitionBy``) whenever the written frame has that
+    column; readers recover it from the path."""
+
+    def __init__(
+        self,
+        path: str,
+        stats_cols: tuple[str, ...] = (),
+        partition_col: str | None = None,
+    ) -> None:
         self.path = Path(path)
         self.log_dir = self.path / "_txlog"
-        self.log_dir.mkdir(parents=True, exist_ok=True)
         self.stats_cols = tuple(stats_cols)
+        self.partition_col = partition_col
 
     # -- log plumbing ---------------------------------------------------
 
@@ -133,6 +147,25 @@ class TxLogTable:
                 for e in self._log_entries()
             )
         ]
+
+    def schema(self, version: int | None = None) -> T.StructType | None:
+        """Committed table schema as of `version`; None before the
+        first commit."""
+        schema_json = self.snapshot(version).schema_json
+        if schema_json is None:
+            return None
+        return T.StructType.fromJson(json.loads(schema_json))
+
+    @staticmethod
+    def _evolved_schema(base: Snapshot, df: DataFrame) -> str:
+        """The base snapshot's schema plus any columns `df` adds."""
+        if base.schema_json is None:
+            return df.schema.json()
+        schema = T.StructType.fromJson(json.loads(base.schema_json))
+        for f in df.schema.fields:
+            if f.name not in schema.fieldNames():
+                schema.add(f)
+        return schema.json()
 
     def last_txn_version(self, app: str) -> int:
         """Highest idempotence-token version committed for writer
@@ -190,6 +223,7 @@ class TxLogTable:
         }
         if txn is not None:
             entry["txn"] = {"app": txn[0], "ver": int(txn[1])}
+        self.log_dir.mkdir(parents=True, exist_ok=True)
         tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}.json"
         tmp.write_text(json.dumps(entry, indent=1))
         final = self.log_dir / f"{version:020d}.json"
@@ -205,19 +239,27 @@ class TxLogTable:
     # -- data path ------------------------------------------------------
 
     def _write_files(self, df: DataFrame) -> tuple[list[str], dict[str, dict]]:
-        """Distributed parquet write into a unique subdir; returns the
-        table-relative data file paths (from the filesystem ONCE, at
-        write time — reads never list directories) plus per-file
-        min/max zone maps for `stats_cols` (footer metadata only, no
-        row reads)."""
-        sub = f"data/{uuid.uuid4().hex}"
-        out = self.path / sub
-        df.write.parquet(str(out))
-        files = [
-            f"{sub}/{p.name}"
-            for p in out.glob("*.parquet")
-            if not p.name.startswith("_")
-        ]
+        """Distributed parquet write into a unique staging dir, whose
+        data files are then renamed into the table (hive directories
+        kept). Returns the table-relative data file paths (from the
+        filesystem ONCE, at write time — reads never list directories)
+        plus per-file min/max zone maps for `stats_cols` (footer
+        metadata only, no row reads). The files are unreferenced until
+        a commit adds them; ``vacuum`` reclaims them if none does."""
+        staging = self.path / "_staging" / uuid.uuid4().hex
+        writer = df.write
+        if self.partition_col in df.columns:
+            writer = writer.partitionBy(self.partition_col)
+        writer.parquet(str(staging))
+        files = []
+        try:
+            for p in staging.rglob("*.parquet"):
+                rel = p.relative_to(staging)
+                (self.path / rel.parent).mkdir(parents=True, exist_ok=True)
+                os.rename(p, self.path / rel)
+                files.append(rel.as_posix())
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
         return files, self._collect_stats(files)
 
     def _collect_stats(self, files: list[str]) -> dict[str, dict]:
@@ -275,13 +317,14 @@ class TxLogTable:
                 if zm is None or not (zm[1] < lo or zm[0] > hi):
                     kept.append(f)
             files = kept
+        if snap.schema_json is None:
+            raise ValueError(f"{self.path}: empty table with no committed schema")
+        schema = T.StructType.fromJson(json.loads(snap.schema_json))
         if not files:
-            if snap.schema_json is None:
-                raise ValueError("empty table with no committed schema")
-            schema = T.StructType.fromJson(json.loads(snap.schema_json))
             return spark.createDataFrame([], schema)
+        # committed schema + explicit files: no footer scan, no listing
         return (
-            spark.read.option("mergeSchema", "true")
+            spark.read.schema(schema).option("basePath", str(self.path))
             .parquet(*[str(self.path / f) for f in files])
         )
 
@@ -311,16 +354,16 @@ class TxLogTable:
         if txn is not None and self._txn_already_applied(txn):
             return self.latest_version()
         adds, stats = self._write_files(df)
-        schema_json = df.schema.json()
         for _ in range(_max_retries):
             if txn is not None and self.last_txn_version(txn[0]) >= txn[1]:
                 # a concurrent replay committed this token while we
                 # were writing files; abandon ours (never referenced
                 # by any commit, reclaimed by vacuum)
                 return self.latest_version()
-            v = self.latest_version() + 1
+            base = self.snapshot()
+            v = base.version + 1
             try:
-                self._commit(v, adds, [], schema_json, stats, txn=txn)
+                self._commit(v, adds, [], self._evolved_schema(base, df), stats, txn=txn)
                 return v
             except CommitConflict:
                 continue
@@ -344,7 +387,9 @@ class TxLogTable:
         base = self.snapshot()
         adds, stats = self._write_files(df)
         v = base.version + 1
-        self._commit(v, adds, list(base.files), df.schema.json(), stats, txn=txn)
+        self._commit(
+            v, adds, list(base.files), self._evolved_schema(base, df), stats, txn=txn
+        )
         return v
 
     def commit_txn(
@@ -401,27 +446,18 @@ class TxLogTable:
                 base, updates, keys=keys,
                 version_col=version_col, delete_col=delete_col,
             )
-            # materialize BEFORE committing: the merged plan reads the
-            # snapshot files; localCheckpoint cuts that lineage so the
-            # new files are complete before the old ones are
-            # de-referenced (and later vacuumed)
-            merged = merged.localCheckpoint(eager=True)
+            # the write finishes before the commit de-references the
+            # snapshot files it read; only vacuum ever deletes them
+            adds, stats = self._write_files(merged)
             try:
-                adds, stats = self._write_files(merged)
                 self._commit(
                     base_snap.version + 1, adds, list(base_snap.files),
-                    merged.schema.json(), stats,
+                    self._evolved_schema(base_snap, merged), stats,
                 )
                 return base_snap.version + 1
             except CommitConflict:
                 # orphaned `adds` files are reclaimed by vacuum()
                 continue
-            finally:
-                # checkpoint blocks are only GC-reclaimed at driver
-                # GC; a per-micro-batch MERGE stream would otherwise
-                # accumulate one merged-table copy per commit (r15 —
-                # the streaming-sink release stance)
-                release_local_checkpoint(merged)
         raise CommitConflict(f"gave up after {_max_retries} retries")
 
     def optimize(
@@ -452,26 +488,16 @@ class TxLogTable:
                 return None
             total = sum((self.path / f).stat().st_size for f in snap.files)
             n_out = max(1, (total + target_file_bytes - 1) // target_file_bytes)
-            # materialize before committing (merge_upsert's rationale):
-            # the rewrite reads the snapshot files; the checkpoint cuts
-            # that lineage so the new files are complete before the old
-            # ones are de-referenced
-            df = self.read(spark, version=snap.version).coalesce(
-                int(n_out)
-            ).localCheckpoint(eager=True)
+            df = self.read(spark, version=snap.version).coalesce(int(n_out))
+            adds, stats = self._write_files(df)
             try:
-                adds, stats = self._write_files(df)
                 self._commit(
                     snap.version + 1, adds, list(snap.files),
-                    df.schema.json(), stats,
+                    self._evolved_schema(snap, df), stats,
                 )
                 return snap.version + 1
             except CommitConflict:
                 continue
-            finally:
-                # merge_upsert's release rationale: bounded storage
-                # across repeated compactions
-                release_local_checkpoint(df)
         raise CommitConflict(f"gave up after {_max_retries} retries")
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
@@ -487,12 +513,15 @@ class TxLogTable:
         for v in range(cutoff, latest + 1):
             referenced |= set(self.snapshot(v).files)
         deleted = []
-        for sub in (self.path / "data").glob("*/"):
-            for p in sub.glob("*.parquet"):
-                rel = f"data/{sub.name}/{p.name}"
-                if rel not in referenced:
-                    p.unlink()
-                    deleted.append(rel)
+        for p in sorted(self.path.rglob("*.parquet")):  # listed before any rmdir
+            rel = p.relative_to(self.path)
+            # _txlog/ and in-flight _staging/ dirs are not table data
+            if rel.parts[0].startswith("_") or rel.as_posix() in referenced:
+                continue
+            p.unlink()
+            deleted.append(rel.as_posix())
+            if p.parent != self.path and not any(p.parent.iterdir()):
+                p.parent.rmdir()  # a partition dir the table no longer uses
         # fold pre-cutoff history into a base commit so replay still
         # starts from a valid state. CRASH-SAFETY ORDER (an advisor
         # flagged the old unlink-then-plain-write sequence as a data

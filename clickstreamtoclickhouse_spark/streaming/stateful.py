@@ -236,53 +236,25 @@ def stream_merge_upsert(
 ):
     """Continuously maintained upsert table: every micro-batch of
     change rows is MERGEd (operators/merge.py semantics — latest
-    version wins, tombstones delete) into the parquet table at
-    `table_dir`, full-snapshot rewrite per batch.
+    version wins, tombstones delete) into the ``TxLogTable`` at
+    `table_dir` as ONE atomic commit (``TxLogTable.merge_upsert``).
 
-    This is the streaming CDC-apply shape. Plain parquet has no
-    transactional MERGE, so the apply is read-merge-overwrite —
-    correct (the read happens before the overwrite truncates) and
-    exactly what Delta/Iceberg `MERGE INTO` would replace with a
-    commit-log rewrite of only the touched files; swap the body for
-    `DeltaTable.merge` when the jars exist. Idempotent under
-    at-least-once replay: merging a batch twice is a no-op
-    (operators/merge.py pins that), so a crash between write and
+    This is the streaming CDC-apply shape. Readers of the table
+    (``TxLogTable(table_dir).read(spark)``) see the snapshot before or
+    after a micro-batch, never a truncated table. Idempotent under
+    at-least-once replay: merging a batch twice is a no-op on content
+    (operators/merge.py pins that), so a crash between commit and
     checkpoint just re-applies harmlessly."""
-    from ..operators.merge import merge_upsert
+    from ..sinks.txlog import TxLogTable
 
     spark = updates_stream.sparkSession
+    table = TxLogTable(table_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..util import release_local_checkpoint, try_read_parquet
-
-        # None ONLY when the table doesn't exist yet (first batch);
-        # real read failures propagate instead of silently rebuilding
-        # the table from one batch
-        base = try_read_parquet(spark, table_dir)
-        if base is not None:
-            merged = merge_upsert(
-                base, batch_df, keys=list(keys),
-                version_col=version_col, delete_col=delete_col,
-            )
-        else:
-            base = batch_df.limit(0)
-            if delete_col is not None:
-                base = base.drop(delete_col)
-            merged = merge_upsert(
-                base, batch_df, keys=list(keys),
-                version_col=version_col, delete_col=delete_col,
-            )
-        # materialize BEFORE overwrite (executor-side, not a driver
-        # collect): the merged plan reads the same files the overwrite
-        # is about to truncate, so the lineage must be cut first
-        merged = merged.localCheckpoint(eager=True)
-        try:
-            merged.write.mode("overwrite").parquet(table_dir)
-        finally:
-            # reclaim the checkpoint's blocks NOW rather than waiting on
-            # GC/ContextCleaner — in a long-running stream un-freed
-            # blocks accumulate across micro-batches
-            release_local_checkpoint(merged)
+        table.merge_upsert(
+            spark, batch_df, keys=list(keys),
+            version_col=version_col, delete_col=delete_col,
+        )
 
     return (
         updates_stream.writeStream.foreachBatch(process_batch)

@@ -217,9 +217,7 @@ def portable_id_hash_duck(expr: str) -> str:
     return f"('0x' || substr(md5({expr}), 1, 8))::BIGINT"
 
 
-def try_read_parquet(
-    spark: SparkSession, path: str, **options: str
-) -> DataFrame | None:
+def try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
     """Read a parquet path, returning None ONLY when the path does not
     exist yet (first run of an incremental/streaming job). Any other
     error — permission, corrupt footer, transient IO — propagates:
@@ -228,11 +226,8 @@ def try_read_parquet(
     operators/incremental.py, fixed for every such site here)."""
     from pyspark.errors import AnalysisException
 
-    reader = spark.read
-    for k, v in options.items():
-        reader = reader.option(k, v)
     try:
-        return reader.parquet(path)
+        return spark.read.parquet(path)
     except AnalysisException as e:
         if is_path_not_found(e):
             return None

@@ -103,6 +103,104 @@ def test_parquet_sink_files_keep_sort_key(spark, tmp_path):
     assert wh.read_table("ns", "t").count() == 3000
 
 
+def test_parquet_compact_interrupted_loses_nothing(spark, landing, tmp_path, monkeypatch):
+    # a crash after compact has written its new files but before it
+    # finishes must leave the table exactly as it was
+    from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "lake"))
+    res = EventPipeline(spark).ingest_json_dir(str(landing))
+    wh.insert_df("ns", "tracks", res.tables["tracks"])
+    wh.insert_df("ns", "tracks", res.tables["tracks"])  # re-ingest (at-least-once)
+
+    def rows(df):
+        return sorted(str(r) for r in df.collect())
+
+    raw, view = rows(wh.read_table("ns", "tracks")), rows(wh.read_view("ns", "tracks"))
+    assert len(raw) > len(view)  # compact would change the raw rows
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("simulated crash")
+
+    with monkeypatch.context() as m:
+        m.setattr(TxLogTable, "_commit", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            wh.compact("ns", "tracks")
+    assert rows(wh.read_table("ns", "tracks")) == raw
+    assert rows(wh.read_view("ns", "tracks")) == view
+
+    # the next compact lands and reclaims the crashed one's files too
+    wh.compact("ns", "tracks")
+    assert rows(wh.read_table("ns", "tracks")) == view
+    table = tmp_path / "lake" / "ns" / "tracks"
+    on_disk = {p.relative_to(table).as_posix() for p in table.glob("event_date=*/*.parquet")}
+    assert on_disk == set(TxLogTable(str(table)).snapshot().files)
+
+
+def test_txlog_vacuum_drops_emptied_partition_dirs(spark, tmp_path):
+    from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
+
+    t = TxLogTable(str(tmp_path / "t"), partition_col="d")
+    t.append(spark.createDataFrame([(1, "2026-01-01"), (2, "2026-01-02")], "id long, d string"))
+    t.overwrite(spark.createDataFrame([(3, "2026-01-02")], "id long, d string"))
+    assert len(t.vacuum()) == 2
+    assert sorted(p.name for p in (tmp_path / "t").iterdir()) == [
+        "_staging", "_txlog", "d=2026-01-02",
+    ]
+    assert [(r["id"], r["d"]) for r in t.read(spark).collect()] == [(3, "2026-01-02")]
+
+
+def test_parquet_sink_rejects_table_without_commit_log(spark, tmp_path):
+    # parquet files with no _txlog commit were written before the
+    # table had a commit log; reading them as an empty table would
+    # silently drop every row
+    import re
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "lake"))
+    old = tmp_path / "lake" / "ns" / "t"
+    spark.createDataFrame([("m1", 1)], "message_id string, n long").write.parquet(str(old))
+    with pytest.raises(ValueError, match=re.escape(str(old))):
+        wh.describe_table("ns", "t")
+    with pytest.raises(ValueError, match=re.escape(str(old))):
+        wh.read_table("ns", "t")
+    # a table that was never written is just new
+    assert wh.describe_table("ns", "fresh") == {}
+
+
+def test_parquet_sink_schema_and_reader_setup_start_no_job(spark, tmp_path):
+    # describe_table and building read_table's DataFrame come from the
+    # commit log: no footer scan, no listing job
+    wh = ParquetWarehouse(spark, str(tmp_path / "lake"))
+    df1 = spark.createDataFrame(
+        [("m1", "2026-01-01 00:00:00"), ("m2", "2026-01-02 00:00:00")],
+        "message_id string, timestamp string",
+    ).withColumn("timestamp", F.to_timestamp("timestamp"))
+    wh.insert_df("ns", "t", df1)
+    wh.insert_df("ns", "t", df1.withColumn("n", F.lit(7)))
+
+    sc = spark.sparkContext
+    group = f"no-job-probe-{tmp_path.name}"
+
+    def jobs_started(call):
+        sc.setJobGroup(group, "job count probe")
+        try:
+            out = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job events reach the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    n, described = jobs_started(lambda: wh.describe_table("ns", "t"))
+    assert n == 0
+    assert set(described) == {"message_id", "timestamp", "n"}
+    n, df = jobs_started(lambda: wh.read_table("ns", "t"))
+    assert n == 0
+    assert df.filter(F.col("event_date") == "2026-01-02").count() == 2
+    # older files read the newer column as null
+    assert sorted(r["n"] or 0 for r in df.collect()) == [0, 0, 7, 7]
+
+
 def test_clickhouse_ddl_generation():
     cols = {
         "message_id": T.StringType(),

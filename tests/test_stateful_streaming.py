@@ -266,10 +266,13 @@ def test_stream_merge_upsert(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    got = sorted(
-        (r["id"], r["name"]) for r in spark.read.parquet(table_dir).collect()
-    )
+    from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
+
+    table = TxLogTable(table_dir)
+    got = sorted((r["id"], r["name"]) for r in table.read(spark).collect())
     assert got == [(2, "b2"), (3, "c")]
+    # one atomic commit per micro-batch
+    assert [h["version"] for h in table.history()] == [0, 1]
 
 
 def test_user_running_totals_transform_with_state(spark, tmp_path):
