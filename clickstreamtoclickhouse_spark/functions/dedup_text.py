@@ -442,6 +442,17 @@ def verified_pairs_from_bands(
     )
 
 
+def touched_index_rows(
+    index: DataFrame, batch_bands: DataFrame, keys: tuple[str, ...] = ("band", "bk")
+) -> DataFrame:
+    """The rows of a persisted band index whose key a batch touches:
+    the index semi-joined against a broadcast of the batch's distinct
+    keys. The broadcast side is batch-sized, so the index side is
+    scanned once and never shuffled, whatever the corpus size."""
+    touched = batch_bands.select(*keys).distinct()
+    return index.join(F.broadcast(touched), list(keys), "left_semi")
+
+
 def incremental_minhash_dedup(
     batch: DataFrame,
     index_bands: DataFrame | None,
@@ -465,16 +476,17 @@ def incremental_minhash_dedup(
     drops one doc.
 
     Scale: each arriving batch costs O(|batch|) band rows against the
-    index regardless of corpus size (anti-join on the band key; a
-    bucketed index makes it shuffle-free on the index side). In-batch
+    index regardless of corpus size: the index is first cut down to
+    the band keys the batch touches (``touched_index_rows``, a
+    broadcast semi-join), so the index side is scanned once and never
+    shuffled. In-batch
     collisions use the same banded equi-join, never all-pairs; the
     min-id keeper rule is one window over band keys. The rule is
     deliberately CONSERVATIVE: a doc whose only collisions are with
     other rejected docs is also dropped (sequential id-order admission
     would re-admit it, but needs iterative peeling — at ingest scale a
     deterministic one-pass over-drop beats a multi-round exact
-    replay). Same non-atomic two-append caveat as
-    ``streaming_corpus_dedup``.
+    replay).
 
     Docs too short to shingle (fewer than `n` words after
     normalization) emit no MinHash band rows, which previously made
@@ -510,7 +522,7 @@ def incremental_minhash_dedup(
     )
     bands = bands.unionByName(no_shingle)
     if index_bands is not None:
-        idx = index_bands.select("band", "bk")
+        idx = touched_index_rows(index_bands.select("band", "bk"), bands)
         hit_corpus = (
             bands.join(idx, ["band", "bk"], "left_semi")
             .select("did")

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup_text import band_pairs
+from .dedup_text import band_pairs, touched_index_rows
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -481,9 +481,10 @@ def incremental_lsh_dedup(
     index tables.
 
     Scale: per batch, O(|batch| x num_tables) bucket rows equi-joined
-    to the bucket index (bucket the stored table on (t, bucket) —
-    sinks.bucketed.BandIndex's layout — for a batch-side-only
-    shuffle); the verify fetches ONLY colliding corpus vectors by id.
+    to the bucket index, which is first cut to the buckets the batch
+    touches (``dedup_text.touched_index_rows``, a broadcast semi-join:
+    the index side never shuffles); the verify fetches ONLY colliding
+    corpus vectors by id.
     Candidate volume is bounded by bucket occupancy; at extreme
     corpus sizes raise `bits` (candidates ~ n/2^bits per table) or
     pre-collapse exact duplicates, exactly as for the text variant."""
@@ -506,8 +507,12 @@ def incremental_lsh_dedup(
     if index_buckets is not None:
         cand = (
             buckets.join(
-                index_buckets.select(
-                    F.col(id_col).alias("cid"), "t", "bucket"
+                touched_index_rows(
+                    index_buckets.select(
+                        F.col(id_col).alias("cid"), "t", "bucket"
+                    ),
+                    buckets,
+                    ("t", "bucket"),
                 ),
                 ["t", "bucket"],
             )

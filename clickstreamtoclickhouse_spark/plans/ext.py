@@ -5319,9 +5319,9 @@ def incremental_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     over-drop documented on the MinHash variant.
 
     Scale: batch-side bucket rows equi-joined to the (t, bucket)
-    index (store it via sinks.bucketed.BandIndex's layout for a
-    batch-side-only shuffle); the verify fetches colliding corpus
-    vectors by id. Never all-pairs."""
+    index, cut first to the buckets the batch touches by a broadcast
+    semi-join (the index side never shuffles); the verify fetches
+    colliding corpus vectors by id. Never all-pairs."""
     emb = load(spark, sf_dir, "embeddings")
     corpus = emb.filter(
         (F.col("vec_id") >= _IED_LO) & (F.col("vec_id") < _IED_HI)

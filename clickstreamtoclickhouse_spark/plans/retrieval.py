@@ -407,8 +407,8 @@ _SQL_RRF_FUSE = f"""fused AS (
 
 
 # The doc bucket index depends only on the corpus — in a deployment
-# it is built once and queries stream against it (the BandIndex
-# stance), so it rides a SessionDFCache like the tf table it derives
+# it is built once and queries stream against it (the persisted
+# band-index stance), so it rides a SessionDFCache like the tf table it derives
 # from; the bench then measures the amortized per-query cost, which
 # is the number the primary-swap scale story is about.
 _HB_INDEX_CACHE = SessionDFCache("hashed_bow_index")

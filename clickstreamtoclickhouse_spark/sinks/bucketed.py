@@ -55,138 +55,3 @@ def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     planner, which is what lets it elide the join exchange."""
     return spark.table(table)
 
-
-class BandIndex:
-    """Persisted MinHash band index as a BUCKETED catalog table —
-    the storage layout behind ``incremental_minhash_dedup`` /
-    ``streaming_fuzzy_corpus_dedup`` at scale.
-
-    The per-batch screen is an anti-join of O(|batch|) band rows
-    against this (ever-growing) index on (band, bk). Stored as plain
-    parquet the index side re-shuffles on EVERY batch — cost grows
-    with corpus size forever. Bucketed on the join key, the index scan
-    reports its layout and the planner shuffles only the small batch
-    side into the bucket space: per-batch cost stays O(|batch|)
-    regardless of corpus size (pinned in
-    test_plan_quality.py::test_band_index_anti_join_is_index_side_shuffle_free).
-
-    Each ``append`` writes up to ``num_buckets`` new files, so a
-    long-running ingest accumulates a small-file pile; ``compact()``
-    rewrites the table once (temp table + atomic catalog rename) —
-    run it every N batches or on a file-count threshold. Band rows
-    are immutable facts about admitted docs, so there is no retention
-    window to manage: compaction is the only maintenance the index
-    needs."""
-
-    KEYS = ("band", "bk")
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        table: str = "minhash_band_index",
-        num_buckets: int = 32,
-    ) -> None:
-        self.spark = spark
-        self.table = table
-        self.num_buckets = num_buckets
-
-    def exists(self) -> bool:
-        self._recover()
-        return self.spark.catalog.tableExists(self.table)
-
-    def _recover(self) -> None:
-        """Finish or roll back a compaction swap interrupted by a
-        crash (single-writer maintenance op). Invariants: the
-        compacted temp table is only ever fully written (Spark
-        registers a saved table at commit), and the backup rename
-        happens after that write — so whenever the live table is
-        missing, either the temp (preferred: the compacted data) or
-        the backup holds the complete index and can be adopted. Every
-        intermediate crash state is therefore recoverable, which is
-        what makes the swap effectively atomic for readers that go
-        through exists()/load()/append()."""
-        cat = self.spark.catalog
-        if cat.tableExists(self.table):
-            return
-        tmp = f"{self.table}__compacting"
-        bak = f"{self.table}__precompact"
-        if cat.tableExists(tmp):
-            self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {self.table}")
-            self.spark.sql(f"DROP TABLE IF EXISTS {bak}")
-        elif cat.tableExists(bak):
-            self.spark.sql(f"ALTER TABLE {bak} RENAME TO {self.table}")
-
-    def load(self) -> DataFrame | None:
-        """The index as a bucketed scan (None before the first
-        append) — pass as `index_bands` to incremental_minhash_dedup."""
-        return self.spark.table(self.table) if self.exists() else None
-
-    def append(self, bands: DataFrame) -> None:
-        """Append (id, band, bk) rows for newly admitted docs."""
-        self._recover()
-        write_bucketed(
-            bands,
-            self.table,
-            list(self.KEYS),
-            num_buckets=self.num_buckets,
-            sort_cols=list(self.KEYS),
-            mode="append",
-        )
-
-    def n_files(self) -> int:
-        """Data-file count (compaction trigger input)."""
-        loc = self._location()
-        from pathlib import Path
-
-        return sum(1 for _ in Path(loc).glob("*.parquet"))
-
-    def _location(self) -> str:
-        rows = self.spark.sql(f"DESCRIBE FORMATTED {self.table}").collect()
-        for r in rows:
-            if r["col_name"].strip() == "Location":
-                loc = r["data_type"].strip()
-                return loc.removeprefix("file:") if loc.startswith("file:/") else loc
-        raise ValueError(f"no location for table {self.table}")
-
-    def compact(self) -> tuple[int, int]:
-        """Rewrite the index into one file set per bucket: write a new
-        bucketed table from the current scan, then swap it in with an
-        atomic catalog rename. Returns (files_before, files_after)."""
-        self._recover()
-        before = self.n_files()
-        tmp = f"{self.table}__compacting"
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-        # Force the BUCKETED scan for the rewrite: one input partition
-        # per bucket id, so each write task holds exactly one bucket
-        # and emits exactly one file — `num_buckets` files total. (An
-        # explicit repartition on the bucket key does NOT work here:
-        # the catalog already declares that distribution, so the
-        # planner elides the repartition, then autoBucketedScan turns
-        # the bucketed read OFF because nothing requires it anymore —
-        # leaving arbitrary file-split partitions and one file per
-        # bucket PER TASK, the very pile being compacted.)
-        conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        old = self.spark.conf.get(conf)
-        self.spark.conf.set(conf, "false")
-        try:
-            write_bucketed(
-                self.spark.table(self.table),
-                tmp,
-                list(self.KEYS),
-                num_buckets=self.num_buckets,
-                sort_cols=list(self.KEYS),
-                mode="overwrite",
-            )
-        finally:
-            self.spark.conf.set(conf, old)
-        # Crash-safe swap: the live table is never dropped while it is
-        # the only copy. Rename live -> backup, temp -> live, then drop
-        # the backup; _recover() adopts the survivor from any
-        # intermediate crash state (a bare DROP+RENAME here would lose
-        # the whole index if the process died between the statements).
-        bak = f"{self.table}__precompact"
-        self.spark.sql(f"DROP TABLE IF EXISTS {bak}")
-        self.spark.sql(f"ALTER TABLE {self.table} RENAME TO {bak}")
-        self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {self.table}")
-        self.spark.sql(f"DROP TABLE {bak}")
-        return before, self.n_files()

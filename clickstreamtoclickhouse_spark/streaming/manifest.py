@@ -51,9 +51,8 @@ batch recomputes exactly the original admission decision even when a
 crash left some of the batch's table commits applied and others not
 — the applied ones are skipped by their (app, batch_id) token, the
 missing ones are re-derived from identical pre-batch state and
-committed. The quota ledger commits FIRST (fail-closed, the
-streaming_source_quota contract): a charged-but-unwritten batch can
-only under-admit on replay, never over-spend.
+committed (``TxLogTable.read_before``, the state read every stream
+operator in ``streaming/`` shares).
 
 Scale: the arriving batch's work is O(|batch|) against arbitrarily
 large indexes — the hash anti-join shuffles batch-keyed rows (a
@@ -81,6 +80,7 @@ from ..functions.dedup_text import (
     _cap_buckets,
     incremental_exact_dedup,
     minhash_portable_bands,
+    touched_index_rows,
     verified_pairs_from_bands,
 )
 from ..sinks.txlog import TxLogTable
@@ -106,21 +106,6 @@ class ManifestTables:
         self.hashes = TxLogTable(str(r / "hashes"), stats_cols=("batch_id",))
         self.bands = TxLogTable(str(r / "bands"), stats_cols=("batch_id",))
         self.ledger = TxLogTable(str(r / "ledger"), stats_cols=("batch_id",))
-
-
-def _read_before(
-    spark: SparkSession, table: TxLogTable, batch_id: int
-) -> DataFrame | None:
-    """Snapshot of `table` as produced by batches STRICTLY BEFORE
-    `batch_id` — the read every screen uses, so a replayed batch
-    never sees its own partially-committed contribution. Zone-map
-    pruning drops this-and-later batches' files from the scan;
-    the explicit filter is the correctness guarantee. None = no
-    commits yet (first batch)."""
-    if table.latest_version() < 0:
-        return None
-    df = table.read(spark, where=("batch_id", 0, batch_id - 1))
-    return df.filter(F.col("batch_id") < F.lit(batch_id))
 
 
 def manifest_batch_ingest(
@@ -173,7 +158,7 @@ def manifest_batch_ingest(
         # stage 3: exact dedup — persisted hash index + in-batch min-id.
         # ONE checkpoint carries text+quality+content_hash for every
         # downstream consumer (banding, screens, all three appends)
-        idx = _read_before(spark, tables.hashes, batch_id)
+        idx = tables.hashes.read_before(spark, token)
         ex_b = freeze(
             q.join(
                 incremental_exact_dedup(
@@ -194,11 +179,10 @@ def manifest_batch_ingest(
             ex_b.select("doc_id", "text"), n=shingle_n, num_bands=num_bands
         )
         bands_b = freeze(bands_b)
-        bidx = _read_before(spark, tables.bands, batch_id)
+        bidx = tables.bands.read_before(spark, token)
         if bidx is not None:
-            touched = bands_b.select("band", "bk").distinct()
-            idx_sub = bidx.select("did", "sig", "band", "bk").join(
-                F.broadcast(touched), ["band", "bk"], "left_semi"
+            idx_sub = touched_index_rows(
+                bidx.select("did", "sig", "band", "bk"), bands_b
             )
             allb = idx_sub.unionByName(
                 bands_b.select("did", "sig", "band", "bk")
@@ -236,7 +220,7 @@ def manifest_batch_ingest(
         # optional quota: contiguous-prefix admission per source in
         # arrival (doc_id) order against the persisted ledger
         if budget_tokens is not None:
-            led = _read_before(spark, tables.ledger, batch_id)
+            led = tables.ledger.read_before(spark, token)
             if led is not None:
                 spent = led.groupBy("source").agg(
                     F.sum("spent_tokens").cast("long").alias("spent")
@@ -265,15 +249,12 @@ def manifest_batch_ingest(
                 .drop("cum", "spent")
             )
 
-        # freeze the admission decision BEFORE any append (the
-        # CacheManager/recompute lesson from streaming_source_quota),
-        # then commit each table idempotently on (app, batch_id)
+        # compute the admission decision once for its commits, then
+        # commit each table idempotently on (app, batch_id); commit
+        # order does not matter, every screen reads pre-batch state
         admitted = freeze(admitted)
         bid = F.lit(batch_id).cast("long")
         if budget_tokens is not None:
-            # ledger FIRST — fail-closed (streaming_source_quota
-            # contract): a crash after this commit under-admits on
-            # replay, never over-spends
             tables.ledger.append(
                 admitted.groupBy("source")
                 .agg(F.sum("n_tokens").cast("long").alias("spent_tokens"))

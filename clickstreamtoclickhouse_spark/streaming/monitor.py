@@ -10,6 +10,12 @@ metrics table (queryable like any other — freshness dashboards,
 alerting joins), and violating rows can optionally be quarantined
 without failing the stream.
 
+Every monitor table is a ``sinks/txlog.TxLogTable`` (read it with
+``TxLogTable(dir).read(spark)``), and each micro-batch commits with
+the token ``txn=(checkpoint_dir, batch_id)``: a replayed batch skips
+the commits that already landed, so no metric or quarantined row is
+ever appended twice.
+
 Scale: per batch, one map-side-combinable aggregate (all checks are
 conditional sums over one scan) producing exactly ``len(checks)``
 metric rows — metrics volume grows with batches, never with rows.
@@ -25,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..sinks.txlog import TxLogTable
 
 
 def batch_dq_metrics(
@@ -68,27 +76,24 @@ def streaming_dq_monitor(
 ):
     """Attach continuous DQ monitoring to a streaming DataFrame.
 
-    Each micro-batch appends one metrics row per check to
-    `metrics_dir` (parquet). With `quarantine_dir`, rows violating ANY
-    check are also appended there with a `_violated` column naming the
+    Each micro-batch commits one metrics row per check to
+    `metrics_dir`. With `quarantine_dir`, rows violating ANY
+    check are also committed there with a `_violated` column naming the
     failed checks — the streaming mirror of the reference's misfits
     quarantine, but rule-driven instead of coercion-driven.
 
     The monitor OBSERVES; it never filters the main stream (compose
-    `stream.filter(~cond)` upstream if rejection is wanted). Failure
-    mode: foreachBatch is at-least-once, so a batch retried after a
-    crash between the two appends can double-append metrics; keyed
-    (batch_id, check_name) reads dedupe it (Q1 view), and the Delta
-    mapping in sinks/lakehouse.py makes both appends atomic."""
+    `stream.filter(~cond)` upstream if rejection is wanted)."""
+    metrics = TxLogTable(metrics_dir)
+    quarantine = None if quarantine_dir is None else TxLogTable(quarantine_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if quarantine_dir is not None:
+        token = (checkpoint_dir, batch_id)
+        if quarantine is not None:
             batch_df = batch_df.cache()
         try:
-            batch_dq_metrics(batch_df, checks, batch_id).write.mode(
-                "append"
-            ).parquet(metrics_dir)
-            if quarantine_dir is not None:
+            metrics.append(batch_dq_metrics(batch_df, checks, batch_id), txn=token)
+            if quarantine is not None:
                 violated = F.array_compact(
                     F.array(
                         *[
@@ -97,15 +102,14 @@ def streaming_dq_monitor(
                         ]
                     )
                 )
-                (
+                quarantine.append(
                     batch_df.withColumn("_violated", violated)
                     .filter(F.size("_violated") > 0)
-                    .withColumn("_batch_id", F.lit(batch_id).cast("long"))
-                    .write.mode("append")
-                    .parquet(quarantine_dir)
+                    .withColumn("_batch_id", F.lit(batch_id).cast("long")),
+                    txn=token,
                 )
         finally:
-            if quarantine_dir is not None:
+            if quarantine is not None:
                 batch_df.unpersist()
 
     return (
@@ -171,7 +175,7 @@ def streaming_drift_monitor(
     binned with the FROZEN reference edges (lo/hi/n_bins must be the
     ones `histogram_shares` built the reference with), its Population
     Stability Index against the reference is computed JVM-side, and
-    one metrics row (batch_id, n_rows, psi, alert) appends to
+    one metrics row (batch_id, n_rows, psi, alert) is committed to
     `metrics_dir` — the streaming mirror of the batch
     `value_drift_psi` query, with the standard industry thresholds
     (psi < 0.1 stable, 0.1-0.25 moderate, > 0.25 shifted; alert fires
@@ -183,11 +187,10 @@ def streaming_drift_monitor(
     slow drift). Shares are floored at 1e-6 before the log ratio, the
     usual PSI guard for empty bins. NULL-valued rows are excluded
     from both the profile and n_rows (same filter as
-    histogram_shares, so the two populations stay identical).
-    At-least-once caveat matches streaming_dq_monitor: keyed
-    (batch_id) reads dedupe replays."""
+    histogram_shares, so the two populations stay identical)."""
     spark = stream.sparkSession
     ref_rows = [(int(k), float(v)) for k, v in sorted(ref_shares.items())]
+    metrics = TxLogTable(metrics_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         ref = F.broadcast(
@@ -227,7 +230,7 @@ def streaming_drift_monitor(
             "psi",
             (F.col("psi") > psi_alert).alias("alert"),
         )
-        row.write.mode("append").parquet(metrics_dir)
+        metrics.append(row, txn=(checkpoint_dir, batch_id))
 
     return (
         stream.writeStream.foreachBatch(process_batch)
@@ -252,7 +255,7 @@ def streaming_late_arrival_monitor(
     when counts look low ("how much was late, and what was it?") has
     no built-in answer. This monitor reproduces the engine's
     watermark semantics in foreachBatch and SURFACES both sides:
-    on-time rows fold into per-event-time-window counts appended to
+    on-time rows fold into per-event-time-window counts committed to
     `out_dir`; late rows are quarantined VERBATIM (all columns +
     batch_id + the watermark that rejected them) to `late_dir`, so
     they can be audited or replayed through a backfill. Rows with a
@@ -266,8 +269,8 @@ def streaming_late_arrival_monitor(
     a REPLAYED batch (crash after the state advanced but before the
     streaming commit) classifies against prev_max — the same
     watermark the original attempt used — so on-time/late assignment
-    is deterministic under at-least-once redelivery. Output reads
-    dedupe replays on batch_id, the monitor-family caveat.
+    is deterministic under at-least-once redelivery, and its commits
+    that already landed are skipped by their token.
 
     Scale: per batch one filter + one windowed count (map-side
     combinable); the quarantine writes only late rows; state is O(1)
@@ -277,6 +280,8 @@ def streaming_late_arrival_monitor(
     from pathlib import Path
 
     delay_expr = f"INTERVAL {delay}"
+    counts = TxLogTable(out_dir)
+    late = TxLogTable(late_dir)
     state_path = Path(state_dir) / "watermark.json"
     state_path.parent.mkdir(parents=True, exist_ok=True)
 
@@ -292,6 +297,7 @@ def streaming_late_arrival_monitor(
         os.replace(tmp, state_path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        token = (checkpoint_dir, batch_id)
         st = _load_state()
         base = st["prev_max"] if st["batch_id"] == batch_id else st["cur_max"]
         batch_df = batch_df.cache()
@@ -310,14 +316,13 @@ def streaming_late_arrival_monitor(
                 wm = F.lit(None).cast("timestamp")  # no watermark yet
                 quarantined = batch_df.filter(ts.isNull())
                 ontime = batch_df.filter(ts.isNotNull())
-            (
+            late.append(
                 quarantined
                 .withColumn("_batch_id", F.lit(batch_id).cast("long"))
-                .withColumn("_watermark", wm)
-                .write.mode("append")
-                .parquet(late_dir)
+                .withColumn("_watermark", wm),
+                txn=token,
             )
-            (
+            counts.append(
                 ontime.filter(ts.isNotNull())
                 .groupBy(F.window(ts, window).alias("w"))
                 .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
@@ -326,9 +331,8 @@ def streaming_late_arrival_monitor(
                     F.col("w.end").alias("window_end"),
                     "n_rows",
                     F.lit(batch_id).cast("long").alias("batch_id"),
-                )
-                .write.mode("append")
-                .parquet(out_dir)
+                ),
+                txn=token,
             )
             mx = batch_df.agg(
                 F.max(F.unix_micros(ts)).alias("m")

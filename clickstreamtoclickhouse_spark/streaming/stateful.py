@@ -3,8 +3,21 @@ the reference has no streaming; its idempotency contract is
 at-least-once + eventual dedup, which `streaming_dedup` upgrades to
 exactly-once-per-key within the watermark).
 
-All operators take an unbounded (readStream) DataFrame and return a
-transformed streaming DataFrame; state is bounded by watermarks.
+The in-stream operators take an unbounded (readStream) DataFrame and
+return a transformed streaming DataFrame; state is bounded by
+watermarks.
+
+The foreachBatch operators (the corpus dedup family, the Bloom,
+fuzzy and embedding screens, the source quota, the contamination
+screen and `stream_merge_upsert`) return a started query and write
+only through ``sinks/txlog.TxLogTable``. A state table carries a
+``batch_id`` column and is read as of strictly before the current
+batch (``TxLogTable.read_before``); every commit carries the token
+``txn=(checkpoint_dir, batch_id)``. A replayed micro-batch therefore
+recomputes the decision of its first attempt, skips the commits that
+landed and makes the rest, so a crash at any commit leaves the
+tables as one clean run would. Read their outputs with
+``TxLogTable(dir).read(spark)``.
 """
 
 from __future__ import annotations
@@ -17,6 +30,19 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..sinks.txlog import TxLogTable
+
+
+def _state_table(path: str) -> TxLogTable:
+    """A foreachBatch operator's state table: its rows carry
+    `batch_id`, whose zone maps let `read_before` skip later batches'
+    files."""
+    return TxLogTable(path, stats_cols=("batch_id",))
+
+
+def _tagged(df: DataFrame, batch_id: int) -> DataFrame:
+    return df.withColumn("batch_id", F.lit(batch_id).cast("long"))
 
 
 def streaming_dedup(
@@ -122,54 +148,47 @@ def streaming_corpus_dedup(
 ):
     """Continuous corpus construction with exact dedup: each
     micro-batch of documents is deduped against the PERSISTED corpus
-    hash index (parquet at `index_dir`), survivors are appended to
-    `out_dir` and their hashes appended to the index — so later
+    hash index (the state table at `index_dir`), survivors are
+    committed to `out_dir` and their hashes to the index — so later
     batches (and re-delivered files) never re-admit a duplicate.
 
     This is `dedup_text.incremental_exact_dedup` composed with
     foreachBatch: the index read is per-batch (picks up earlier
-    batches' appends), the anti-join shuffles only (hash, id), and
-    the corpus text is written once and never reshuffled. At scale
-    the index is a bucketed table on content_hash, making the
-    anti-join co-located; at-least-once file delivery upgrades to
-    exactly-once corpus membership because re-sent content hits its
-    own hash in the index.
-
-    Caveat: corpus and index are two non-atomic parquet appends — a
-    crash BETWEEN them (after corpus, before index) lets a re-send of
-    that batch's docs back in. The transactional Delta mapping
-    (sinks/lakehouse.py) or the native log (sinks/txlog.py — both
-    appends in one commit) closes that window; with plain parquet the
-    window is one micro-batch wide and the at-rest Q1 dedup view
-    still masks the duplicate at read time."""
+    batches' commits), the anti-join shuffles only (hash, id), and
+    the corpus text is written once and never reshuffled.
+    At-least-once file delivery upgrades to exactly-once corpus
+    membership because re-sent content hits its own hash in the
+    index; a replayed micro-batch is exactly-once through the module's
+    commit path."""
     from ..functions.dedup_text import incremental_exact_dedup
 
     spark = docs_stream.sparkSession
+    index = _state_table(index_dir)
+    out = TxLogTable(out_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..util import try_read_parquet
-
+        token = (checkpoint_dir, batch_id)
         batch_df = batch_df.cache()
         try:
-            # None ONLY on first batch (no index yet); real read
-            # failures propagate and fail the batch rather than
-            # silently restarting dedup from an empty index
-            index = try_read_parquet(spark, index_dir)
-            if index is not None:
-                fresh = incremental_exact_dedup(
-                    batch_df, index, id_col, text_col, corpus_hash_col="content_hash"
+            idx = index.read_before(spark, token)
+            # first batch: empty corpus -> in-batch dedup only
+            fresh = incremental_exact_dedup(
+                batch_df,
+                batch_df.limit(0) if idx is None else idx,
+                id_col,
+                text_col,
+                corpus_hash_col=None if idx is None else "content_hash",
+            ).cache()
+            try:
+                out.append(
+                    batch_df.join(fresh.select(id_col), id_col, "left_semi"),
+                    txn=token,
                 )
-            else:  # first batch: empty corpus -> in-batch dedup only
-                fresh = incremental_exact_dedup(
-                    batch_df, batch_df.limit(0), id_col, text_col
+                index.append(
+                    _tagged(fresh.select("content_hash"), batch_id), txn=token
                 )
-            fresh = fresh.cache()
-            (
-                batch_df.join(fresh.select(id_col), id_col, "left_semi")
-                .write.mode("append").parquet(out_dir)
-            )
-            fresh.select("content_hash").write.mode("append").parquet(index_dir)
-            fresh.unpersist()
+            finally:
+                fresh.unpersist()
         finally:
             batch_df.unpersist()
 
@@ -245,8 +264,6 @@ def stream_merge_upsert(
     at-least-once replay: merging a batch twice is a no-op on content
     (operators/merge.py pins that), so a crash between commit and
     checkpoint just re-applies harmlessly."""
-    from ..sinks.txlog import TxLogTable
-
     spark = updates_stream.sparkSession
     table = TxLogTable(table_dir)
 
@@ -344,7 +361,7 @@ def streaming_bloom_dedup(
     RELATIONALLY as its set-bit positions (<= `m` rows, ever). A
     micro-batch doc is admitted only if at least one of its k=4
     deterministic md5-window bit positions is unset; survivors'
-    positions are appended (new positions only, via anti-join).
+    positions are committed (new positions only, via anti-join).
 
     The trade vs the exact index: O(m bits) state instead of O(corpus)
     rows — at the price of a tunable, DETERMINISTIC false-positive
@@ -358,27 +375,28 @@ def streaming_bloom_dedup(
 
     At this m the bit table broadcasts into the membership join; at
     web scale (m ~ 10^10 bits) the identical plan degrades to a
-    sort-merge join on pos — still linear. Same non-atomic
-    two-append caveat (and Delta fix) as streaming_corpus_dedup."""
+    sort-merge join on pos — still linear."""
     from ..functions.dedup_text import bloom_positions
 
     spark = docs_stream.sparkSession
+    bits_table = _state_table(bits_dir)
+    out = TxLogTable(out_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..util import try_read_parquet
-
+        token = (checkpoint_dir, batch_id)
         batch_df = batch_df.cache()
         try:
             # NULL text hashes to NULL positions, which would (a) never
             # match the bits table -> the doc re-admits on every
-            # re-delivery, and (b) append a duplicate NULL pos row per
+            # re-delivery, and (b) commit a duplicate NULL pos row per
             # batch (NULL != NULL in the anti-join), breaking the <= m
             # state bound. Normalize to '' so null-text docs dedup as
             # one content like any other.
             txt = F.coalesce(F.col(text_col), F.lit(""))
             pos_arr = F.array(*bloom_positions(txt, m))
-            bits = try_read_parquet(spark, bits_dir)
+            bits = bits_table.read_before(spark, token)
             if bits is not None:
+                bits = bits.select("pos")
                 qpos = batch_df.select(id_col, F.explode(pos_arr).alias("pos"))
                 hit = (
                     qpos.join(
@@ -407,13 +425,13 @@ def streaming_bloom_dedup(
             )
             survivors = fresh.join(keep, id_col, "left_semi").cache()
             try:
-                survivors.write.mode("append").parquet(out_dir)
+                out.append(survivors, txn=token)
                 new_pos = survivors.select(
                     F.explode(pos_arr).alias("pos")
                 ).distinct()
                 if bits is not None:
                     new_pos = new_pos.join(bits, "pos", "left_anti")
-                new_pos.write.mode("append").parquet(bits_dir)
+                bits_table.append(_tagged(new_pos, batch_id), txn=token)
             finally:
                 survivors.unpersist()
         finally:
@@ -434,60 +452,45 @@ def streaming_fuzzy_corpus_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     num_bands: int = 8,
-    index_table: str | None = None,
-    compact_every: int = 16,
 ):
     """``streaming_corpus_dedup``'s fuzzy sibling: each micro-batch is
     screened against the persisted MinHash BAND index, so re-sent OR
     NEAR-DUPLICATE content (truncations, boilerplate re-crawls) is
     rejected — exact hashing only stops byte-identical re-delivery.
-    Survivors' text is appended to `out_dir`, their band rows to
+    Survivors' text is committed to `out_dir`, their band rows to
     `index_dir`.
 
-    Per batch: O(|batch|) band rows anti-joined to the index (bucket
-    the index on (band, bk) at scale for a co-located join); in-batch
+    Per batch: O(|batch|) band rows screened against the index, which
+    is first cut to the band keys the batch touches by a broadcast
+    semi-join, so the index side never shuffles; in-batch
     collisions resolved by functions.dedup_text.incremental_minhash_dedup's
     deterministic keeper rule. Index growth is `num_bands` rows per
-    ADMITTED doc — rejected duplicates add nothing. Same non-atomic
-    two-append caveat as the exact variant (the Delta mapping or the
-    native transaction log in sinks/txlog.py closes it).
-
-    `index_table` switches the index from an `index_dir` parquet pile
-    to a BUCKETED catalog table (sinks.bucketed.BandIndex, bucketBy on
-    the (band, bk) join key): the per-batch anti-join then shuffles
-    only the small batch side — the index scan is exchange-free
-    regardless of corpus size — and every `compact_every` batches the
-    accumulated per-append file sets are compacted in place, so the
-    index never degrades into an ever-larger small-file pile."""
+    ADMITTED doc — rejected duplicates add nothing."""
     from ..functions.dedup_text import incremental_minhash_dedup
-    from ..sinks.bucketed import BandIndex
 
     spark = docs_stream.sparkSession
-    bidx = BandIndex(spark, index_table) if index_table else None
+    index = _state_table(index_dir)
+    out = TxLogTable(out_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..util import try_read_parquet
-
+        token = (checkpoint_dir, batch_id)
         batch_df = batch_df.cache()
         try:
-            index = bidx.load() if bidx else try_read_parquet(spark, index_dir)
             fresh_ids, fresh_bands = incremental_minhash_dedup(
-                batch_df, index, num_bands=num_bands,
-                id_col=id_col, text_col=text_col,
+                batch_df, index.read_before(spark, token),
+                num_bands=num_bands, id_col=id_col, text_col=text_col,
             )
             fresh_bands = fresh_bands.cache()
-            (
-                batch_df.join(fresh_ids, id_col, "left_semi")
-                .write.mode("append").parquet(out_dir)
-            )
-            new_bands = fresh_bands.select(id_col, "band", "bk")
-            if bidx:
-                bidx.append(new_bands)
-                if batch_id > 0 and batch_id % compact_every == 0:
-                    bidx.compact()
-            else:
-                new_bands.write.mode("append").parquet(index_dir)
-            fresh_bands.unpersist()
+            try:
+                out.append(
+                    batch_df.join(fresh_ids, id_col, "left_semi"), txn=token
+                )
+                index.append(
+                    _tagged(fresh_bands.select(id_col, "band", "bk"), batch_id),
+                    txn=token,
+                )
+            finally:
+                fresh_bands.unpersist()
         finally:
             batch_df.unpersist()
 
@@ -516,85 +519,37 @@ def streaming_embedding_dedup(
     micro-batch of vectors is screened against the persisted LSH
     bucket index WITH an exact-cosine verify
     (functions.similarity.incremental_lsh_dedup — bucket collisions
-    alone would drop mere cluster-mates), survivors' vectors append
-    to `out_dir` and their bucket + vector index rows to
+    alone would drop mere cluster-mates); survivors' vectors are
+    committed to `out_dir` and their bucket + vector index rows to
     `index_dir`/buckets and `index_dir`/vectors.
 
-    Per batch: O(|batch| x num_tables) bucket rows against the index
-    (bucket the stored table on (t, bucket) at scale — BandIndex's
-    layout); the verify fetches only colliding corpus vectors by id.
-
-    Torn-index recovery: the two index appends are not atomic, but
-    the bucket table is a DETERMINISTIC function of the vector table
-    (lsh_portable_buckets), so the vector table is the source of
-    truth. Vectors are appended FIRST; on every batch, ids present in
-    vectors but missing from buckets (the crash window) get their
-    bucket rows REGENERATED and unioned in before screening, so a
-    crash between the TWO INDEX appends can never cause re-admission
-    or a crash-loop — the cost is one id anti-join per batch (index
-    side bucketable). A bucket table with no vector table (impossible
-    under this write order) is ignored: without vectors nothing can
-    be verified.
-
-    Output sink is EXACTLY-ONCE (r9): `out_dir` is a txlog table
-    (sinks/txlog.TxLogTable — read survivors back with
-    ``TxLogTable(out_dir).read(spark)``, not a bare parquet read) and
-    the survivor append carries an idempotence token
-    (txn=(checkpoint_dir, batch_id), the Delta txnAppId/txnVersion
-    pattern). out_dir is still appended BEFORE the vector index, so a
-    crash in that window replays the batch against an unchanged index
-    — survivors recompute identically — but the token makes the
-    replayed out append a NO-OP instead of a duplication; the index
-    appends then complete normally. A replay AFTER the vectors append
-    recomputes zero survivors (they are in the index now), so every
-    crash point lands exactly-once on both sinks."""
-    from ..functions.similarity import incremental_lsh_dedup, lsh_portable_buckets
-    from ..sinks.txlog import TxLogTable
+    Per batch: O(|batch| x num_tables) bucket rows against the index;
+    the verify fetches only colliding corpus vectors by id. The three
+    commits of a batch land in any order: a replay reads both index
+    tables as of before the batch, so it recomputes the same
+    survivors and skips the commits that already landed."""
+    from ..functions.similarity import incremental_lsh_dedup
 
     spark = vec_stream.sparkSession
-    buckets_dir = f"{index_dir}/buckets"
-    vectors_dir = f"{index_dir}/vectors"
-    out_table = TxLogTable(out_dir)
-
-    def load_index():
-        from ..util import try_read_parquet
-
-        idx_v = try_read_parquet(spark, vectors_dir)
-        if idx_v is None:
-            return None, None  # nothing verifiable yet
-        idx_b = try_read_parquet(spark, buckets_dir)
-        missing = (
-            idx_v
-            if idx_b is None
-            else idx_v.join(
-                idx_b.select(id_col).distinct(), id_col, "left_anti"
-            )
-        )
-        regen = lsh_portable_buckets(
-            missing, dim, num_tables, bits, id_col, vec_col
-        ).select(id_col, "t", "bucket")
-        idx_b = regen if idx_b is None else idx_b.unionByName(regen)
-        return idx_b, idx_v
+    buckets = _state_table(f"{index_dir}/buckets")
+    vectors = _state_table(f"{index_dir}/vectors")
+    out = TxLogTable(out_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        token = (checkpoint_dir, batch_id)
         batch_df = batch_df.cache()
         try:
-            idx_b, idx_v = load_index()
+            idx_v = vectors.read_before(spark, token)
+            # no vector index yet: nothing to verify a bucket hit against
+            idx_b = None if idx_v is None else buckets.read_before(spark, token)
             fresh, fresh_b, fresh_v = incremental_lsh_dedup(
                 batch_df, idx_b, idx_v, dim=dim, threshold=threshold,
                 num_tables=num_tables, bits=bits,
                 id_col=id_col, vec_col=vec_col,
             )
-            # single-commit survivor append with a per-(stream, batch)
-            # idempotence token: a replayed batch (crash before the
-            # vectors append below) skips instead of duplicating
-            out_table.append(
-                batch_df.join(fresh, id_col, "left_semi"),
-                txn=(checkpoint_dir, batch_id),
-            )
-            # vectors FIRST: they are the recoverable source of truth
-            fresh_v.write.mode("append").parquet(vectors_dir)
-            fresh_b.write.mode("append").parquet(buckets_dir)
+            out.append(batch_df.join(fresh, id_col, "left_semi"), txn=token)
+            vectors.append(_tagged(fresh_v, batch_id), txn=token)
+            buckets.append(_tagged(fresh_b, batch_id), txn=token)
         finally:
             batch_df.unpersist()
 
@@ -737,8 +692,8 @@ def streaming_chunk_dedup(
     new chunks (every window hashes into the persisted index), and a
     boilerplate block shared across distinct documents is stored
     once — the streaming mirror of the batch `chunk_dedup` query,
-    inheriting streaming_corpus_dedup's index semantics, scale shape,
-    and its documented two-append crash window."""
+    inheriting streaming_corpus_dedup's index semantics, scale shape
+    and commit path."""
     from pyspark.sql import functions as F
 
     from ..functions.text import words
@@ -795,10 +750,8 @@ def streaming_url_frontier(
     machinery with the canonical string as the dedup text — one
     implementation of incremental exact dedup serves text, chunks,
     AND the url frontier (the portable_id_hash single-source rule
-    applied to operators). Same scale/atomicity story as
-    streaming_corpus_dedup: (hash, id)-keyed anti-join per batch,
-    bucketed index at scale, one-batch-wide crash window with plain
-    parquet (txlog/Delta closes it)."""
+    applied to operators). Same scale and commit story as
+    streaming_corpus_dedup: (hash, id)-keyed anti-join per batch."""
     from ..plans.webprep import canonicalize_url
 
     canon = urls_stream.withColumn(
@@ -828,44 +781,42 @@ def streaming_source_quota(
     of the mixture allocators (mixture_epoch_allocation /
     training_mixture): each micro-batch's documents are admitted in
     deterministic ({source}, {id}) order until their source's
-    REMAINING budget is exhausted; admitted docs append to `out_dir`
-    and each batch appends its per-source spent-token deltas to the
-    parquet ledger at `ledger_dir`, so later batches continue exactly
+    REMAINING budget is exhausted; admitted docs are committed to
+    `out_dir` and each batch commits its per-source spent-token deltas
+    to the ledger at `ledger_dir`, so later batches continue exactly
     where this one stopped. The boundary document that would
     overshoot is rejected (hard cap — the epoch-cap stance), as is
     everything after it for that source.
 
     Scale: the ledger read is a source-cardinality aggregate of the
-    append-only delta table (compact it like the band index when
-    batches accumulate); the in-batch cumulative is a window
+    append-only delta table; the in-batch cumulative is a window
     PARTITIONED by source over batch-sized input; admitted text is
     written once and never reshuffled. State is one counter per
-    source.
+    source per batch.
 
-    Caveats: the ledger and corpus appends are two non-atomic writes
-    (same one-micro-batch crash window as streaming_corpus_dedup —
-    the txlog sink closes it). The ledger delta is written FIRST so
-    the failure mode is fail-closed: a crash between the two writes
-    under-admits (budget charged, docs not emitted) instead of
-    over-spending the hard cap on replay. Admission is by document,
-    so re-DELIVERED documents spend budget twice unless
-    streaming_corpus_dedup runs upstream (at-least-once composition
-    documented, not hidden)."""
+    A replayed batch reads the ledger as of before the batch, so a
+    crash between the ledger and corpus commits neither under-admits
+    nor over-spends. Admission is by document, so re-DELIVERED
+    documents (new batches carrying old content) spend budget twice
+    unless streaming_corpus_dedup runs upstream (at-least-once
+    composition documented, not hidden)."""
     from pyspark.sql.window import Window
 
     from ..functions import text as tx
+    from ..util import release_local_checkpoint
 
     spark = docs_stream.sparkSession
+    ledger = _state_table(ledger_dir)
+    out = TxLogTable(out_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..util import release_local_checkpoint, try_read_parquet
-
+        token = (checkpoint_dir, batch_id)
         batch_df = batch_df.cache()
         admitted = None
         try:
-            ledger = try_read_parquet(spark, ledger_dir)
-            if ledger is not None:
-                spent = ledger.groupBy(source_col).agg(
+            led = ledger.read_before(spark, token)
+            if led is not None:
+                spent = led.groupBy(source_col).agg(
                     F.sum("spent_tokens").cast("long").alias("spent")
                 )
             else:
@@ -894,30 +845,21 @@ def streaming_source_quota(
                 # docs of its source (contiguous-prefix admission keeps
                 # the ledger a single counter per source)
                 .filter(F.col("spent") + F.col("cum") <= budget_tokens)
+                # computed once for both commits
+                .localCheckpoint(eager=True)
             )
-            # eager lineage cut, NOT .cache(): admitted's lineage
-            # reads ledger_dir, and the ledger append below triggers
-            # CacheManager's recache-by-path, which would silently
-            # REMATERIALIZE a cached `admitted` against the
-            # just-updated ledger (every doc then looks over-budget
-            # and the batch admits nothing). The same recompute
-            # happens under cache eviction at scale. localCheckpoint
-            # freezes the admission decision before either write.
-            admitted = admitted.localCheckpoint(eager=True)
-            # ledger FIRST (fail-closed): a crash between the two
-            # appends leaves the budget charged with no docs emitted
-            # — replay then re-admits nothing for the charged tokens,
-            # so the hard cap is never over-spent (docstring contract)
-            (
-                admitted.groupBy(source_col)
-                .agg(F.sum("n_tokens").cast("long").alias("spent_tokens"))
-                .write.mode("append")
-                .parquet(ledger_dir)
+            ledger.append(
+                _tagged(
+                    admitted.groupBy(source_col).agg(
+                        F.sum("n_tokens").cast("long").alias("spent_tokens")
+                    ),
+                    batch_id,
+                ),
+                txn=token,
             )
-            (
-                batch_df.join(
-                    admitted.select(id_col), id_col, "left_semi"
-                ).write.mode("append").parquet(out_dir)
+            out.append(
+                batch_df.join(admitted.select(id_col), id_col, "left_semi"),
+                txn=token,
             )
         finally:
             batch_df.unpersist()
@@ -947,7 +889,7 @@ def streaming_contamination_screen(
     """Online benchmark decontamination (the streaming form of
     benchmark_contamination, r13): each micro-batch's documents are
     screened against the STATIC benchmark n-gram set built ONCE from
-    the parquet documents at `bench_dir`; clean docs append to
+    the parquet documents at `bench_dir`; clean docs are committed to
     `out_dir`, contaminated ones to `quarantine_dir` with their
     hit-gram count — so a corpus under continuous ingestion never
     admits eval-set leakage, and the quarantine is auditable.
@@ -955,14 +897,14 @@ def streaming_contamination_screen(
     Scale: the benchmark gram table is eval-sized, materialized once
     (eager localCheckpoint at stream construction) and BROADCAST into
     every batch join — per batch the work is one gram explode over
-    batch-sized input plus two appends; nothing shuffles on the gram
-    and no state grows with the stream. The two appends are
-    independent row sets (a doc lands in exactly one), so there is no
-    cross-write consistency window to order."""
+    batch-sized input plus two commits; nothing shuffles on the gram
+    and no state grows with the stream."""
     from ..functions import text as tx
     from ..util import release_local_checkpoint
 
     spark = docs_stream.sparkSession
+    out = TxLogTable(out_dir)
+    quarantine = TxLogTable(quarantine_dir)
     bench_grams = (
         spark.read.parquet(bench_dir)
         .filter(F.length(F.trim(F.col(text_col))) > 0)
@@ -978,6 +920,7 @@ def streaming_contamination_screen(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        token = (checkpoint_dir, batch_id)
         batch_df = batch_df.cache()
         hits = None
         try:
@@ -997,16 +940,11 @@ def streaming_contamination_screen(
                 .agg(F.count("*").cast("long").alias("n_hit_grams"))
                 .localCheckpoint(eager=True)
             )
-            (
-                batch_df.join(hits.select(id_col), id_col, "left_anti")
-                .write.mode("append")
-                .parquet(out_dir)
+            out.append(
+                batch_df.join(hits.select(id_col), id_col, "left_anti"),
+                txn=token,
             )
-            (
-                batch_df.join(hits, id_col)
-                .write.mode("append")
-                .parquet(quarantine_dir)
-            )
+            quarantine.append(batch_df.join(hits, id_col), txn=token)
         finally:
             batch_df.unpersist()
             # checkpoint blocks are only GC-reclaimed at driver GC —

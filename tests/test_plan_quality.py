@@ -150,67 +150,69 @@ def test_bucketed_join_is_shuffle_free(spark):
         spark.sql("DROP TABLE IF EXISTS bkt_users")
 
 
-def test_band_index_anti_join_is_index_side_shuffle_free(spark):
-    # the persisted MinHash band index is bucketed on its (band, bk)
-    # join key, so the per-batch screen shuffles ONLY the small batch
-    # side: exactly one Exchange in the whole anti-join plan, and the
-    # index side feeds the join straight from its bucketed scan
-    import contextlib
-    import io
-
+def test_band_index_anti_join_is_index_side_shuffle_free(spark, tmp_path):
+    # the persisted MinHash band index is a txlog table; the per-batch
+    # screen first semi-joins it against a BROADCAST of the batch's
+    # distinct (band, bk) keys, so the index is scanned once and never
+    # shuffled, whatever the corpus size: no Exchange between the index
+    # scan and its first join, and that join is a broadcast semi-join
     from pyspark.sql import functions as F
 
     from clickstreamtoclickhouse_spark.functions.dedup_text import (
+        incremental_minhash_dedup,
         minhash_portable_bands,
     )
     from clickstreamtoclickhouse_spark.plans import load
-    from clickstreamtoclickhouse_spark.sinks.bucketed import BandIndex
+    from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
 
     docs = load(spark, SF_DIR, "documents")
-    bands = minhash_portable_bands(docs, num_bands=8).select(
-        F.col("did").alias("doc_id"), "band", "bk"
+    index = TxLogTable(str(tmp_path / "bands"), stats_cols=("batch_id",))
+    index.append(
+        minhash_portable_bands(docs, num_bands=8).select(
+            F.col("did").alias("doc_id"), "band", "bk",
+            F.lit(0).cast("long").alias("batch_id"),
+        )
     )
-    idx = BandIndex(spark, "bkt_band_index", num_buckets=8)
-    spark.sql("DROP TABLE IF EXISTS bkt_band_index")
+    batch = docs.filter(F.col("doc_id") < 20)
+
+    def path_to_index_scan(node):
+        # root-to-leaf node path; the index scan is the one leaf that
+        # reads batch_id
+        kids = node.children()
+        if kids.isEmpty():
+            return [node] if "batch_id#" in node.output().toString() else None
+        for i in range(kids.size()):
+            path = path_to_index_scan(kids.apply(i))
+            if path:
+                return [node] + path
+        return None
+
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        idx.append(bands)
+        # only the explicit broadcast hint may broadcast: without it
+        # the index side would need a shuffle into a sort-merge join
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        batch = minhash_portable_bands(
-            docs.filter(F.col("doc_id") < 20), num_bands=8
-        ).select("band", "bk")
-        screened = batch.join(
-            idx.load().select("band", "bk"), ["band", "bk"], "left_anti"
+        fresh, _ = incremental_minhash_dedup(
+            batch, index.read_before(spark, ("ckpt", 1)), num_bands=8
         )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            screened.explain("formatted")
-        nodes = [
-            ln.strip() for ln in buf.getvalue().splitlines()
-            if ln.strip().startswith("(")
-        ]
-        # the index side must feed the join straight from its bucketed
-        # scan: in formatted output the join's right subtree prints
-        # contiguously before the join node, so no Exchange may appear
-        # between the index scan and the SortMergeJoin
-        i_scan = next(
-            i for i, n in enumerate(nodes) if "bkt_band_index" in n
+        plan = fresh._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        up = list(reversed(path_to_index_scan(plan)))
+        names = [n.nodeName() for n in up]
+        i_join = next(i for i, n in enumerate(names) if "Join" in n)
+        assert not any("Exchange" in n for n in names[:i_join]), names
+        join = up[i_join]
+        assert names[i_join] == "BroadcastHashJoin", names
+        assert join.joinType().toString() == "LeftSemi"
+        assert join.buildSide().toString() == "BuildRight"
+        # every batch doc with band rows has all its keys indexed
+        banded = minhash_portable_bands(batch, num_bands=8).select(
+            F.col("did").alias("doc_id")
         )
-        i_join = next(
-            i for i, n in enumerate(nodes) if "SortMergeJoin" in n
-        )
-        assert i_scan < i_join
-        between = nodes[i_scan:i_join]
-        assert not any(
-            "Exchange" in n for n in between
-        ), f"index side still shuffles:\n{nodes}"
-        # the whole plan carries exactly the two batch-side exchanges
-        # (the batch's own signature aggregation + its join shuffle)
-        assert sum("Exchange" in n for n in nodes) == 2, nodes
-        assert screened.count() == 0  # every batch band key is indexed
+        assert fresh.join(banded, "doc_id", "left_semi").count() == 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bkt_band_index")
 
 
 def test_aqe_splits_skewed_join_partitions(spark):

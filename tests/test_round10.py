@@ -9,6 +9,8 @@ import logging
 import pytest
 from pyspark.sql import functions as F
 
+from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
+
 
 # -- ADVICE r9 #1: NULL event times must be quarantined, not dropped --
 
@@ -57,11 +59,11 @@ def test_late_monitor_quarantines_null_ts(spark, tmp_path):
         q.stop()
 
     late = {r.v: r for r in
-            spark.read.parquet(str(tmp_path / "null_late")).collect()}
+            TxLogTable(str(tmp_path / "null_late")).read(spark).collect()}
     assert set(late) == {2, 3}
     assert late[2]._watermark is None  # pre-watermark: no wm to record
     assert str(late[3]._watermark) == "2024-01-01 09:00:00"
-    counts = spark.read.parquet(str(tmp_path / "null_counts")).collect()
+    counts = TxLogTable(str(tmp_path / "null_counts")).read(spark).collect()
     # v=1 and v=4 counted; accounting total = counted + quarantined
     assert sum(r.n_rows for r in counts) == 2
 

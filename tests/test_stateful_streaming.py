@@ -8,6 +8,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
 from clickstreamtoclickhouse_spark.streaming import ingest as st
 from clickstreamtoclickhouse_spark.streaming import stateful
 
@@ -169,12 +170,12 @@ def test_streaming_corpus_dedup(spark, tmp_path):
     finally:
         q.stop()
 
-    corpus = spark.read.parquet(out_dir)
+    corpus = TxLogTable(out_dir).read(spark)
     ids = sorted(r["doc_id"] for r in corpus.collect())
     # batch1 keeps min-id of the dup pair + the singleton; batch2
     # admits only the genuinely new doc
     assert ids == [1, 3, 12]
-    index = spark.read.parquet(index_dir)
+    index = TxLogTable(index_dir).read(spark)
     assert index.count() == 3 == index.distinct().count()
 
 
@@ -220,8 +221,63 @@ def test_streaming_corpus_dedup_survives_restart(spark, tmp_path):
     finally:
         q.stop()
 
-    ids = sorted(r["doc_id"] for r in spark.read.parquet(out_dir).collect())
+    ids = sorted(r["doc_id"] for r in TxLogTable(out_dir).read(spark).collect())
     assert ids == [1, 6]
+
+
+def test_streaming_corpus_dedup_new_checkpoint_over_old_index_raises(
+    spark, tmp_path
+):
+    # a new checkpoint restarts batch ids at 0, so "state before this
+    # batch" would be a fraction of the index and re-sent content
+    # would be admitted again: the state table refuses a second stream
+    landing = tmp_path / "docs"
+    landing.mkdir()
+    index_dir = str(tmp_path / "index")
+    out_dir = str(tmp_path / "corpus")
+    with open(landing / "b1.json", "w") as f:
+        f.write(json.dumps({"doc_id": 1, "text": "alpha beta"}) + "\n")
+
+    def run(ckpt):
+        stream = spark.readStream.schema("doc_id long, text string").json(
+            str(landing)
+        )
+        q = stateful.streaming_corpus_dedup(
+            stream, index_dir, out_dir, str(tmp_path / ckpt)
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run("ckpt1")
+    with pytest.raises(Exception, match="state table of the stream"):
+        run("ckpt2")
+    ids = sorted(r["doc_id"] for r in TxLogTable(out_dir).read(spark).collect())
+    assert ids == [1]
+
+
+def test_streaming_corpus_dedup_rejects_unlogged_index(spark, tmp_path):
+    # an index dir of raw parquet (written without the commit log)
+    # must not be taken for an empty index
+    landing = tmp_path / "docs"
+    landing.mkdir()
+    index_dir = tmp_path / "index"
+    spark.createDataFrame([("h",)], "content_hash string").write.parquet(
+        str(index_dir)
+    )
+    with open(landing / "b1.json", "w") as f:
+        f.write(json.dumps({"doc_id": 1, "text": "alpha beta"}) + "\n")
+    stream = spark.readStream.schema("doc_id long, text string").json(str(landing))
+    q = stateful.streaming_corpus_dedup(
+        stream, str(index_dir), str(tmp_path / "corpus"), str(tmp_path / "ckpt")
+    )
+    try:
+        with pytest.raises(Exception, match="no _txlog commit"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert not (tmp_path / "corpus").exists()
 
 
 def test_stream_merge_upsert(spark, tmp_path):
@@ -386,12 +442,12 @@ def test_streaming_bloom_dedup(spark, tmp_path):
     finally:
         q.stop()
 
-    corpus = spark.read.parquet(out_dir)
+    corpus = TxLogTable(out_dir).read(spark)
     ids = sorted(r["doc_id"] for r in corpus.collect())
     # bloom has no false negatives: re-sent content can never re-enter;
     # the distinct texts don't collide at m=8192 (deterministic)
     assert ids == [1, 3, 12, 13]
-    bits = spark.read.parquet(bits_dir)
+    bits = TxLogTable(bits_dir).read(spark)
     # bounded state: at most k=4 positions per admitted doc, no dups
     assert bits.count() == bits.distinct().count() <= 16
 
@@ -434,7 +490,7 @@ def test_streaming_dq_monitor(spark, tmp_path):
 
     metrics = {
         r["check_name"]: r
-        for r in spark.read.parquet(str(tmp_path / "metrics")).collect()
+        for r in TxLogTable(str(tmp_path / "metrics")).read(spark).collect()
     }
     assert len(metrics) == 3
     assert all(m["n_rows"] == 4 for m in metrics.values())
@@ -444,7 +500,7 @@ def test_streaming_dq_monitor(spark, tmp_path):
     assert metrics["unique_event_id_placeholder"]["n_violations"] == 0
     assert metrics["unique_event_id_placeholder"]["passed"]
 
-    quar = spark.read.parquet(str(tmp_path / "quarantine")).collect()
+    quar = TxLogTable(str(tmp_path / "quarantine")).read(spark).collect()
     by_id = {r["event_id"]: list(r["_violated"]) for r in quar}
     assert by_id == {2: ["not_null_user_id"], 3: ["nonneg_value"]}
 
@@ -554,113 +610,10 @@ def test_streaming_fuzzy_corpus_dedup(spark, tmp_path):
     finally:
         q.stop()
 
-    ids = sorted(r["doc_id"] for r in spark.read.parquet(out_dir).collect())
+    ids = sorted(r["doc_id"] for r in TxLogTable(out_dir).read(spark).collect())
     assert ids == [1, 2, 11]
-    idx = spark.read.parquet(index_dir)
+    idx = TxLogTable(index_dir).read(spark)
     assert idx.count() == 3 * 8
-
-
-def test_band_index_compaction_preserves_rows(spark):
-    """Each BandIndex.append lays down its own file set; compact()
-    must rewrite the table into one set (temp table + catalog rename)
-    without changing its contents or losing the bucket layout."""
-    from clickstreamtoclickhouse_spark.functions.dedup_text import (
-        minhash_portable_bands,
-    )
-    from clickstreamtoclickhouse_spark.sinks.bucketed import BandIndex
-    from pyspark.sql import functions as F
-
-    idx = BandIndex(spark, "bkt_compaction_t", num_buckets=4)
-    spark.sql("DROP TABLE IF EXISTS bkt_compaction_t")
-    try:
-        assert idx.load() is None
-        b1 = spark.createDataFrame(
-            [(1, _LONG_A), (2, _LONG_B)], "doc_id long, text string"
-        )
-        b2 = spark.createDataFrame(
-            [(3, _LONG_C)], "doc_id long, text string"
-        )
-        for b in (b1, b2):
-            idx.append(
-                minhash_portable_bands(b, num_bands=8).select(
-                    F.col("did").alias("doc_id"), "band", "bk"
-                )
-            )
-        rows_before = sorted(
-            (r["doc_id"], r["band"], r["bk"]) for r in idx.load().collect()
-        )
-        files_before, files_after = idx.compact()
-        assert files_after < files_before
-        rows_after = sorted(
-            (r["doc_id"], r["band"], r["bk"]) for r in idx.load().collect()
-        )
-        assert rows_after == rows_before
-        # still appendable (bucket spec survived the rename)
-        idx.append(
-            minhash_portable_bands(
-                spark.createDataFrame(
-                    [(4, _LONG_A_NEAR)], "doc_id long, text string"
-                ),
-                num_bands=8,
-            ).select(F.col("did").alias("doc_id"), "band", "bk")
-        )
-        assert idx.load().count() == len(rows_before) + 8
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_compaction_t")
-        spark.sql("DROP TABLE IF EXISTS bkt_compaction_t__compacting")
-
-
-def test_streaming_fuzzy_corpus_dedup_bucketed_index(spark, tmp_path):
-    """The index_table variant must reproduce the parquet-dir
-    variant's admit/reject semantics with the index living in a
-    bucketed catalog table (batch-side-only shuffle pinned in
-    test_plan_quality)."""
-    import json as _json
-
-    landing = tmp_path / "fuzzy_docs_b"
-    landing.mkdir()
-    out_dir = str(tmp_path / "fuzzy_corpus_b")
-    ckpt = str(tmp_path / "ckpt_fuzzy_b")
-    spark.sql("DROP TABLE IF EXISTS bkt_fuzzy_stream_idx")
-
-    def write_file(name, rows):
-        with open(landing / name, "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-
-    write_file("b1.json", [
-        {"doc_id": 1, "text": _LONG_A},
-        {"doc_id": 2, "text": _LONG_B},
-    ])
-    schema = "doc_id long, text string"
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).json(str(landing))
-    q = stateful.streaming_fuzzy_corpus_dedup(
-        stream, index_dir="", out_dir=out_dir, checkpoint_dir=ckpt,
-        index_table="bkt_fuzzy_stream_idx", compact_every=1,
-    )
-    try:
-        q.processAllAvailable()
-        write_file("b2.json", [
-            {"doc_id": 10, "text": _LONG_A_NEAR},
-            {"doc_id": 11, "text": _LONG_C},
-        ])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    try:
-        ids = sorted(
-            r["doc_id"] for r in spark.read.parquet(out_dir).collect()
-        )
-        assert ids == [1, 2, 11]
-        idx = spark.table("bkt_fuzzy_stream_idx")
-        assert idx.count() == 3 * 8
-        assert {r["doc_id"] for r in idx.select("doc_id").collect()} == {1, 2, 11}
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_fuzzy_stream_idx")
-        spark.sql("DROP TABLE IF EXISTS bkt_fuzzy_stream_idx__compacting")
 
 
 def test_streaming_embedding_dedup(spark, tmp_path):
@@ -712,9 +665,9 @@ def test_streaming_embedding_dedup(spark, tmp_path):
         r["vec_id"] for r in TxLogTable(out_dir).read(spark).collect()
     )
     assert ids == [1, 2, 11]
-    idx_v = spark.read.parquet(f"{index_dir}/vectors")
+    idx_v = TxLogTable(f"{index_dir}/vectors").read(spark)
     assert sorted(r["vec_id"] for r in idx_v.collect()) == [1, 2, 11]
-    idx_b = spark.read.parquet(f"{index_dir}/buckets")
+    idx_b = TxLogTable(f"{index_dir}/buckets").read(spark)
     assert {r["vec_id"] for r in idx_b.select("vec_id").collect()} == {1, 2, 11}
 
 
@@ -812,101 +765,6 @@ def test_streaming_heavy_hitters(spark, tmp_path):
         assert hot["decrements"] >= 2
 
 
-def test_band_index_compact_swap_recovers_from_crash(spark):
-    """A crash between compact()'s two renames must not lose the
-    index: _recover() adopts the compacted temp (or rolls back to the
-    backup) on the next access instead of reporting an empty index."""
-    from clickstreamtoclickhouse_spark.sinks.bucketed import BandIndex
-
-    idx = BandIndex(spark, "bkt_crash_idx", num_buckets=4)
-    for t in ("bkt_crash_idx", "bkt_crash_idx__compacting",
-              "bkt_crash_idx__precompact"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    rows = spark.createDataFrame(
-        [(1, 0, "k0"), (2, 1, "k1")], "doc_id long, band int, bk string"
-    )
-    idx.append(rows)
-    n0 = idx.load().count()
-    # simulate the mid-swap crash state: temp fully written, live
-    # renamed away to the backup, process dies before temp -> live
-    spark.sql(
-        "CREATE TABLE bkt_crash_idx__compacting AS SELECT * FROM bkt_crash_idx"
-    )
-    spark.sql(
-        "ALTER TABLE bkt_crash_idx RENAME TO bkt_crash_idx__precompact"
-    )
-    assert idx.exists()  # recovery adopted the compacted copy
-    assert idx.load().count() == n0
-    assert not spark.catalog.tableExists("bkt_crash_idx__precompact")
-    # rollback path: only the backup survives
-    spark.sql("ALTER TABLE bkt_crash_idx RENAME TO bkt_crash_idx__precompact")
-    assert idx.exists()
-    assert idx.load().count() == n0
-    spark.sql("DROP TABLE IF EXISTS bkt_crash_idx")
-
-
-def test_streaming_embedding_dedup_heals_torn_index(spark, tmp_path):
-    """Crash window between the two index appends: vectors written,
-    buckets missing. The next batch must regenerate the missing
-    bucket rows from the vector table (the source of truth) and still
-    reject a re-sent near-duplicate — no crash-loop, no re-admission."""
-    import json as _json
-    import shutil
-
-    landing = tmp_path / "vec_stream2"
-    landing.mkdir()
-    index_dir = str(tmp_path / "vec_index2")
-    out_dir = str(tmp_path / "vec_corpus2")
-    ckpt = str(tmp_path / "ckpt_vec2")
-
-    def base_vec(axis, dim=8):
-        return [1.0 if i == axis else 0.0 for i in range(dim)]
-
-    def write_file(name, rows):
-        with open(landing / name, "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-
-    write_file("b1.json", [{"vec_id": 1, "embedding": base_vec(0)}])
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<float>"
-    ).option("maxFilesPerTrigger", 1).json(str(landing))
-    q = stateful.streaming_embedding_dedup(
-        stream, index_dir, out_dir, ckpt, dim=8
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # simulate the crash window: the bucket append never happened
-    shutil.rmtree(f"{index_dir}/buckets")
-    # re-deliver vec 1's content under a new id + one new vector
-    write_file("b2.json", [
-        {"vec_id": 20, "embedding": base_vec(0)},
-        {"vec_id": 21, "embedding": base_vec(3)},
-    ])
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<float>"
-    ).option("maxFilesPerTrigger", 1).json(str(landing))
-    q = stateful.streaming_embedding_dedup(
-        stream, index_dir, out_dir, ckpt, dim=8
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
-
-    ids = sorted(
-        r["vec_id"] for r in TxLogTable(out_dir).read(spark).collect()
-    )
-    assert ids == [1, 21]  # the exact re-send was still rejected
-    idx_b = spark.read.parquet(f"{index_dir}/buckets")
-    # regenerated bucket rows cover the new admit (vector 1's rows
-    # regenerate again next batch — idempotent union, never data loss)
-    assert {r["vec_id"] for r in idx_b.select("vec_id").collect()} == {21}
-
-
 def test_streaming_embedding_dedup_out_dir_crash_replay_no_dups(
     spark, tmp_path
 ):
@@ -959,9 +817,9 @@ def test_streaming_embedding_dedup_out_dir_crash_replay_no_dups(
         r["vec_id"] for r in TxLogTable(out_dir).read(spark).collect()
     )
     assert out_ids == [1, 2]  # exactly once, despite full replay
-    idx_v = spark.read.parquet(f"{index_dir}/vectors")
+    idx_v = TxLogTable(f"{index_dir}/vectors").read(spark)
     assert sorted(r["vec_id"] for r in idx_v.collect()) == [1, 2]
-    idx_b = spark.read.parquet(f"{index_dir}/buckets")
+    idx_b = TxLogTable(f"{index_dir}/buckets").read(spark)
     assert {r["vec_id"] for r in idx_b.select("vec_id").collect()} == {1, 2}
 
 
@@ -1027,7 +885,7 @@ def test_streaming_drift_monitor_flags_shift(spark, tmp_path):
         q.stop()
     rows = {
         r.batch_id: r
-        for r in spark.read.parquet(str(tmp_path / "drift_metrics")).collect()
+        for r in TxLogTable(str(tmp_path / "drift_metrics")).read(spark).collect()
     }
     assert rows[0].n_rows == 1000 and rows[1].n_rows == 1000
     assert rows[0].psi < 0.05 and not rows[0].alert
@@ -1071,7 +929,7 @@ def test_drift_monitor_excludes_nulls_consistently(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    rows = spark.read.parquet(str(tmp_path / "drift_null_metrics")).collect()
+    rows = TxLogTable(str(tmp_path / "drift_null_metrics")).read(spark).collect()
     assert len(rows) == 1
     # n_rows counts only binned (non-NULL) rows; same-population PSI ~ 0
     assert rows[0].n_rows == 500
@@ -1158,7 +1016,7 @@ def test_streaming_chunk_dedup_rejects_recrawled_text(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    corpus = spark.read.parquet(str(tmp_path / "chunk_corpus"))
+    corpus = TxLogTable(str(tmp_path / "chunk_corpus")).read(spark)
     srcs = {r.src_doc_id for r in corpus.select("src_doc_id").collect()}
     assert srcs == {1, 3}, srcs
     # 80 tokens / stride 32 -> 3 windows per doc, once each
@@ -1211,10 +1069,10 @@ def test_streaming_late_arrival_monitor_accounts_both_sides(
     finally:
         q.stop()
 
-    late = spark.read.parquet(str(tmp_path / "late_rows")).collect()
+    late = TxLogTable(str(tmp_path / "late_rows")).read(spark).collect()
     assert [r.v for r in late] == [3]
     assert str(late[0]._watermark) == "2024-01-01 09:00:00"
-    counts = spark.read.parquet(str(tmp_path / "late_counts"))
+    counts = TxLogTable(str(tmp_path / "late_counts")).read(spark)
     total = {
         str(r.window_start): 0 for r in counts.collect()
     }
@@ -1281,9 +1139,9 @@ def test_streaming_late_monitor_replay_uses_previous_watermark(
     import os
 
     assert not os.path.exists(str(tmp_path / "replay_late")) or (
-        spark.read.parquet(str(tmp_path / "replay_late")).count() == 0
+        TxLogTable(str(tmp_path / "replay_late")).read(spark).count() == 0
     )
-    counts = spark.read.parquet(str(tmp_path / "replay_counts")).collect()
+    counts = TxLogTable(str(tmp_path / "replay_counts")).read(spark).collect()
     assert sum(r.n_rows for r in counts) == 1
 
 
@@ -1326,7 +1184,7 @@ def test_streaming_url_frontier_collapses_variants(spark, tmp_path):
     finally:
         q.stop()
 
-    frontier = spark.read.parquet(out_dir)
+    frontier = TxLogTable(out_dir).read(spark)
     ids = sorted(r["doc_id"] for r in frontier.collect())
     assert ids == [1, 3, 12]
     # the admitted rows carry the canonical form
@@ -1383,10 +1241,10 @@ def test_streaming_source_quota(spark, tmp_path):
     finally:
         q.stop()
 
-    ids = sorted(r.doc_id for r in spark.read.parquet(out_dir).collect())
+    ids = sorted(r.doc_id for r in TxLogTable(out_dir).read(spark).collect())
     assert ids == [1, 2, 3, 10, 13]
     ledger = (
-        spark.read.parquet(ledger_dir)
+        TxLogTable(ledger_dir).read(spark)
         .groupBy("source")
         .sum("spent_tokens")
         .collect()
@@ -1441,11 +1299,127 @@ def test_streaming_contamination_screen(spark, tmp_path):
     finally:
         q.stop()
 
-    clean = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
+    clean = {r.doc_id for r in TxLogTable(out_dir).read(spark).collect()}
     quar = {
         r.doc_id: r.n_hit_grams
-        for r in spark.read.parquet(quarantine_dir).collect()
+        for r in TxLogTable(quarantine_dir).read(spark).collect()
     }
     assert clean == {11, 13}
     assert set(quar) == {10, 12}
     assert quar[10] == 1 and quar[12] == 2
+
+
+def _kill_and_replay(spark, tmp_path, monkeypatch, start, batches, tables, crash_table):
+    """Feed `batches` (JSON rows, one micro-batch each) to the query
+    `start(root, landing)` builds, twice: once clean, and once with
+    batch 1's commit to `crash_table` raising, after which the query
+    restarts on the same checkpoint and replays batch 1. Returns the
+    rows of every table in `tables` for both runs."""
+    runs = []
+    for crash in (False, True):
+        root = tmp_path / ("crash" if crash else "clean")
+        landing = root / "landing"
+        landing.mkdir(parents=True)
+
+        def run():
+            q = start(root, landing)
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+
+        for i, rows in enumerate(batches):
+            with open(landing / f"b{i}.json", "w") as f:
+                for r in rows:
+                    f.write(json.dumps(r) + "\n")
+            if crash and i == 1:
+                commit = TxLogTable._commit
+
+                def crashing(self, *a, **k):
+                    if self.path == root / crash_table:
+                        raise RuntimeError("simulated crash")
+                    return commit(self, *a, **k)
+
+                with monkeypatch.context() as m:
+                    m.setattr(TxLogTable, "_commit", crashing)
+                    with pytest.raises(Exception, match="simulated crash"):
+                        run()
+            run()
+        runs.append({
+            t: sorted(tuple(r) for r in TxLogTable(str(root / t)).read(spark).collect())
+            for t in tables
+        })
+    return runs
+
+
+def test_streaming_source_quota_crash_replay_matches_clean_run(
+    spark, tmp_path, monkeypatch
+):
+    """Crash after batch 1's ledger commit, before its corpus commit:
+    the replay reads the ledger as of before batch 1, so it admits
+    what the first attempt admitted instead of charging batch 1's
+    spend twice (which admitted nothing of it)."""
+
+    def doc(i, src, n):
+        return {"doc_id": i, "source": src,
+                "text": " ".join(f"w{k}" for k in range(n))}
+
+    def start(root, landing):
+        stream = spark.readStream.schema(
+            "doc_id long, source string, text string"
+        ).option("maxFilesPerTrigger", 1).json(str(landing))
+        return stateful.streaming_source_quota(
+            stream, str(root / "ledger"), str(root / "admitted"),
+            str(root / "ckpt"), budget_tokens=10,
+        )
+
+    clean, crashed = _kill_and_replay(
+        spark, tmp_path, monkeypatch, start,
+        [
+            [doc(1, "A", 4), doc(2, "A", 3), doc(3, "B", 9)],
+            [doc(10, "A", 3), doc(11, "A", 2), doc(12, "B", 2),
+             doc(13, "C", 10), doc(14, "C", 1)],
+        ],
+        ["ledger", "admitted"],
+        "admitted",
+    )
+    assert sorted(r[0] for r in clean["admitted"]) == [1, 2, 3, 10, 13]
+    assert crashed == clean
+
+
+def test_streaming_embedding_dedup_crash_replay_matches_clean_run(
+    spark, tmp_path, monkeypatch
+):
+    """Crash between batch 1's vectors and buckets commits: the replay
+    screens against the index as of before batch 1, so the admitted
+    vector does not collide with its own committed vector, and the
+    missing bucket rows land."""
+
+    def axis(i, eps=0.0):
+        v = [1.0 if k == i else 0.0 for k in range(8)]
+        v[(i + 1) % 8] += eps
+        return v
+
+    def start(root, landing):
+        stream = spark.readStream.schema(
+            "vec_id long, embedding array<float>"
+        ).option("maxFilesPerTrigger", 1).json(str(landing))
+        return stateful.streaming_embedding_dedup(
+            stream, str(root / "index"), str(root / "out"),
+            str(root / "ckpt"), dim=8,
+        )
+
+    clean, crashed = _kill_and_replay(
+        spark, tmp_path, monkeypatch, start,
+        [
+            [{"vec_id": 1, "embedding": axis(0)},
+             {"vec_id": 2, "embedding": axis(1)}],
+            [{"vec_id": 10, "embedding": axis(0, 0.001)},
+             {"vec_id": 11, "embedding": axis(2)}],
+        ],
+        ["out", "index/vectors", "index/buckets"],
+        "index/buckets",
+    )
+    assert sorted(r[0] for r in clean["out"]) == [1, 2, 11]
+    assert {r[0] for r in clean["index/buckets"]} == {1, 2, 11}
+    assert crashed == clean

@@ -22,6 +22,71 @@ def test_append_and_read_roundtrip(spark, tmp_path):
     assert got == [(1, 10), (2, 20), (3, 30)]
 
 
+def test_token_append_replays_log_once_per_attempt(spark, tmp_path, monkeypatch):
+    # a token append replays the log once for its replay check and
+    # once per commit attempt; a skipped replay reads it once
+    t = TxLogTable(str(tmp_path / "t"))
+    t.append(_df(spark, [(1, 10)]), txn=("s", 0))
+    t.append(_df(spark, [(2, 20)]), txn=("s", 1))
+    replays = []
+    entries = TxLogTable._log_entries
+    monkeypatch.setattr(
+        TxLogTable, "_log_entries", lambda self: replays.append(1) or entries(self)
+    )
+    assert t.append(_df(spark, [(3, 30)]), txn=("s", 2)) == 2
+    assert len(replays) == 2
+    replays.clear()
+    assert t.append(_df(spark, [(3, 30)]), txn=("s", 2)) == 2
+    assert len(replays) == 1
+    assert t.snapshot().txns == {"s": 2}
+
+
+def test_vacuum_keeps_idempotence_tokens(spark, tmp_path):
+    # the fold replaces the pruned entries, tokens included: a batch
+    # replayed after a vacuum is still skipped
+    t = TxLogTable(str(tmp_path / "t"))
+    t.append(_df(spark, [(0, 0)]), txn=("ckpt", 0))
+    t.append(_df(spark, [(1, 10)]), txn=("ckpt", 1))
+    t.append(_df(spark, [(2, 20)]), txn=("other", 5))
+    t.vacuum()
+    assert len(t.history()) == 1
+    assert t.snapshot().txns == {"ckpt": 1, "other": 5}
+    t.append(_df(spark, [(1, 10)]), txn=("ckpt", 1))  # replay
+    t.append(_df(spark, [(3, 30)]), txn=("ckpt", 2))
+    assert sorted(r["id"] for r in t.read(spark).collect()) == [0, 1, 2, 3]
+
+
+def test_unlogged_parquet_dir_is_rejected(spark, tmp_path):
+    # parquet files with no _txlog/ were written without the commit
+    # log; as a new table their rows would be invisible
+    import re
+
+    raw = tmp_path / "raw"
+    _df(spark, [(1, 10)]).write.parquet(str(raw))
+    t = TxLogTable(str(raw), stats_cols=("batch_id",))
+    for use in (
+        lambda: t.snapshot(),
+        lambda: t.read_before(spark, ("ckpt", 0)),
+        lambda: t.append(_df(spark, [(2, 20)])),
+    ):
+        with pytest.raises(ValueError, match=re.escape(str(raw))):
+            use()
+    # nothing was committed beside the old files
+    assert not t.log_dir.exists()
+
+
+def test_read_before_binds_state_to_one_stream(spark, tmp_path):
+    t = TxLogTable(str(tmp_path / "t"), stats_cols=("batch_id",))
+    assert t.read_before(spark, ("a", 0)) is None
+    for b in range(3):
+        t.append(
+            spark.createDataFrame([(b, b)], "id long, batch_id long"), txn=("a", b)
+        )
+    assert sorted(r["id"] for r in t.read_before(spark, ("a", 2)).collect()) == [0, 1]
+    with pytest.raises(ValueError, match="'a'"):
+        t.read_before(spark, ("b", 0))
+
+
 def test_idempotent_txn_append_skips_replay(spark, tmp_path):
     # Delta txnAppId/txnVersion semantics: a replayed (app, ver)
     # append is a no-op; a HIGHER ver for the same app lands; an

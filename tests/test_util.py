@@ -190,6 +190,24 @@ def test_library_code_never_caches():
     assert not found, found
 
 
+def test_stream_operators_write_only_through_txlog():
+    """`streaming/` has no `.write` (`.writeStream` starts a query; a
+    table write is a TxLogTable commit) and no `try_read_parquet`
+    state read (state is read with `TxLogTable.read_before`)."""
+    found = []
+    for path in sorted((PKG / "streaming").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = (
+                node.attr if isinstance(node, ast.Attribute)
+                else node.id if isinstance(node, ast.Name)
+                else node.name if isinstance(node, ast.alias)
+                else None
+            )
+            if name in ("write", "try_read_parquet"):
+                found.append(f"{path.relative_to(PKG)}:{node.lineno}:{name}")
+    assert not found, found
+
+
 def test_checkpoint_rdds_released_in_one_place():
     """`.rdd().unpersist` appears only inside
     util.release_local_checkpoint."""
