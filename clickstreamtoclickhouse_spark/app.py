@@ -15,7 +15,10 @@ Differences from the reference, by design:
 from __future__ import annotations
 
 import argparse
+import functools
 import sys
+
+from pyspark.sql import DataFrame
 
 from . import config as config_mod
 from .naming import decamelize
@@ -36,14 +39,14 @@ def _build_warehouses(spark, conf: config_mod.AppConf, default_root: str) -> lis
     return out
 
 
-def store_table(wh: Warehouse, namespace: str, name: str, df) -> None:
+def store_table(wh: Warehouse, namespace: str, name: str, df) -> DataFrame | None:
     """Full per-table write contract (send_to_warehouse.py:298-307 +
     clickhouse.py:193-215): ensure the table exists and additively
     evolve it to the batch's columns (S9/S10), reconcile batch values
     against the table's ACTUAL schema — on conflict the table wins and
     unfixable values are nulled + quarantined (C2-C5) — add any table
-    columns the batch lacks (P6), append, and append the misfit
-    side-output to the `misfits` table (S12)."""
+    columns the batch lacks (P6) and append. Returns the misfit
+    side-output for ``store_misfits`` (None when nothing can misfit)."""
     non_null = NON_NULL_COLUMNS + (USERS_EXTRA_NON_NULL if name == "users" else ())
     inferred = {f.name: f.dataType for f in df.schema.fields}
     actual = wh.ensure_table_structure(
@@ -52,13 +55,24 @@ def store_table(wh: Warehouse, namespace: str, name: str, df) -> None:
     clean, misfits = coerce.reconcile_types(df, actual, table_name=name)
     clean = project.add_missing_columns(clean, actual)
     wh.insert_df(namespace, name, clean)
-    if not misfits.isEmpty():
-        # Real column types, not {}: ClickHouseWarehouse special-cases
-        # the misfits DDL, but generic sinks (Delta) render CREATE
-        # TABLE from this dict and an empty dict is a parse error.
-        misfit_types = {f.name: f.dataType for f in MISFITS_SPARK_SCHEMA.fields}
-        wh.create_table(namespace, "misfits", misfit_types, ())
-        wh.insert_df(namespace, "misfits", misfits)
+    return misfits
+
+
+def store_misfits(wh: Warehouse, namespace: str, misfits: list[DataFrame | None]) -> None:
+    """S12: land one batch's ``store_table`` misfit side-outputs as one
+    union — one job to see if it has rows, then one create + append."""
+    frames = [m for m in misfits if m is not None]
+    if not frames:
+        return
+    union = functools.reduce(DataFrame.unionByName, frames)
+    if union.isEmpty():
+        return
+    # Real column types, not {}: ClickHouseWarehouse special-cases the
+    # misfits DDL, but generic sinks (Delta) render CREATE TABLE from
+    # this dict and an empty dict is a parse error.
+    misfit_types = {f.name: f.dataType for f in MISFITS_SPARK_SCHEMA.fields}
+    wh.create_table(namespace, "misfits", misfit_types, ())
+    wh.insert_df(namespace, "misfits", union)
 
 
 def store_result(
@@ -66,15 +80,18 @@ def store_result(
 ) -> None:
     """S13 multiplex: every table goes to every configured warehouse
     (send_to_warehouse.py:98-100,158-159). Store order mirrors the
-    reference (identities first — users derive from them; :133-139)."""
+    reference (identities first — users derive from them; :133-139).
+    Only the tables the census counted non-empty are written."""
     ordered = ["identities", "users", "tracks", "screens", "pages", "groups", "aliases"]
     tables = result.all_tables()
     names = ordered + [n for n in tables if n not in ordered]
     for wh in warehouses:
-        for name in names:
-            df = tables.get(name)
-            if df is not None and not df.isEmpty():
-                store_table(wh, namespace, name, df)
+        misfits = [
+            store_table(wh, namespace, name, tables[name])
+            for name in names
+            if result.rows.get(name)
+        ]
+        store_misfits(wh, namespace, misfits)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -187,11 +204,9 @@ def main(argv: list[str] | None = None) -> int:
     else:
         result = pipe.ingest_json_dir(args.source_dir)
         store_result(result, warehouses, namespace)
-        if result.corrupt is not None and not result.corrupt.isEmpty():
-            print(
-                f"warning: {result.corrupt.count()} unparseable lines quarantined",
-                file=sys.stderr,
-            )
+        n_corrupt = result.corrupt.count()
+        if n_corrupt:
+            print(f"warning: {n_corrupt} unparseable lines quarantined", file=sys.stderr)
         result.unpersist()
     for wh in warehouses:
         wh.close()

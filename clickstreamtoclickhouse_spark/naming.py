@@ -37,16 +37,3 @@ def clean_key(name: str) -> str:
 def normalize_key(name: str) -> str:
     """Full reference key pipeline: decamelize then clean."""
     return clean_key(decamelize(name))
-
-
-# SQL-expression equivalents (Column-level, JVM-side) for when a *value*
-# needs the same normalization — e.g. track event names
-# (send_to_warehouse.py:48-51). Kept as SQL strings so both the Spark
-# plan and a DuckDB oracle can share them.
-
-def decamelize_sql(col: str) -> str:
-    """SQL expr producing decamelize(col) using regexp_replace chains."""
-    return (
-        "lower(regexp_replace(regexp_replace({c}, '([A-Z]+)([A-Z][a-z])', '$1_$2'),"
-        " '([a-z0-9])([A-Z])', '$1_$2'))"
-    ).format(c=col)

@@ -68,7 +68,7 @@ def reconcile_types(
     expected: dict[str, T.DataType],
     table_name: str,
     message_id_col: str = "message_id",
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame | None]:
     """C2-C5: coerce columns to the sink schema; quarantine failures.
 
     Returns ``(clean_df, misfits_df)``. ``clean_df`` has every shared
@@ -76,7 +76,8 @@ def reconcile_types(
     the reference nulling the offending value,
     dataframe_util.py:156-162,178-185). ``misfits_df`` has one row per
     (row, failed column) with the reference's diagnostic shape
-    (clickhouse.py:222-233).
+    (clickhouse.py:222-233), or is None when no column needed a
+    checked cast (nothing can misfit).
 
     The caller should cache `df` if it will also write `clean_df`
     (both outputs share the scan; misfits are computed from the same
@@ -108,40 +109,26 @@ def reconcile_types(
                 )
             )
 
-    if not casts:
-        return df, _empty_misfits(df)
+    clean = df.withColumns(casts) if casts else df
+    if not diags:
+        return clean, None
 
     mid = (
         F.col(message_id_col).cast("string")
         if message_id_col in df.columns
         else F.lit(None).cast("string")
     )
-    if diags:
-        with_diag = df.withColumn(
-            "_misfit_diags", F.array_compact(F.array(*diags))
+    misfits = (
+        df.withColumn("_misfit_diags", F.array_compact(F.array(*diags)))
+        .filter(F.size("_misfit_diags") > 0)
+        .select(mid.alias("message_id"), F.explode("_misfit_diags").alias("d"))
+        .select(
+            "message_id",
+            "d.table_name",
+            "d.column_name",
+            "d.column_value",
+            "d.expected_data_type",
+            "d.actual_data_type",
         )
-        misfits = (
-            with_diag.filter(F.size("_misfit_diags") > 0)
-            .select(mid.alias("message_id"), F.explode("_misfit_diags").alias("d"))
-            .select(
-                "message_id",
-                "d.table_name",
-                "d.column_name",
-                "d.column_value",
-                "d.expected_data_type",
-                "d.actual_data_type",
-            )
-        )
-    else:
-        misfits = _empty_misfits(df)
-
-    clean = df.withColumns(casts)
-    return clean, misfits
-
-
-def _empty_misfits(df: DataFrame) -> DataFrame:
-    schema = (
-        "message_id string, table_name string, column_name string, "
-        "column_value string, expected_data_type string, actual_data_type string"
     )
-    return df.sparkSession.createDataFrame([], schema)
+    return clean, misfits

@@ -22,13 +22,15 @@ unix_timestamp_in_millis is a true Int64.
 Scale design: ONE distributed read; the flattened batch is cached
 before the 6-way type split (each split is a predicate over the cached
 scan, not a re-read); all transforms are Column expressions; the only
-driver-side collect is the distinct track-event-name list (mirrors
-A1, send_to_warehouse.py:215 — bounded by the number of distinct
-event NAMES, not rows).
+driver-side collect is the row census of every destination table
+(``_census``), bounded by the number of distinct event NAMES (A1,
+send_to_warehouse.py:215), not rows. Batch and stream ``send`` share
+one path: ``ingest_ndjson`` -> ``readers.parse_events`` -> ``_process``.
 """
 
 from __future__ import annotations
 
+import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +42,7 @@ from .sources import readers
 from .tables import (
     DEFAULT_TABLES,
     EVENT_TYPE_TO_TABLE,
+    EVENT_TYPES,
     TRACKS_COLUMN_PREFIXES,
     TRACKS_STRUCTURE,
 )
@@ -47,12 +50,14 @@ from .tables import (
 
 @dataclass
 class IngestResult:
-    """All destination tables for one ingested batch."""
+    """All destination tables for one ingested batch; ``rows`` counts
+    each table's rows (the sink skips the empty ones)."""
 
     tables: dict[str, DataFrame]
     event_tables: dict[str, DataFrame] = field(default_factory=dict)
     corrupt: DataFrame | None = None
     cached: list[DataFrame] = field(default_factory=list)
+    rows: dict[str, int] = field(default_factory=dict)
 
     def all_tables(self) -> dict[str, DataFrame]:
         return {**self.tables, **self.event_tables}
@@ -77,8 +82,6 @@ class EventPipeline:
         namespace: str = "events",
         skip_fields: tuple[str, ...] = (),
         extra_timestamps: dict[str, str] | None = None,
-        max_array_elements: int | None = None,
-        per_event_tables: bool = True,
         max_event_tables: int = 1000,
     ) -> None:
         self.spark = spark
@@ -86,19 +89,20 @@ class EventPipeline:
         self.namespace = decamelize(namespace)
         self.skip_fields = skip_fields
         self.extra_timestamps = extra_timestamps or {}
-        self.max_array_elements = max_array_elements
-        self.per_event_tables = per_event_tables
         self.max_event_tables = max_event_tables
 
     # -- entry points --------------------------------------------------
 
     def ingest_json_dir(self, path: str) -> IngestResult:
-        raw = readers.read_ndjson(
-            self.spark, path, max_array_elements=self.max_array_elements
-        )
-        result = self._process(raw.events, corrupt=raw.corrupt)
-        if raw.cached is not None:
-            result.cached.append(raw.cached)
+        return self.ingest_ndjson(readers.read_ndjson(self.spark, path))
+
+    def ingest_ndjson(self, raw: DataFrame) -> IngestResult:
+        """Parse a raw NDJSON frame (a batch read, or one micro-batch of
+        the landing stream) and run the pipeline over it."""
+        parsed = readers.parse_events(raw)
+        result = self._process(parsed.events, corrupt=parsed.corrupt)
+        if parsed.cached is not None:
+            result.cached.append(parsed.cached)
         return result
 
     def ingest_parquet(self, path: str) -> IngestResult:
@@ -114,12 +118,12 @@ class EventPipeline:
         df = normalize.parse_timestamps(df)
         df = normalize.add_unix_millis(df)
         df = normalize.add_extra_timestamps(df, self.extra_timestamps)
-        df = df.cache()  # one scan feeds the 6-way split
+        df = df.cache()  # one scan feeds the 6-way split and the census
 
-        by_type = project.split_by_type(df)
-        tables: dict[str, DataFrame] = {}
-
-        tracks_all = normalize.normalize_event_names(by_type["track"])
+        tables = {
+            EVENT_TYPE_TO_TABLE[t]: split for t, split in project.split_by_type(df).items()
+        }
+        tracks_all = normalize.normalize_event_names(tables["tracks"])
         # common tracks table keeps base + configured prefixes only
         # (properties_* excluded; send_to_warehouse.py:193-197)
         tables["tracks"] = project.select_columns(
@@ -127,12 +131,6 @@ class EventPipeline:
             keep=tuple(TRACKS_STRUCTURE),
             prefixes=TRACKS_COLUMN_PREFIXES,
         )
-
-        tables["identities"] = by_type["identify"]
-        tables["pages"] = by_type["page"]
-        tables["screens"] = by_type["screen"]
-        tables["groups"] = by_type["group"]
-        tables["aliases"] = by_type["alias"]
 
         # users = identities + ver (int64 ns), user_id non-null
         # (send_to_warehouse.py:161-189); latest-per-user is a READ
@@ -143,49 +141,71 @@ class EventPipeline:
             users = users.filter(users["user_id"].isNotNull())
         tables["users"] = users
 
+        rows, names = self._census(df)
+        # A1: each per-event table is a filter over the cached batch
+        # (send_to_warehouse.py:214-232).
         event_tables: dict[str, DataFrame] = {}
-        if self.per_event_tables and "event" in tracks_all.columns:
-            # A1: the only distinct+sort in the reference
-            # (send_to_warehouse.py:215). Driver-side list of event
-            # NAMES (small); each per-event table is a filter over the
-            # cached batch. The write path partitions by event instead
-            # when sinking to one lakehouse table (sinks.parquet_sink).
-            # Cardinality guard: the collect is bounded by
-            # max_event_tables + 1, so a pathological high-cardinality
-            # `event` column (ids leaking into names) can neither OOM
-            # the driver nor fan out unbounded tables — overflow names
-            # stay in the common `tracks` table and we warn.
-            cap = self.max_event_tables
-            # NULL names are excluded *before* the limit probe so a
-            # NULL can't consume one of the cap+1 slots and mask the
-            # overflow warning (rows with NULL event stay in `tracks`).
-            rows = (
-                tracks_all.select("event")
-                .filter(F.col("event").isNotNull())
-                .distinct()
-                .orderBy("event")
-                .limit(cap + 1)
-                .collect()
-            )
-            names = [r[0] for r in rows]
-            if len(names) > cap:
-                import warnings
-
-                warnings.warn(
-                    f"more than {cap} distinct event names; creating "
-                    f"per-event tables for the first {cap} only (rest "
-                    "remain queryable in `tracks`)",
-                    stacklevel=2,
-                )
-                names = names[:cap]
-            for name in names:
-                # name-collision escape prefix (send_to_warehouse.py:219-223)
-                table = f"esc_{name}" if name in DEFAULT_TABLES else name
-                event_tables[table] = project.filter_event(tracks_all, name)
+        for name, n in names.items():
+            # name-collision escape prefix (send_to_warehouse.py:219-223)
+            table = f"esc_{name}" if name in DEFAULT_TABLES else name
+            event_tables[table] = project.filter_event(tracks_all, name)
+            rows[table] = n
 
         return IngestResult(
-            tables=tables, event_tables=event_tables, corrupt=corrupt, cached=[df]
+            tables=tables, event_tables=event_tables, corrupt=corrupt,
+            cached=[df], rows=rows,
         )
+
+    def _census(self, df: DataFrame) -> tuple[dict[str, int], dict[str, int]]:
+        """Rows per default table and per normalized track event name:
+        one rollup over (type, name), with a subtotal per Segment type
+        (level 1) and a row per non-NULL name (level 0). Junk types and
+        NULL names are dropped before the limit, so neither can take one
+        of the ``max_event_tables`` + 1 name slots and mask the overflow
+        warning. Ids leaking into names can neither OOM the driver nor
+        fan out unbounded tables; overflow rows stay in `tracks`."""
+        rows = {table: 0 for table in (*EVENT_TYPE_TO_TABLE.values(), "users")}
+        if "type" not in df.columns:
+            return rows, {}
+        cap = self.max_event_tables
+        typ = F.col("type")
+        if "event" in df.columns:
+            df = normalize.normalize_event_names(df)
+            name = F.when(typ == "track", F.col("event"))
+        else:
+            name = F.lit(None).cast("string")
+        # users: identify rows with a user_id (all without the column)
+        uid = F.col("user_id") if "user_id" in df.columns else F.lit(1)
+        census = (
+            df.where(typ.isin(*EVENT_TYPES))
+            .rollup(typ.alias("type"), name.alias("name"))
+            .agg(
+                F.grouping_id().alias("level"),
+                F.count("*").alias("n"),
+                F.count(uid).alias("n_users"),
+            )
+            .where((F.col("level") == 1) | F.col("name").isNotNull())
+            .orderBy(F.col("level").desc(), "name")
+            .limit(len(EVENT_TYPES) + cap + 1)
+            .collect()
+        )
+        names: dict[str, int] = {}
+        for r in census:
+            if r["level"] == 1:
+                rows[EVENT_TYPE_TO_TABLE[r["type"]]] = r["n"]
+                if r["type"] == "identify":
+                    rows["users"] = r["n_users"]
+            else:
+                names[r["name"]] = r["n"]
+        if len(names) > cap:
+            warnings.warn(
+                f"more than {cap} distinct event names; creating "
+                f"per-event tables for the first {cap} only (rest "
+                "remain queryable in `tracks`)",
+                stacklevel=3,
+            )
+            names = dict(list(names.items())[:cap])
+        return rows, names
 
 
 __all__ = ["EventPipeline", "IngestResult", "EVENT_TYPE_TO_TABLE"]

@@ -864,16 +864,18 @@ def _bpe_oracle_sql(final: str = "merges") -> str:
     same greedy left-to-right merge application (run parity handles
     overlapping same-symbol pairs). All counts are integers — no float
     portability concerns anywhere. `final`: 'merges' emits the learned
-    merge table; 'tokens' emits the resulting per-word tokenization."""
+    merge table; 'tokens' emits the resulting per-word tokenization.
+    CTEs are MATERIALIZED: DuckDB would otherwise inline each round's
+    several references to the previous round, re-expanding the chain."""
     ctes = [
-        f"""vocab AS (
+        f"""vocab AS MATERIALIZED (
       SELECT w AS word, count(*) AS freq
       FROM (
         SELECT unnest({tx.SQL_WORDS.format(t='lower(text)')}) AS w
         FROM documents WHERE length(trim(text)) > 0
       ) GROUP BY w
     ),
-    l0 AS (
+    l0 AS MATERIALIZED (
       SELECT word, freq, t.x['pos'] AS pos, t.x['sym'] AS sym
       FROM vocab,
            unnest(list_transform(range(length(word)),
@@ -882,36 +884,36 @@ def _bpe_oracle_sql(final: str = "merges") -> str:
     ]
     for t in range(_BPE_ROUNDS):
         ctes.append(
-            f"""p{t} AS (
+            f"""p{t} AS MATERIALIZED (
       SELECT sym AS a, lead(sym) OVER (PARTITION BY word ORDER BY pos) AS b,
              freq
       FROM l{t}
     ),
-    pc{t} AS (
+    pc{t} AS MATERIALIZED (
       SELECT a, b, CAST(sum(freq) AS BIGINT) AS cnt
       FROM p{t} WHERE b IS NOT NULL GROUP BY a, b
     ),
-    b{t} AS (SELECT a, b, cnt FROM pc{t} ORDER BY cnt DESC, a, b LIMIT 1),
-    x{t} AS (
+    b{t} AS MATERIALIZED (SELECT a, b, cnt FROM pc{t} ORDER BY cnt DESC, a, b LIMIT 1),
+    x{t} AS MATERIALIZED (
       SELECT word, freq, pos, sym,
              row_number() OVER (PARTITION BY word ORDER BY pos) AS idx,
              lead(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
       FROM l{t}
     ),
-    fl{t} AS (
+    fl{t} AS MATERIALIZED (
       SELECT *,
              CASE WHEN sym = (SELECT a FROM b{t})
                    AND nxt = (SELECT b FROM b{t}) THEN 1 ELSE 0 END AS hit
       FROM x{t}
     ),
-    rn{t} AS (
+    rn{t} AS MATERIALIZED (
       SELECT *,
              CASE WHEN hit = 1 THEN
                idx - row_number() OVER (PARTITION BY word, hit ORDER BY idx)
              END AS grp
       FROM fl{t}
     ),
-    mg{t} AS (
+    mg{t} AS MATERIALIZED (
       SELECT *,
              CASE WHEN hit = 1
                    AND (row_number() OVER (PARTITION BY word, grp ORDER BY idx)
@@ -919,7 +921,7 @@ def _bpe_oracle_sql(final: str = "merges") -> str:
                   THEN 1 ELSE 0 END AS merged
       FROM rn{t}
     ),
-    l{t + 1} AS (
+    l{t + 1} AS MATERIALIZED (
       SELECT word, freq, pos,
              CASE WHEN merged = 1 THEN sym || nxt ELSE sym END AS sym
       FROM (

@@ -22,8 +22,6 @@ shorter rows. We reproduce that with ONE aggregate pass computing
 partial agg — a single cheap job even at scale), then
 ``try_element_at`` (null past the end, matching the reference's
 missing-key -> NaN; ``element_at`` raises there under ANSI mode).
-``max_array_elements`` caps the expansion to keep schema width bounded
-on hostile data (documented deviation when the cap bites).
 """
 
 from __future__ import annotations
@@ -48,11 +46,7 @@ def _array_lengths(df: DataFrame, cols: list[str]) -> dict[str, int]:
     return {c: max(row[c] or 0, 0) for c in cols}
 
 
-def flatten(
-    df: DataFrame,
-    max_array_elements: int | None = None,
-    normalize_names: bool = True,
-) -> DataFrame:
+def flatten(df: DataFrame) -> DataFrame:
     """Flatten all struct/array columns to scalar columns.
 
     Iterates one nesting level per pass (arrays of structs surface new
@@ -60,17 +54,14 @@ def flatten(
     consecutive projections into one, so the physical plan stays a
     single projection over the scan regardless of depth.
     """
-    rename = normalize_key if normalize_names else (lambda s: s)
     while True:
         nested = [f for f in df.schema.fields if _is_nested(f.dataType)]
         arrays = [f.name for f in df.schema.fields if isinstance(f.dataType, T.ArrayType)]
         lengths = _array_lengths(df, arrays)
-        if max_array_elements is not None:
-            lengths = {c: min(n, max_array_elements) for c, n in lengths.items()}
 
         if not nested:
             # final pass: just normalize any remaining names
-            out_names = [rename(f.name) for f in df.schema.fields]
+            out_names = [normalize_key(f.name) for f in df.schema.fields]
             if out_names == [f.name for f in df.schema.fields]:
                 return df
             return df.select(
@@ -83,11 +74,11 @@ def flatten(
         cols: list[Column] = []
         names: list[str] = []
         for f in df.schema.fields:
-            base = rename(f.name)
+            base = normalize_key(f.name)
             if isinstance(f.dataType, T.StructType):
                 for sub in f.dataType.fields:
                     cols.append(F.col(f"`{f.name}`.`{sub.name}`"))
-                    names.append(f"{base}_{rename(sub.name)}")
+                    names.append(f"{base}_{normalize_key(sub.name)}")
             elif isinstance(f.dataType, T.ArrayType):
                 for i in range(lengths.get(f.name, 0)):
                     # 1-based; null past the end of a shorter row

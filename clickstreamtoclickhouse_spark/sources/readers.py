@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from .flatten import flatten
 
 CORRUPT_COL = "_corrupt_record"
+#: NDJSON parse mode of the batch read and the landing stream
+NDJSON_OPTIONS = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}
 
 
 @dataclass
@@ -45,40 +47,38 @@ class RawEvents:
     cached: DataFrame | None = None
 
 
-def read_ndjson(
-    spark: SparkSession,
-    path: str,
-    max_array_elements: int | None = None,
-    schema=None,
-) -> RawEvents:
-    """Read Segment-Spec NDJSON(.gz) files from a path/glob and return
-    flat snake_case events.
+def read_ndjson(spark: SparkSession, path: str) -> DataFrame:
+    """Read Segment-Spec NDJSON(.gz) files from a path/glob, PERMISSIVE,
+    unparseable lines kept whole in ``_corrupt_record``.
 
     ``path`` may be a local dir, an ``s3a://`` prefix, or a glob —
     anything Hadoop's FileInputFormat accepts; all files are read in
-    parallel (vs the reference's sequential loop).
+    parallel (vs the reference's sequential loop). ``parse_events``
+    turns the result into flat events.
     """
-    reader = spark.read.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", CORRUPT_COL
-    )
-    if schema is not None:
-        reader = reader.schema(schema)
-    raw = reader.json(path)
+    return spark.read.options(**NDJSON_OPTIONS).json(path)
 
-    cached = None
-    if CORRUPT_COL in raw.columns:
-        # Spark disallows querying only the corrupt-record column from
-        # a raw JSON scan; cache the parsed batch (it is about to be
-        # consumed multiple times by the 6-way type split anyway)
-        raw = cached = raw.cache()
-        corrupt = raw.filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
-        parsed = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    else:
-        corrupt = spark.createDataFrame([], f"{CORRUPT_COL} string")
-        parsed = raw
+
+def parse_events(raw: DataFrame) -> RawEvents:
+    """Split a raw NDJSON frame (batch read or stream micro-batch) into
+    the quarantined corrupt lines and flat snake_case events — the one
+    parse step both ``send`` modes run."""
+    split = _split_corrupt(raw)
+    split.events = flatten(split.events)
+    return split
+
+
+def _split_corrupt(raw: DataFrame) -> RawEvents:
+    if CORRUPT_COL not in raw.columns:
+        corrupt = raw.sparkSession.createDataFrame([], f"{CORRUPT_COL} string")
+        return RawEvents(events=raw, corrupt=corrupt)
+    # Spark disallows querying only the corrupt-record column from a
+    # raw scan; cache the parsed batch (it is about to be consumed
+    # multiple times by the 6-way type split anyway)
+    cached = raw.cache()
     return RawEvents(
-        events=flatten(parsed, max_array_elements=max_array_elements),
-        corrupt=corrupt,
+        events=cached.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL),
+        corrupt=cached.filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL),
         cached=cached,
     )
 
@@ -116,17 +116,7 @@ def read_csv_events(
         reader = reader.schema(schema)
     else:
         reader = reader.option("inferSchema", "true")
-    raw = reader.csv(path)
-
-    cached = None
-    if CORRUPT_COL in raw.columns:
-        raw = cached = raw.cache()
-        corrupt = raw.filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
-        parsed = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    else:
-        corrupt = spark.createDataFrame([], f"{CORRUPT_COL} string")
-        parsed = raw
-    return RawEvents(events=parsed, corrupt=corrupt, cached=cached)
+    return _split_corrupt(reader.csv(path))
 
 
 def read_orc_events(spark: SparkSession, path: str) -> DataFrame:

@@ -4,11 +4,13 @@ The reference is batch-only — repeated CLI runs over bounded S3
 directories (seghouse/app.py:23-27), i.e. manual micro-batching with
 at-least-once delivery and eventual dedup via ReplacingMergeTree
 (clickhouse.py:85-88). The Spark-native continuous mode: a file-source
-stream over the landing directory; each micro-batch runs the SAME
-batch pipeline inside foreachBatch and appends through the warehouse
-sink. Idempotency story matches the reference: at-least-once appends
-+ Q1/Q2 dedup views at read (exactly-once would need a transactional
-sink — documented, not required for parity).
+stream over the landing directory; foreachBatch hands each raw
+micro-batch to ``EventPipeline.ingest_ndjson``, the entry
+``ingest_json_dir`` uses, so both modes parse (quarantining corrupt
+lines), split and land one way. Idempotency story matches the
+reference: at-least-once appends + Q1/Q2 dedup views at read
+(exactly-once would need a transactional sink — documented, not
+required for parity).
 
 Late data: the reference has no watermarking — late events simply land
 in the date partition of their embedded timestamp (clickhouse.py:86).
@@ -17,9 +19,8 @@ partition column comes from the event's own timestamp). Watermarked
 stateful aggregation is available as a capability *addition* via
 ``windowed_counts``.
 
-Scale: maxFilesPerTrigger bounds batch size; the pipeline inside
-foreachBatch is all Column expressions, so each micro-batch scales
-exactly like the batch path.
+Scale: the pipeline inside foreachBatch is all Column expressions, so
+each micro-batch scales exactly like the batch path.
 """
 
 from __future__ import annotations
@@ -28,18 +29,25 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..pipeline import EventPipeline, IngestResult
+from ..sources.readers import CORRUPT_COL, NDJSON_OPTIONS, read_ndjson
 
 
-def infer_event_schema(spark: SparkSession, path: str, sample_files: int = 1):
+def infer_event_schema(spark: SparkSession, path: str) -> T.StructType:
     """File-source streams need a fixed schema; infer it from the
     existing landing files (batch read — runs once at stream start).
     New columns appearing later land in micro-batches as nulls until
     the stream is restarted — the streaming analog of the reference's
-    per-batch additive evolution (SURVEY §7.3 Hard-1)."""
-    return spark.read.json(path).schema
+    per-batch additive evolution (SURVEY §7.3 Hard-1). The schema
+    always carries ``_corrupt_record``, so every micro-batch keeps its
+    malformed lines whole there for quarantine."""
+    schema = read_ndjson(spark, path).schema
+    if CORRUPT_COL not in schema.fieldNames():
+        schema.add(CORRUPT_COL, T.StringType())
+    return schema
 
 
 def stream_events(
@@ -47,32 +55,24 @@ def stream_events(
     path: str,
     pipeline: EventPipeline,
     sink: Callable[[IngestResult, int], None],
-    schema=None,
-    max_files_per_trigger: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> StreamingQuery:
     """readStream(json dir) -> foreachBatch(batch pipeline -> sink).
 
     ``sink(result, batch_id)`` receives the fully processed
     IngestResult per micro-batch; pass e.g. a closure writing each
-    table through a Warehouse.
+    table through a Warehouse (``app.store_result``).
     """
-    schema = schema or infer_event_schema(spark, path)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(path)
+    schema = infer_event_schema(spark, path)
+    stream = spark.readStream.schema(schema).options(**NDJSON_OPTIONS).json(path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sources.flatten import flatten
-
-        flat = flatten(batch_df, max_array_elements=pipeline.max_array_elements)
-        result = pipeline.ingest_df(flat)
+        result = pipeline.ingest_ndjson(batch_df)
         try:
             sink(result, batch_id)
         finally:
-            # each micro-batch caches its flattened scan; release it or
-            # a long-running stream accumulates dead cached batches
+            # each micro-batch caches its scans; release them or a
+            # long-running stream accumulates dead cached batches
             result.unpersist()
 
     writer = stream.writeStream.foreachBatch(process_batch)

@@ -201,6 +201,38 @@ def test_parquet_sink_schema_and_reader_setup_start_no_job(spark, tmp_path):
     assert sorted(r["n"] or 0 for r in df.collect()) == [0, 0, 7, 7]
 
 
+def test_store_result_runs_one_job_per_landed_table(spark, tmp_path):
+    # the landing writes each non-empty table with one job and decides
+    # misfits with at most one more job plus their write: no per-table
+    # emptiness probe. A batch without screen events or misfits
+    # creates neither table.
+    from clickstreamtoclickhouse_spark.app import store_result
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _write_ndjson(landing, "b.json", [e for e in FIXTURE_LINES if e["type"] != "screen"])
+    wh = ParquetWarehouse(spark, str(tmp_path / "lake"))
+    res = EventPipeline(spark).ingest_json_dir(str(landing))
+
+    sc = spark.sparkContext
+    group = f"landing-probe-{tmp_path.name}"
+    sc.setJobGroup(group, "landing job count")
+    try:
+        store_result(res, [wh], "ns")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        res.unpersist()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    landed = sorted(p.name for p in (tmp_path / "lake" / "ns").iterdir())
+    assert landed == sorted([
+        "aliases", "cartand_checkout_flow", "groups", "identities", "pages",
+        "product_viewed", "tracks", "users",
+    ])
+    assert jobs <= len(landed) + 2, (jobs, landed)
+
+
 def test_clickhouse_ddl_generation():
     cols = {
         "message_id": T.StringType(),
@@ -255,7 +287,7 @@ def test_streaming_ingest(spark, tmp_path):
     landing.mkdir()
     _write_ndjson(landing, "batch1.json", FIXTURE_LINES[:3])
     wh = ParquetWarehouse(spark, str(tmp_path / "lake"))
-    pipe = EventPipeline(spark, per_event_tables=False)
+    pipe = EventPipeline(spark)
 
     def sink(result, batch_id):
         for name, df in result.tables.items():
@@ -279,6 +311,56 @@ def test_streaming_ingest(spark, tmp_path):
     assert tracks.count() == 2  # m-001 x2
     idents = wh.read_table("ns", "identities")
     assert idents.count() == 2  # m-002 batch1 + m-007 batch2
+
+
+def test_streaming_ingest_lands_what_batch_ingest_lands(spark, tmp_path):
+    # one parse path: a landing dir with two event types and one
+    # malformed line lands the same tables, columns and rows through
+    # the stream as through the batch read, and both quarantine the
+    # bad line instead of landing a `_corrupt_record` column
+    from clickstreamtoclickhouse_spark.app import store_result
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _write_ndjson(landing, "events.json", FIXTURE_LINES)
+    with open(landing / "bad.json", "w") as f:
+        f.write('{"messageId": "m-badjson", "type": "track",\n')
+    pipe = EventPipeline(spark)
+    corrupt = {}
+
+    batch_wh = ParquetWarehouse(spark, str(tmp_path / "batch"))
+    res = pipe.ingest_json_dir(str(landing))
+    try:
+        store_result(res, [batch_wh], "ns")
+        corrupt["batch"] = res.corrupt.count()
+    finally:
+        res.unpersist()
+
+    stream_wh = ParquetWarehouse(spark, str(tmp_path / "stream"))
+
+    def sink(result, batch_id):
+        store_result(result, [stream_wh], "ns")
+        corrupt["stream"] = corrupt.get("stream", 0) + result.corrupt.count()
+
+    q = st.stream_events(
+        spark, str(landing), pipe, sink, checkpoint_dir=str(tmp_path / "ckpt")
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    assert corrupt == {"batch": 1, "stream": 1}
+    tables = sorted(p.name for p in (tmp_path / "batch" / "ns").iterdir())
+    assert tables == sorted(p.name for p in (tmp_path / "stream" / "ns").iterdir())
+    assert {"tracks", "identities", "product_viewed"} <= set(tables)
+    for t in tables:
+        b, s = batch_wh.read_table("ns", t), stream_wh.read_table("ns", t)
+        assert sorted(b.columns) == sorted(s.columns), t
+        assert "_corrupt_record" not in s.columns, t
+        cols = sorted(b.columns)
+        rows = [sorted(map(str, df.select(*cols).collect())) for df in (b, s)]
+        assert rows[0] == rows[1], t
 
 
 def test_windowed_counts_streaming(spark, tmp_path):
@@ -310,7 +392,7 @@ def test_store_table_reconciles_and_quarantines(spark, tmp_path):
     # coerce the batch to the table's ACTUAL schema, and land
     # unfixable values in the misfits table — the C2-C5 contract
     # wired end-to-end, not just unit-level
-    from clickstreamtoclickhouse_spark.app import store_table
+    from clickstreamtoclickhouse_spark.app import store_misfits, store_table
 
     wh = ParquetWarehouse(spark, str(tmp_path / "lake"))
     wh.connect()
@@ -326,7 +408,7 @@ def test_store_table_reconciles_and_quarantines(spark, tmp_path):
         [("m2", "2026-01-02 00:00:00", "abc"), ("m3", "2026-01-02 00:00:00", "42")],
         "message_id string, timestamp string, n string",
     ).withColumn("timestamp", F.to_timestamp("timestamp"))
-    store_table(wh, "ns", "t", df2)
+    store_misfits(wh, "ns", [store_table(wh, "ns", "t", df2)])
 
     back = wh.read_table("ns", "t")
     vals = {r.message_id: r.n for r in back.collect()}
@@ -477,7 +559,7 @@ def test_schema_evolution_e2e_against_embedded_derby(spark, tmp_path):
     _execute/_query_pairs, reconcile_types, add_missing_columns, the
     jdbc writes — is the production code. The ClickHouse DDL STRINGS
     themselves are contract-tested in test_clickhouse_ddl_contract."""
-    from clickstreamtoclickhouse_spark.app import store_table
+    from clickstreamtoclickhouse_spark.app import store_misfits, store_table
 
     url = f"jdbc:derby:{tmp_path}/derbyevo;create=true"
     wh = _DerbyDialectWarehouse(
@@ -502,7 +584,7 @@ def test_schema_evolution_e2e_against_embedded_derby(spark, tmp_path):
         "message_id string, timestamp string, received_at string, "
         "n string, plan string",
     )
-    store_table(wh, "ns", "tracks", b2)
+    store_misfits(wh, "ns", [store_table(wh, "ns", "tracks", b2)])
 
     def read_back(table):
         return (
