@@ -68,8 +68,8 @@ def store_misfits(wh: Warehouse, namespace: str, misfits: list[DataFrame | None]
     if union.isEmpty():
         return
     # Real column types, not {}: ClickHouseWarehouse special-cases the
-    # misfits DDL, but generic sinks (Delta) render CREATE TABLE from
-    # this dict and an empty dict is a parse error.
+    # misfits DDL, but a sink that renders CREATE TABLE from this dict
+    # would fail on an empty one.
     misfit_types = {f.name: f.dataType for f in MISFITS_SPARK_SCHEMA.fields}
     wh.create_table(namespace, "misfits", misfit_types, ())
     wh.insert_df(namespace, "misfits", union)

@@ -25,19 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), nullable=False),
-        T.StructField("kind", T.StringType(), nullable=False),  # image|audio|video
-        T.StructField("content", T.BinaryType(), nullable=True),
-        T.StructField("mime", T.StringType(), nullable=True),
-        T.StructField("width", T.IntegerType(), nullable=True),
-        T.StructField("height", T.IntegerType(), nullable=True),
-        T.StructField("duration_ms", T.LongType(), nullable=True),
-        T.StructField("sample_rate", T.IntegerType(), nullable=True),
-    ]
-)
-
 FEATURE_DIM = 8
 
 _FEATURES_SCHEMA = T.StructType(

@@ -75,16 +75,6 @@ def punct_ratio(text: Column) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(punct / n)
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    """Stopword tokens / total tokens (counts repeats, unlike
-    lang_score)."""
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    ws = words(F.lower(text))
-    hits = F.size(F.filter(ws, lambda w: F.array_contains(sw, w)))
-    n = F.size(ws)
-    return F.when(n == 0, F.lit(0.0)).otherwise(hits / n)
-
-
 def quality_score(text: Column) -> Column:
     """Composite quality heuristic in [0,1]: rewards mid-length docs
     and normal word length, penalizes punctuation soup. Formula is

@@ -1,10 +1,12 @@
-"""Type inference & coercion with misfit quarantine (SURVEY.md §2.4).
+"""Type coercion with misfit quarantine (SURVEY.md §2.4).
 
 The reference's "analyzer": infer a logical type per column from data
 (dataframe_util.py:11-40), reconcile against the sink table's schema,
 and coerce row values — unfixable values are NULLed and a diagnostic
 row goes to the `misfits` table (dataframe_util.py:99-185,
-clickhouse.py:217-252).
+clickhouse.py:217-252). Inference (C1) is Spark's JSON reader, whose
+union-inferred types ``app.store_table`` hands to the sink as is; this
+module reconciles and coerces.
 
 Spark-first: coercion is ``try_cast`` (ANSI cast-or-null — matches
 Python ``int(v)``/``float(v)`` raising on junk); misfit capture is a
@@ -19,46 +21,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..tables import DataType, SPARK_TO_DT, TIMESTAMP_FIELDS
-
-
-def infer_logical_types(
-    df: DataFrame,
-    timestamp_fields: tuple[str, ...] = TIMESTAMP_FIELDS,
-    with_data: list[str] | None = None,
-) -> dict[str, DataType]:
-    """C1: per-column logical types (dataframe_util.py:11-40).
-
-    The reference infers from the FIRST non-null Python value; Spark's
-    JSON reader already did a full-pass union inference, so we map its
-    schema onto the produced logical subset {STRING, FLOAT64, INT64,
-    BOOLEAN, DATETIME}. String columns named like timestamp fields are
-    classified DATETIME (dataframe_util.py:22-23). Columns with no
-    data are skipped when `with_data` is provided
-    (dataframe_util.py:16-19).
-    """
-    out: dict[str, DataType] = {}
-    for f in df.schema.fields:
-        if with_data is not None and f.name not in with_data:
-            continue
-        if f.name in timestamp_fields:
-            out[f.name] = DataType.DATETIME
-            continue
-        dt = SPARK_TO_DT.get(type(f.dataType))
-        if dt is None:
-            raise TypeError(
-                f"Cannot infer logical type for column {f.name}: {f.dataType}"
-            )
-        # collapse the int family to INT64 like the reference's
-        # inference (it only ever produces INT64, dataframe_util.py:30)
-        if dt in (DataType.INT8, DataType.INT16, DataType.INT32):
-            dt = DataType.INT64
-        if dt is DataType.FLOAT32:
-            dt = DataType.FLOAT64
-        out[f.name] = dt
-    return out
-
 
 _CASTABLE = (T.LongType, T.DoubleType, T.BooleanType, T.TimestampType, T.IntegerType)
 

@@ -1,23 +1,11 @@
-"""Incremental materialized rollup over a date-partitioned table.
+"""Incremental materialized rollup over a txlog table.
 
-The 100 TB pattern this pins: a daily rollup over an append-only
-event table must NOT rescan history — each refresh aggregates only
-the date partitions that are new (or explicitly invalidated) and
-rewrites exactly those partitions of the rollup, leaving the rest
-untouched. Reading N days of history to refresh 1 day is the single
-most common self-inflicted cost bug in warehouse pipelines.
-
-Mechanics used (all stock Spark):
-- partition discovery from the FILESYSTEM listing (both tables are
-  `partitionBy("event_date")` parquet), so "what's new" costs a
-  directory listing, not a data scan;
-- an `isin` filter on the partition column, which Catalyst turns
-  into PartitionFilters — the scan physically touches only the new
-  partitions (pinned by test);
-- dynamic partition overwrite (`partitionOverwriteMode=dynamic`), so
-  `mode("overwrite")` replaces only the partitions present in the
-  written batch — re-running a date is idempotent, other dates keep
-  their files.
+The 100 TB pattern this pins: a rollup over an append-only event
+table must NOT rescan history — each refresh aggregates only the data
+files committed since the last refresh and lands the merged result in
+one ``TxLogTable`` commit. Reading N days of history to refresh 1 day
+is the single most common self-inflicted cost bug in warehouse
+pipelines.
 
 Reference counterpart: none (the reference recomputes nothing — it
 only appends); this implements the table-maintenance contract a
@@ -26,87 +14,8 @@ ClickHouse user gets from materialized views, Spark-natively.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-
-def _partition_values(spark: SparkSession, path: str, col: str) -> set[str]:
-    """Distinct values of a hive-style partition column from the
-    directory listing (no parquet data read)."""
-    from ..util import try_read_parquet
-
-    # None only for "no partitions yet" (first run of a rollup); any
-    # other error propagates — silently returning an empty set would
-    # make the caller conclude "already current".
-    df = try_read_parquet(spark, path)
-    if df is None:
-        return set()
-    if col not in df.columns:
-        return set()
-    # selecting only the partition column reads listing metadata, not
-    # row groups (PartitionValues are in the file paths)
-    return {str(r[col]) for r in df.select(col).distinct().collect()}
-
-
-def incremental_daily_rollup(
-    spark: SparkSession,
-    events_dir: str,
-    rollup_dir: str,
-    partition_col: str = "event_date",
-    refresh: set[str] | None = None,
-) -> list[str]:
-    """Bring `rollup_dir` (per-(date, event_type) counts + cent-exact
-    value sums) up to date with `events_dir`. Processes only date
-    partitions missing from the rollup, plus any explicitly passed in
-    `refresh` (late-data invalidation). Returns the list of dates
-    processed — empty means the rollup was already current."""
-    have = _partition_values(spark, rollup_dir, partition_col)
-    exist = _partition_values(spark, events_dir, partition_col)
-    todo = sorted((exist - have) | ((refresh or set()) & exist))
-    if not todo:
-        return []
-    events = spark.read.parquet(events_dir)
-    fresh = (
-        events.filter(F.col(partition_col).isin(todo))
-        .groupBy(partition_col, "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).alias(
-                "value_cents"
-            ),
-        )
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            fresh.repartition(partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(rollup_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return todo
-
-
-def scan_is_partition_pruned(df: DataFrame, partition_col: str) -> bool:
-    """True if `df`'s physical scan carries a PartitionFilters entry
-    on `partition_col` (test helper: proves the incremental read
-    never touches old partitions)."""
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    txt = buf.getvalue()
-    return any(
-        "PartitionFilters" in line
-        and partition_col in line
-        and "PartitionFilters: []" not in line.replace(" ", "")
-        for line in txt.splitlines()
-    )
 
 
 def txlog_incremental_rollup(
@@ -117,11 +26,9 @@ def txlog_incremental_rollup(
     value_col: str = "value",
 ) -> tuple[int, int]:
     """Incrementally maintain an aggregate view over a txlog table by
-    LOG DIFF — the lakehouse mirror of `incremental_daily_rollup`'s
-    partition-listing trick: "what's new" is the set of data files
-    added between the last processed commit and the current one, read
-    straight from the commit log (kilobytes), never from a table
-    scan. Only those files are aggregated; the delta merges into the
+    LOG DIFF: "what's new" is the set of data files added between the
+    last processed commit and the current one, read straight from the
+    commit log (kilobytes), never from a table scan. Only those files are aggregated; the delta merges into the
     existing rollup and lands in ONE overwrite commit.
 
     Exactly-once without a side manifest: the rollup commit CARRIES

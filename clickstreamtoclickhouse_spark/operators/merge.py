@@ -4,11 +4,9 @@ The reference's users table gets upsert behavior from
 ReplacingMergeTree(ver) — dedup deferred to the engine
 (/root/reference/seghouse/warehouse/clickhouse.py:112-118). The
 lakehouse-native counterpart is transactional MERGE (Delta
-`MERGE INTO` / Iceberg `MERGE`), whose jars are absent in this
-container; this module implements the same row semantics as plain
-DataFrame algebra, so the pipeline can express upserts today and
-swap `merge_upsert(base, updates, ...)` for `DeltaTable.merge` (one
-call site) when a transactional format is on the classpath.
+`MERGE INTO` / Iceberg `MERGE`); this module implements the same row
+semantics as plain DataFrame algebra, and ``TxLogTable.merge_upsert``
+(sinks/txlog.py) commits its result atomically.
 
 Semantics (whole-row):
   - matched (key in both)          -> the updates row replaces base
@@ -17,11 +15,9 @@ Semantics (whole-row):
                                       nothing inserted
 
 Scale: one left-anti join of base against the update keys + one
-union — the anti-join shuffles on the merge key unless the base is
-bucketed on it (sinks/bucketed.py), which makes the rewrite
-shuffle-free on the base side; the updates side is typically small
-enough to broadcast. This is exactly the copy-on-write MERGE plan
-Delta/Iceberg run under the hood.
+union — the anti-join shuffles on the merge key; the updates side is
+typically small enough to broadcast. This is exactly the
+copy-on-write MERGE plan Delta/Iceberg run under the hood.
 """
 
 from __future__ import annotations

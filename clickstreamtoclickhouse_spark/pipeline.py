@@ -2,7 +2,7 @@
 reference's SendToWarehouseJob (seghouse/jobs/send_to_warehouse.py:93-139).
 
 Flow (reference cites per stage):
-  read NDJSON/parquet dir          :104-131, :322-355   -> sources.readers
+  read NDJSON dir (parquet: flat)  :104-131, :322-355   -> sources.readers
   flatten + decamelize + clean     :338-347, json_util   -> sources.flatten
   drop skip_fields                 :123-124              -> operators.project
   split into 6 event types         :357-368              -> operators.project
@@ -20,8 +20,8 @@ send_to_warehouse.py:280,296 — a bug we deliberately fix);
 unix_timestamp_in_millis is a true Int64.
 
 Scale design: ONE distributed read; the flattened batch is cached
-before the 6-way type split (each split is a predicate over the cached
-scan, not a re-read); all transforms are Column expressions; the only
+once, before the corrupt-line quarantine and the 6-way type split
+(each is a predicate over the cached scan, not a re-read); all transforms are Column expressions; the only
 driver-side collect is the row census of every destination table
 (``_census``), bounded by the number of distinct event NAMES (A1,
 send_to_warehouse.py:215), not rows. Batch and stream ``send`` share
@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from .naming import decamelize
 from .operators import normalize, project
 from .sources import readers
+from .sources.readers import CORRUPT_COL
 from .tables import (
     DEFAULT_TABLES,
     EVENT_TYPE_TO_TABLE,
@@ -99,26 +100,30 @@ class EventPipeline:
     def ingest_ndjson(self, raw: DataFrame) -> IngestResult:
         """Parse a raw NDJSON frame (a batch read, or one micro-batch of
         the landing stream) and run the pipeline over it."""
-        parsed = readers.parse_events(raw)
-        result = self._process(parsed.events, corrupt=parsed.corrupt)
-        if parsed.cached is not None:
-            result.cached.append(parsed.cached)
-        return result
-
-    def ingest_parquet(self, path: str) -> IngestResult:
-        return self._process(readers.read_parquet_events(self.spark, path))
+        return self._process(readers.parse_events(raw))
 
     def ingest_df(self, df: DataFrame) -> IngestResult:
+        """Run the pipeline over already-flat columns, e.g. a parquet
+        batch (S4: passthrough, no flatten — send_to_warehouse.py:325-328)."""
         return self._process(df)
 
     # -- pipeline ------------------------------------------------------
 
-    def _process(self, df: DataFrame, corrupt: DataFrame | None = None) -> IngestResult:
+    def _process(self, df: DataFrame) -> IngestResult:
         df = project.drop_skip_fields(df, self.skip_fields)
         df = normalize.parse_timestamps(df)
         df = normalize.add_unix_millis(df)
         df = normalize.add_extra_timestamps(df, self.extra_timestamps)
-        df = df.cache()  # one scan feeds the 6-way split and the census
+        # one cache feeds the quarantine, the 6-way split and the census
+        # (Spark refuses a raw JSON scan that reads only the corrupt
+        # column; the cached batch may)
+        cached = df.cache()
+        if CORRUPT_COL in df.columns:
+            corrupt = cached.filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
+            df = cached.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+        else:
+            corrupt = self.spark.createDataFrame([], f"{CORRUPT_COL} string")
+            df = cached
 
         tables = {
             EVENT_TYPE_TO_TABLE[t]: split for t, split in project.split_by_type(df).items()
@@ -153,7 +158,7 @@ class EventPipeline:
 
         return IngestResult(
             tables=tables, event_tables=event_tables, corrupt=corrupt,
-            cached=[df], rows=rows,
+            cached=[cached], rows=rows,
         )
 
     def _census(self, df: DataFrame) -> tuple[dict[str, int], dict[str, int]]:

@@ -85,8 +85,8 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # saveAsTable target for bucketed tables (sinks.bucketed);
-        # keep it out of the repo working tree
+        # catalog-table location (saveAsTable); keep it out of the
+        # repo working tree
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"),

@@ -1,10 +1,9 @@
 """Minimal native transaction log over plain parquet (Delta-style).
 
-``sinks/lakehouse.py`` maps the reference's ReplacingMergeTree
-semantics onto Delta Lake, but the delta jars are absent here, so
-that sink is env-gated. This module implements the CORE mechanism
-natively — a file-based commit log — so transactional semantics are
-actually exercised in this repo, not just designed:
+Every parquet table the engine owns is written through this module:
+the core mechanism of Delta Lake — a file-based commit log —
+implemented natively, so transactional semantics are exercised here
+without the delta jars:
 
 - **Log-derived listings.** A table is a directory with ``_txlog/``
   holding one JSON file per version: ``{version, adds, removes,

@@ -80,8 +80,4 @@ def get_warehouse(kind: str, **kwargs) -> Warehouse:
         from .clickhouse import ClickHouseWarehouse
 
         return ClickHouseWarehouse(**kwargs)
-    if kind == "delta":
-        from .lakehouse import DeltaWarehouse
-
-        return DeltaWarehouse(**kwargs)
     raise ValueError(f"unknown warehouse kind: {kind}")

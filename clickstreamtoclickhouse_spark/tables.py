@@ -41,13 +41,6 @@ class DataType(Enum):
     ARRAY = "ARRAY"
 
 
-INT_DATATYPES = {
-    DataType.UINT8, DataType.UINT16, DataType.UINT32, DataType.UINT64,
-    DataType.UINT256, DataType.INT8, DataType.INT16, DataType.INT32,
-    DataType.INT64, DataType.INT128, DataType.INT256,
-}
-FLOAT_DATATYPES = {DataType.FLOAT32, DataType.FLOAT64}
-
 # logical -> Spark physical (produced subset first; wide family maps to
 # the narrowest Spark type that can hold it, DecimalType(38,0) for 128+)
 DT_TO_SPARK: dict[DataType, T.DataType] = {
@@ -71,22 +64,8 @@ DT_TO_SPARK: dict[DataType, T.DataType] = {
     DataType.INT256: T.DecimalType(38, 0),
 }
 
-SPARK_TO_DT: dict[type, DataType] = {
-    T.StringType: DataType.STRING,
-    T.DoubleType: DataType.FLOAT64,
-    T.FloatType: DataType.FLOAT32,
-    T.LongType: DataType.INT64,
-    T.IntegerType: DataType.INT32,
-    T.ShortType: DataType.INT16,
-    T.ByteType: DataType.INT8,
-    T.BooleanType: DataType.BOOLEAN,
-    T.TimestampType: DataType.DATETIME,
-    T.DateType: DataType.DATE,
-}
-
 # Well-known timestamp fields (event_fields.py:1-7): string columns
-# with these names are classified DATETIME by inference
-# (dataframe_util.py:22-23) and parsed (send_to_warehouse.py:44-46).
+# with these names are parsed to timestamps (send_to_warehouse.py:44-46).
 TIMESTAMP_FIELDS = ("received_at", "sent_at", "timestamp")
 
 # Base schema shared by every event table

@@ -165,23 +165,6 @@ def round_half_up(x: float, places: int) -> float:
     )
 
 
-def is_path_not_found(e: Exception) -> bool:
-    """True iff an AnalysisException means 'no data here yet' — the
-    path does not exist, OR it exists but holds no parquet footers
-    (ops pre-created the directory, or a crashed first write left it
-    empty: Spark raises UNABLE_TO_INFER_SCHEMA for those). Both are
-    normal first-run conditions; anything else is a real failure that
-    must propagate."""
-    cond = getattr(e, "getCondition", lambda: None)() or ""
-    msg = str(e)
-    return (
-        "PATH_NOT_FOUND" in cond
-        or "UNABLE_TO_INFER_SCHEMA" in cond
-        or "Path does not exist" in msg
-        or "Unable to infer schema" in msg
-    )
-
-
 def portable_id_hash(col):
     """First 8 md5 hex digits of a (numeric or string) id as a
     bigint — the engine's ONE portable hash for deterministic
@@ -215,23 +198,6 @@ def portable_id_hash_duck(expr: str) -> str:
     """DuckDB-text twin of ``portable_id_hash`` for oracle SQL.
     `expr` is a VARCHAR expression."""
     return f"('0x' || substr(md5({expr}), 1, 8))::BIGINT"
-
-
-def try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a parquet path, returning None ONLY when the path does not
-    exist yet (first run of an incremental/streaming job). Any other
-    error — permission, corrupt footer, transient IO — propagates:
-    treating those as 'empty' makes callers silently conclude
-    'nothing to do' (the failure mode an advisor flagged in
-    operators/incremental.py, fixed for every such site here)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if is_path_not_found(e):
-            return None
-        raise
 
 
 def widen_scan(df: DataFrame) -> DataFrame:

@@ -649,86 +649,6 @@ def test_negative_sampling_keys_in_part_domain(spark):
     out.unpersist()
 
 
-def test_incremental_rollup_processes_only_new_partitions(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from clickstreamtoclickhouse_spark.operators import incremental
-    from clickstreamtoclickhouse_spark.plans import load
-
-    events_dir = str(tmp_path / "events_parted")
-    rollup_dir = str(tmp_path / "rollup")
-
-    e = load(spark, SF_DIR, "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    dates = sorted(str(r[0]) for r in e.select("event_date").distinct().collect())
-    assert len(dates) >= 3
-    d0, d1, dn = dates[0], dates[1], dates[2]
-
-    # day 0+1 land first
-    e.filter(F.col("event_date").isin([d0, d1])).write.partitionBy(
-        "event_date"
-    ).mode("overwrite").parquet(events_dir)
-    done = incremental.incremental_daily_rollup(spark, events_dir, rollup_dir)
-    assert sorted(done) == [d0, d1]
-    # already current -> no work
-    assert incremental.incremental_daily_rollup(spark, events_dir, rollup_dir) == []
-
-    # a new day arrives -> only it is processed
-    e.filter(F.col("event_date") == dn).write.partitionBy("event_date").mode(
-        "append"
-    ).parquet(events_dir)
-    done = incremental.incremental_daily_rollup(spark, events_dir, rollup_dir)
-    assert done == [dn]
-
-    # the incremental read is partition-pruned, not a full scan
-    ev = spark.read.parquet(events_dir).filter(
-        F.col("event_date").isin([dn])
-    )
-    assert incremental.scan_is_partition_pruned(ev, "event_date")
-
-    # and the maintained rollup equals a from-scratch aggregation
-    want = sorted(
-        map(
-            tuple,
-            spark.read.parquet(events_dir)
-            .groupBy("event_date", "event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).alias(
-                    "value_cents"
-                ),
-            )
-            .select("event_type", "n_events", "value_cents")
-            .collect(),
-        )
-    )
-    got = sorted(
-        map(
-            tuple,
-            spark.read.parquet(rollup_dir)
-            .select("event_type", "n_events", "value_cents")
-            .collect(),
-        )
-    )
-    assert got == want
-    # idempotent refresh of an existing date (late data invalidation
-    # path): re-processing d1 must not duplicate it
-    done = incremental.incremental_daily_rollup(
-        spark, events_dir, rollup_dir, refresh={d1}
-    )
-    assert done == [d1]
-    got2 = sorted(
-        map(
-            tuple,
-            spark.read.parquet(rollup_dir)
-            .select("event_type", "n_events", "value_cents")
-            .collect(),
-        )
-    )
-    assert got2 == want
-
-
 def test_portable_hyperplane_lsh_recall(spark):
     # every planted (original, +0.01 copy) pair (cosine ~0.9968) must
     # survive: per-table bucket-match P ~ 0.81, miss across 6 tables

@@ -273,38 +273,6 @@ def test_s3a_read_path_classpath_story(spark):
     spark._jvm.org.apache.hadoop.fs.s3a.S3AFileSystem
 
 
-def test_read_csv_events_with_quarantine(spark, tmp_path):
-    from clickstreamtoclickhouse_spark.sources.readers import read_csv_events
-
-    p = tmp_path / "events.csv"
-    p.write_text(
-        "user_id,event,n\n"
-        "1,click,10\n"
-        "2,view,20\n"
-        "not-an-int,purchase,not-an-int-either,extra-field\n"
-        "3,click,30\n"
-    )
-    from pyspark.sql.types import (
-        IntegerType, StringType, StructField, StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("user_id", IntegerType()),
-            StructField("event", StringType()),
-            StructField("n", IntegerType()),
-            StructField("_corrupt_record", StringType()),
-        ]
-    )
-    raw = read_csv_events(spark, str(p), schema=schema)
-    good = raw.events.collect()
-    assert sorted(r["user_id"] for r in good) == [1, 2, 3]
-    bad = raw.corrupt.collect()
-    assert len(bad) == 1 and "purchase" in bad[0][0]
-    if raw.cached is not None:
-        raw.cached.unpersist()
-
-
 def test_eventgen_python_datasource(spark):
     from pyspark.sql import functions as F
 
@@ -385,28 +353,49 @@ def test_eventgen_streaming_source(spark, tmp_path):
     assert got == want
 
 
-def test_read_orc_events_round_trip(spark, tmp_path):
-    """ORC source parity with the parquet path: same rows, same
-    schema, and the columnar scan prunes columns + pushes filters
-    exactly like parquet (pinned on the explain output)."""
-    import contextlib
-    import io
+def test_batch_with_a_bad_line_is_cached_once(spark, tmp_path):
+    # the quarantined lines split off the pipeline's one cached batch;
+    # the raw scan is not cached a second time
+    d = tmp_path / "ndjson"
+    d.mkdir()
+    with open(d / "events.json", "w") as f:
+        f.write(json.dumps(FIXTURE_LINES[0]) + "\n")
+        f.write('{"messageId": "m-badjson", "type": "track",\n')
+        f.write(json.dumps(FIXTURE_LINES[2]) + "\n")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    res = EventPipeline(spark).ingest_json_dir(str(d))
+    try:
+        assert len(set(jsc.getPersistentRDDs().keys()) - before) == 1
+        assert len(res.cached) == 1
+        assert res.corrupt.count() == 1
+        assert res.rows == {
+            "tracks": 1, "identities": 1, "users": 1, "pages": 0,
+            "screens": 0, "groups": 0, "aliases": 0, "product_viewed": 1,
+        }
+    finally:
+        res.unpersist()
 
-    from clickstreamtoclickhouse_spark.sources import readers
 
-    from .conftest import SF_DIR
+def test_parquet_batch_lands_unflattened(spark, tmp_path):
+    # S4: a parquet batch skips flatten and decamelize
+    # (send_to_warehouse.py:325-328), so its columns land as they are
+    from clickstreamtoclickhouse_spark.app import store_result
+    from clickstreamtoclickhouse_spark.sinks.parquet_sink import ParquetWarehouse
 
-    src = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    orc_dir = str(tmp_path / "events_orc")
-    src.write.orc(orc_dir)
-    back = readers.read_orc_events(spark, orc_dir)
-    assert back.count() == src.count()
-    assert dict(back.dtypes) == dict(src.dtypes)
-    probe = back.filter(F.col("event_id") < 100).select("event_id", "event_type")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        probe.explain("formatted")
-    txt = buf.getvalue()
-    assert "PushedFilters: [IsNotNull(event_id), LessThan(event_id,100)]" in txt
-    sch = next(l for l in txt.splitlines() if "ReadSchema" in l)
-    assert "props" not in sch and "value" not in sch
+    src = str(tmp_path / "batch")
+    spark.createDataFrame(
+        [("m-1", "track", "2026-01-02T03:04:05Z", "Product Viewed", "a/b", ("1.2.3",))],
+        "message_id string, type string, timestamp string, event string, "
+        "pageUrl string, context struct<appVersion: string>",
+    ).write.parquet(src)
+    res = EventPipeline(spark).ingest_df(spark.read.parquet(src))
+    wh = ParquetWarehouse(spark, str(tmp_path / "lake"))
+    wh.connect()
+    store_result(res, [wh], "ns")
+    res.unpersist()
+    back = wh.read_table("ns", "product_viewed")
+    assert {"pageUrl", "context"} <= set(back.columns)
+    assert not {"page_url", "context_app_version"} & set(back.columns)
+    row = back.first()
+    assert row["pageUrl"] == "a/b" and row["context"]["appVersion"] == "1.2.3"

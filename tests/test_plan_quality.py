@@ -111,45 +111,6 @@ def test_events_scan_prunes_props(spark):
     assert "props" not in sch
 
 
-def test_bucketed_join_is_shuffle_free(spark):
-    # the storage-layout lever: two tables bucketed on the same key
-    # with the same bucket count must join with ZERO Exchange nodes
-    # (the shuffle was paid once at write time). sortBy also persists
-    # in-bucket order, so the merge join needs no Sort either.
-    import contextlib
-    import io
-
-    from clickstreamtoclickhouse_spark.plans import load
-    from clickstreamtoclickhouse_spark.sinks import bucketed
-
-    events = load(spark, SF_DIR, "events")
-    bucketed.write_bucketed(
-        events.select("user_id", "value"), "bkt_events",
-        ["user_id"], num_buckets=8, sort_cols=["user_id"],
-    )
-    bucketed.write_bucketed(
-        events.groupBy("user_id").count(), "bkt_users",
-        ["user_id"], num_buckets=8, sort_cols=["user_id"],
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed.read_bucketed(spark, "bkt_events").join(
-            bucketed.read_bucketed(spark, "bkt_users"), "user_id"
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        txt = buf.getvalue()
-        assert "SortMergeJoin" in txt
-        assert "Exchange" not in txt, f"bucketed join still shuffles:\n{txt}"
-        assert joined.count() == events.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bkt_events")
-        spark.sql("DROP TABLE IF EXISTS bkt_users")
-
-
 def test_band_index_anti_join_is_index_side_shuffle_free(spark, tmp_path):
     # the persisted MinHash band index is a txlog table; the per-batch
     # screen first semi-joins it against a BROADCAST of the batch's
@@ -303,42 +264,6 @@ def test_dedup_clusters_no_cartesian(spark):
     txt = buf.getvalue()
     assert "CartesianProduct" not in txt
     assert "BroadcastNestedLoopJoin" not in txt
-
-
-def test_zorder_tightens_rowgroup_stats_on_both_dims(spark, tmp_path):
-    # z-ordered layout must give BOTH dimensions tighter per-row-group
-    # min/max ranges than the natural order; a single-column sort only
-    # helps its leading column
-    import pyarrow.parquet as pq
-
-    from clickstreamtoclickhouse_spark.sinks.layout import write_zordered
-
-    li = plans.load(spark, SF_DIR, "lineitem").select("l_orderkey", "l_partkey")
-    zdir = str(tmp_path / "zorder")
-    ndir = str(tmp_path / "natural")
-    # 16 Z-range files over 2 dims -> each dim's per-file range
-    # shrinks ~sqrt(16)=4x; a 4-file split would only give ~2x
-    write_zordered(li, zdir, ["l_orderkey", "l_partkey"], n_files=16)
-    li.repartition(16).write.mode("overwrite").parquet(ndir)
-
-    def avg_range(path, col):
-        import glob
-
-        widths, total = [], 0
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    c = g.column(ci)
-                    if c.path_in_schema == col and c.statistics is not None:
-                        widths.append(c.statistics.max - c.statistics.min)
-                        total += 1
-        return sum(widths) / max(total, 1)
-
-    for col in ("l_orderkey", "l_partkey"):
-        z, n = avg_range(zdir, col), avg_range(ndir, col)
-        assert z < n * 0.6, (col, z, n)
 
 
 def test_weighted_sample_topk_prunes_mapside(spark):

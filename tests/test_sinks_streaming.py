@@ -282,6 +282,15 @@ def test_clickhouse_gated_without_driver(spark):
         wh.connect()
 
 
+def test_get_warehouse_rejects_unknown_kinds():
+    # a config with `type: delta` fails like any other unknown kind
+    from clickstreamtoclickhouse_spark.sinks.warehouse import get_warehouse
+
+    for kind in ("delta", "junk"):
+        with pytest.raises(ValueError, match=f"unknown warehouse kind: {kind}"):
+            get_warehouse(kind)
+
+
 def test_streaming_ingest(spark, tmp_path):
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -749,42 +758,6 @@ def test_users_upsert_readback_against_embedded_derby(spark, tmp_path):
     }
     assert latest == {"u1": (2, "pro"), "u2": (1, "free")}
     wh.close()
-
-
-def test_delta_warehouse_gated_without_jars(spark):
-    # delta-spark is absent in this environment: the sink must fail
-    # fast at connect() with setup guidance, not at first write
-    from clickstreamtoclickhouse_spark.sinks.lakehouse import DeltaWarehouse
-
-    wh = DeltaWarehouse(spark)
-    with pytest.raises(RuntimeError, match="delta-spark"):
-        wh.connect()
-
-
-def test_delta_warehouse_merge_upsert_roundtrip(spark, tmp_path):
-    # live MERGE path — runs only where delta-spark + jars exist
-    pytest.importorskip("delta")
-    from clickstreamtoclickhouse_spark.sinks.lakehouse import DeltaWarehouse
-
-    wh = DeltaWarehouse(spark)
-    wh.connect()
-    wh.create_schema("ns")
-    cols = {
-        "user_id": T.StringType(), "ver": T.LongType(),
-        "message_id": T.StringType(), "plan": T.StringType(),
-    }
-    wh.create_table("ns", "users", cols, ("user_id", "ver"))
-    first = spark.createDataFrame(
-        [("u1", 1, "m1", "free")], "user_id string, ver long, message_id string, plan string"
-    )
-    newer = spark.createDataFrame(
-        [("u1", 2, "m2", "pro"), ("u2", 1, "m3", "free")],
-        "user_id string, ver long, message_id string, plan string",
-    )
-    wh.upsert_users("ns", first)
-    wh.upsert_users("ns", newer)
-    rows = {r.user_id: (r.ver, r.plan) for r in spark.table("`ns`.`users`").collect()}
-    assert rows == {"u1": (2, "pro"), "u2": (1, "free")}
 
 
 def test_event_table_cardinality_guard(spark):

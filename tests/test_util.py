@@ -1,9 +1,4 @@
-"""util helpers.
-
-try_read_parquet: the first-run contract every incremental /
-streaming bootstrap path depends on — None ONLY for genuinely-no-data
-(missing path, existing-but-empty dir), propagation for everything
-else (a swallowed real error silently restarts state from scratch).
+"""util helpers and package-wide guards.
 
 Pin lifecycle: SessionDFCache is the only cross-query state,
 ckpt_once the only within-query pin, release_local_checkpoint the
@@ -18,42 +13,11 @@ from pathlib import Path
 import pytest
 
 from clickstreamtoclickhouse_spark import util
-from clickstreamtoclickhouse_spark.util import portable_id_hash, try_read_parquet
+from clickstreamtoclickhouse_spark.util import portable_id_hash
 
 from .conftest import SF_DIR
 
 PKG = Path(util.__file__).resolve().parent
-
-
-def test_missing_path_is_first_run(spark, tmp_path):
-    assert try_read_parquet(spark, str(tmp_path / "nope")) is None
-
-
-def test_existing_empty_dir_is_first_run(spark, tmp_path):
-    d = tmp_path / "pre_created"
-    d.mkdir()  # ops pre-created the output dir: still "no data yet"
-    assert try_read_parquet(spark, str(d)) is None
-
-
-def test_real_data_reads(spark, tmp_path):
-    p = str(tmp_path / "t")
-    spark.range(3).write.parquet(p)
-    df = try_read_parquet(spark, p)
-    assert df is not None and df.count() == 3
-
-
-def test_corrupt_footer_propagates(spark, tmp_path):
-    # a directory WITH a parquet-named file whose footer is garbage is
-    # NOT a first run — treating it as empty would silently discard
-    # the existing (damaged) state instead of surfacing it
-    d = tmp_path / "damaged"
-    d.mkdir()
-    (d / "part-00000.parquet").write_bytes(b"not a parquet file")
-    with pytest.raises(Exception):
-        df = try_read_parquet(spark, str(d))
-        # schema inference may be lazy for some layouts — force it
-        if df is not None:
-            df.collect()
 
 
 def test_portable_id_hash_matches_duckdb(spark):
@@ -191,20 +155,19 @@ def test_library_code_never_caches():
 
 
 def test_stream_operators_write_only_through_txlog():
-    """`streaming/` has no `.write` (`.writeStream` starts a query; a
-    table write is a TxLogTable commit) and no `try_read_parquet`
-    state read (state is read with `TxLogTable.read_before`)."""
+    """A `.write` attribute appears only in the package's three write
+    paths: `sinks/txlog.py` (every owned parquet table commits through
+    `TxLogTable`), `sinks/clickhouse.py` (the JDBC insert) and `app.py`
+    (`run --output` writes a query result to a user path, not a
+    table). `.writeStream` starts a query and is a different name."""
+    allowed = {PKG / "sinks" / "txlog.py", PKG / "sinks" / "clickhouse.py", PKG / "app.py"}
     found = []
-    for path in sorted((PKG / "streaming").rglob("*.py")):
+    for path in sorted(PKG.rglob("*.py")):
+        if path in allowed:
+            continue
         for node in ast.walk(ast.parse(path.read_text())):
-            name = (
-                node.attr if isinstance(node, ast.Attribute)
-                else node.id if isinstance(node, ast.Name)
-                else node.name if isinstance(node, ast.alias)
-                else None
-            )
-            if name in ("write", "try_read_parquet"):
-                found.append(f"{path.relative_to(PKG)}:{node.lineno}:{name}")
+            if isinstance(node, ast.Attribute) and node.attr == "write":
+                found.append(f"{path.relative_to(PKG)}:{node.lineno}")
     assert not found, found
 
 
