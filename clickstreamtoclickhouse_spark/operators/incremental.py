@@ -29,7 +29,7 @@ def txlog_incremental_rollup(
     LOG DIFF: "what's new" is the set of data files added between the
     last processed commit and the current one, read straight from the
     commit log (kilobytes), never from a table scan. Only those files are aggregated; the delta merges into the
-    existing rollup and lands in ONE overwrite commit.
+    existing rollup and lands in ONE ``rewrite`` commit.
 
     Exactly-once without a side manifest: the rollup commit CARRIES
     the processed source version as its idempotence token
@@ -61,34 +61,31 @@ def txlog_incremental_rollup(
             "the additive delta is invalid — rebuild the rollup"
         )
     new_files = [f for f in snap_now.files if f not in old_files]
-    cents = F.round(F.col(value_col) * 100, 0).cast("bigint")
-    if new_files:
-        fresh = (
-            spark.read.parquet(*[str(source.path / f) for f in new_files])
-            .groupBy(*key_cols)
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.sum(cents).alias("value_cents"),
-            )
-        )
-    else:
-        fresh = None
-    base = rollup.read(spark) if rollup.latest_version() >= 0 else None
-    if fresh is None and base is None:
-        # source commits exist but added no data files and no rollup
-        # exists yet: nothing to write; the mark stays put (harmless —
-        # the next refresh re-derives the same empty diff)
-        return last, 0
-    if fresh is None:
+    if not new_files:
+        if rollup.latest_version() < 0:
+            # source commits exist but added no data files and no
+            # rollup exists yet: nothing to write; the mark stays put
+            # (harmless — the next refresh re-derives the same empty diff)
+            return last, 0
         # only the high-water mark advances: a metadata-only commit
         # carries the token and keeps the prior snapshot's files —
         # kilobytes, never an O(table) rollup rewrite
         rollup.commit_txn((app, v_now))
         return v_now, 0
-    if base is None:
-        merged = fresh
-    else:
-        merged = (
+    cents = F.round(F.col(value_col) * 100, 0).cast("bigint")
+    fresh = (
+        spark.read.parquet(*[str(source.path / f) for f in new_files])
+        .groupBy(*key_cols)
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.sum(cents).alias("value_cents"),
+        )
+    )
+
+    def merged(base):
+        if base is None:
+            return fresh
+        return (
             base.unionByName(fresh)
             .groupBy(*key_cols)
             .agg(
@@ -96,5 +93,6 @@ def txlog_incremental_rollup(
                 F.sum("value_cents").cast("bigint").alias("value_cents"),
             )
         )
-    rollup.overwrite(merged, txn=(app, v_now))
+
+    rollup.rewrite(spark, merged, txn=(app, v_now))
     return v_now, len(new_files)

@@ -47,6 +47,8 @@ def add_extra_timestamps(df: DataFrame, extra: dict[str, str]) -> DataFrame:
     naive local time in that zone, which is exactly
     from_utc_timestamp. Raises if the column already exists (reference
     raises ValueError, :69-73)."""
+    if "timestamp" not in df.columns:
+        return df
     for name, tz in extra.items():
         if name in df.columns:
             raise ValueError(f"{name} already exists in the dataframe")
@@ -71,6 +73,8 @@ def add_users_ver(df: DataFrame) -> DataFrame:
     """T12: users.ver = timestamp as int64 NANOSECONDS
     (send_to_warehouse.py:163-165). Spark timestamps are micros; ×1000
     preserves the reference's magnitude (ns fidelity documented)."""
+    if "timestamp" not in df.columns:
+        return df
     return df.withColumn("ver", F.unix_micros(F.col("timestamp")) * F.lit(1000))
 
 

@@ -85,12 +85,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # catalog-table location (saveAsTable); keep it out of the
-        # repo working tree
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"),
-        )
+        # the engine makes no catalog table, but Spark creates this dir
+        # the first time anything touches the catalog (listTables());
+        # unpinned it would land spark-warehouse/ in the working dir
+        .config("spark.sql.warehouse.dir", "/tmp/spark-graft-warehouse")
         # modest heap: a huge (48g+) heap caused multi-second GC /
         # page-zeroing stalls in local mode with no throughput benefit
         # at bench scale; override via SPARK_DRIVER_MEM for bigger SFs

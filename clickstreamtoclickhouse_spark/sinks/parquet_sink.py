@@ -19,7 +19,7 @@ file list and the schema from the commit log.
   older files read the new columns as null
 - Q1/Q2 ReplacingMergeTree read semantics -> read views in
   operators.dedup applied by read_view(); compact() makes them
-  at-rest in one overwrite commit (the analog of ClickHouse
+  at-rest in one rewrite commit (the analog of ClickHouse
   background merges)
 
 Scale: each append writes date partitions; readers prune by
@@ -106,19 +106,29 @@ class ParquetWarehouse(Warehouse):
     def read_view(self, schema: str, table: str) -> DataFrame:
         """Q1/Q2 read semantics: what a ClickHouse SELECT ... FINAL
         would return."""
-        df = self.read_table(schema, table)
-        if table == "users" and "ver" in df.columns:
-            return dedup.latest_version_view(df)
-        if "timestamp" in df.columns and "message_id" in df.columns:
-            return dedup.dedup_by_sort_key(df)
-        return df
+        return _view(table, self.read_table(schema, table))
 
     def compact(self, schema: str, table: str) -> None:
         """At-rest dedup — the analog of ClickHouse background merges
-        (clickhouse.py:85,116): the table's read view replaces its
-        contents in one overwrite commit, then ``vacuum`` deletes the
-        superseded files. A crash before the commit leaves the table
-        as it was."""
+        (clickhouse.py:85,116): one ``rewrite`` commit replaces the
+        table's rows with their read view, then ``vacuum`` deletes the
+        superseded files. The view is built from the snapshot the
+        commit replaces, so an insert that lands meanwhile is kept. A
+        crash before the commit leaves the table as it was."""
         t = self._table(schema, table)
-        t.overwrite(_clustered(self.read_view(schema, table).drop(PARTITION_COL)))
+
+        def compacted(rows: DataFrame | None) -> DataFrame:
+            if rows is None:
+                raise ValueError(f"{t.path}: no committed rows to compact")
+            return _clustered(_view(table, rows).drop(PARTITION_COL))
+
+        t.rewrite(self.spark, compacted)
         t.vacuum()
+
+
+def _view(table: str, df: DataFrame) -> DataFrame:
+    if table == "users" and "ver" in df.columns:
+        return dedup.latest_version_view(df)
+    if "timestamp" in df.columns and "message_id" in df.columns:
+        return dedup.dedup_by_sort_key(df)
+    return df

@@ -30,13 +30,16 @@ without the delta jars:
   the file set as of N; an in-flight reader of version N is untouched
   by any later commit because its files are never mutated, only
   de-referenced (and reclaimed by an explicit ``vacuum``).
-- **Atomic MERGE.** ``merge_upsert`` = read snapshot -> merge
-  (operators/merge semantics) -> write new files -> ONE commit that
-  adds them and removes the old set, so replayed micro-batches and
-  concurrent readers see version N or N+1, never a truncated table
-  (``streaming/stateful.py:stream_merge_upsert`` applies each CDC
-  micro-batch this way; ``ParquetWarehouse.compact`` is one
-  ``overwrite`` commit plus ``vacuum``).
+- **One commit loop.** Every write — ``append``, ``rewrite``,
+  ``commit_txn`` and ``merge_upsert`` (a ``rewrite`` whose build is
+  the operators/merge upsert) — runs ``_transact``: replay the log
+  once, skip a replayed token, build the adds and removes against that
+  snapshot and commit version N+1; on a conflict, re-run against the
+  new snapshot. Readers see version N or N+1, never a truncated table,
+  and a read-modify-write never drops a commit that landed after its
+  read (``streaming/stateful.py:stream_merge_upsert`` applies each CDC
+  micro-batch as one ``merge_upsert``; ``ParquetWarehouse.compact`` is
+  one ``rewrite`` of the table's read view plus ``vacuum``).
 - **Replay-safe stream operators.** Every ``foreachBatch`` operator in
   ``streaming/`` commits with the token ``txn=(checkpoint_dir,
   batch_id)`` and reads its state tables with ``read_before`` (rows
@@ -58,6 +61,7 @@ import logging
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -66,6 +70,10 @@ logger = logging.getLogger(__name__)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+# attempts of one write before CommitConflict reaches the caller
+_COMMIT_ATTEMPTS = 10
 
 
 class CommitConflict(Exception):
@@ -138,12 +146,16 @@ class TxLogTable:
         as of `version` (default: latest), from ONE replay of the log;
         a production variant checkpoints the replayed state every N
         commits (same mechanism, fewer reads)."""
+        return self._replay(self._log_entries(), version)
+
+    @staticmethod
+    def _replay(entries: list[dict], version: int | None = None) -> Snapshot:
         active: set[str] = set()
         stats: dict[str, dict] = {}
         txns: dict[str, int] = {}
         schema_json = None
         seen = -1
-        for e in self._log_entries():
+        for e in entries:
             if version is not None and e["version"] > version:
                 break
             active -= set(e["removes"])
@@ -391,14 +403,38 @@ class TxLogTable:
         df = self._read(spark, snap, where=("batch_id", 0, batch_id - 1))
         return df.filter(F.col("batch_id") < F.lit(batch_id))
 
-    def append(
+    # -- write path -----------------------------------------------------
+
+    def _transact(
         self,
-        df: DataFrame,
-        _max_retries: int = 10,
+        changes: Callable[[Snapshot], tuple[list[str], list[str], str | None, dict]],
         txn: tuple[str, int] | None = None,
     ) -> int:
-        """Append-commit (blind adds commute, so conflicts just retry
-        with the next version number). Returns the committed version.
+        """The one commit loop of every write (optimistic concurrency).
+        Each attempt replays the log ONCE, skips the write when `txn`
+        is already applied in that snapshot, takes the (adds, removes,
+        schema, stats) that `changes(snap)` builds against it and
+        commits them as version ``snap.version + 1``. If another writer
+        took that version the attempt re-runs against the new
+        snapshot; files a lost attempt wrote are referenced by no
+        commit, and ``vacuum`` reclaims them. Returns the committed
+        version, or the latest one when `txn` is a replay."""
+        for _ in range(_COMMIT_ATTEMPTS):
+            snap = self.snapshot()
+            if txn is not None and self._txn_already_applied(txn, snap):
+                return snap.version
+            adds, removes, schema_json, stats = changes(snap)
+            try:
+                self._commit(snap.version + 1, adds, removes, schema_json, stats, txn=txn)
+            except CommitConflict:
+                continue
+            return snap.version + 1
+        raise CommitConflict(f"{self.path}: gave up after {_COMMIT_ATTEMPTS} attempts")
+
+    def append(self, df: DataFrame, txn: tuple[str, int] | None = None) -> int:
+        """Append-commit. Blind adds commute, so the files are written
+        once and a conflict only retries the commit at the next
+        version. Returns the committed version.
 
         `txn=(app, ver)` makes the append IDEMPOTENT per writer (the
         Delta txnAppId/txnVersion pattern): if the log already holds a
@@ -414,72 +450,52 @@ class TxLogTable:
         data loss. Never reuse an app id with reset versions; key the
         app id on the checkpoint incarnation. A token arriving below
         the app's high-water mark logs a warning."""
-        if txn is not None:
-            snap = self.snapshot()
-            if self._txn_already_applied(txn, snap):
-                return snap.version
-        adds, stats = self._write_files(df)
-        for _ in range(_max_retries):
-            base = self.snapshot()  # one log replay per attempt
-            if txn is not None and self._txn_already_applied(txn, base):
-                # a concurrent replay committed this token while we
-                # were writing files; abandon ours (never referenced
-                # by any commit, reclaimed by vacuum)
-                return base.version
-            v = base.version + 1
-            try:
-                self._commit(v, adds, [], self._evolved_schema(base, df), stats, txn=txn)
-                return v
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up after {_max_retries} retries")
+        written: list[tuple[list[str], dict[str, dict]]] = []
 
-    def overwrite(self, df: DataFrame, txn: tuple[str, int] | None = None) -> int:
-        """Replace the table contents in ONE commit: readers see the
-        old or the new snapshot, never an in-between state (unlike
-        mode('overwrite') on a plain directory, which deletes before
-        it writes). `txn` carries the same idempotence token as
-        `append` — a replayed overwrite for an already-committed
-        (app, ver) is skipped, which is what lets incremental view
-        maintenance advance its high-water mark ATOMICALLY with the
-        data it derives from (operators/incremental.py). The append()
-        token-reuse caveat applies identically: an app id whose
-        versions reset (deleted checkpoint, same app id) silently
-        skips new overwrites — a below-high-water token logs a
-        warning."""
-        base = self.snapshot()
-        if txn is not None and self._txn_already_applied(txn, base):
-            return base.version
-        adds, stats = self._write_files(df)
-        v = base.version + 1
-        self._commit(
-            v, adds, list(base.files), self._evolved_schema(base, df), stats, txn=txn
-        )
-        return v
+        def changes(snap: Snapshot):
+            if not written:  # on the first attempt the token lets through
+                written.append(self._write_files(df))
+            adds, stats = written[0]
+            return adds, [], self._evolved_schema(snap, df), stats
 
-    def commit_txn(
-        self, txn: tuple[str, int], _max_retries: int = 10
+        return self._transact(changes, txn)
+
+    def rewrite(
+        self,
+        spark: SparkSession,
+        build: Callable[[DataFrame | None], DataFrame],
+        txn: tuple[str, int] | None = None,
     ) -> int:
+        """Replace the table contents with ``build(rows)`` in ONE
+        commit, where `rows` reads the snapshot that commit replaces
+        (None while the table has no committed schema). Readers see the
+        old or the new snapshot, never an in-between state, and a
+        commit that lands while `build`'s result is written is not
+        lost: read-modify-writes do not commute, so the conflict re-runs
+        `build` against the snapshot that holds it. `txn` is `append`'s
+        idempotence token, with the same caveat; it lets incremental
+        view maintenance advance its high-water mark atomically with
+        the data it derives (operators/incremental.py)."""
+
+        def changes(snap: Snapshot):
+            rows = None if snap.schema_json is None else self._read(spark, snap, None)
+            df = build(rows)
+            # the write finishes before the commit de-references the
+            # snapshot files it read; only vacuum ever deletes them
+            adds, stats = self._write_files(df)
+            return adds, list(snap.files), self._evolved_schema(snap, df), stats
+
+        return self._transact(changes, txn)
+
+    def commit_txn(self, txn: tuple[str, int]) -> int:
         """Metadata-ONLY commit: advance the idempotence token for
         `txn` without touching any data files (empty adds/removes; the
         prior snapshot's file set and schema are untouched). This is
         how incremental view maintenance advances its high-water mark
         when the source gained commits but no data files — a
-        kilobyte-sized log entry instead of rewriting the whole rollup
-        (O(table) read+write that `overwrite` would cost). Returns the
-        committed (or already-current) version."""
-        for _ in range(_max_retries):
-            snap = self.snapshot()
-            if self._txn_already_applied(txn, snap):
-                return snap.version
-            try:
-                self._commit(
-                    snap.version + 1, [], [], snap.schema_json, {}, txn=txn
-                )
-                return snap.version + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up after {_max_retries} retries")
+        kilobyte-sized log entry instead of rewriting the whole rollup.
+        Returns the committed (or already-current) version."""
+        return self._transact(lambda snap: ([], [], snap.schema_json, {}), txn)
 
     def merge_upsert(
         self,
@@ -488,80 +504,24 @@ class TxLogTable:
         keys: list[str],
         version_col: str | None = None,
         delete_col: str | None = None,
-        _max_retries: int = 5,
     ) -> int:
-        """Transactional MERGE: snapshot -> merge (latest-version-wins
-        upsert + tombstone deletes, operators/merge semantics) -> one
-        atomic swap commit. On a concurrent-commit conflict the WHOLE
-        merge re-runs against the new snapshot (optimistic
-        concurrency — merges do not commute, unlike appends)."""
+        """Transactional MERGE: a `rewrite` that merges `updates` into
+        the snapshot (latest-version-wins upsert + tombstone deletes,
+        operators/merge semantics). An empty table merges into an empty
+        frame of the updates' columns, tombstone column excluded."""
         from ..operators.merge import merge_upsert as _merge
 
-        for _ in range(_max_retries):
-            base_snap = self.snapshot()
-            if base_snap.version == -1:
+        def merged(base: DataFrame | None) -> DataFrame:
+            if base is None:
                 base = updates.limit(0)
                 if delete_col is not None:
                     base = base.drop(delete_col)
-            else:
-                base = self.read(spark)
-            merged = _merge(
+            return _merge(
                 base, updates, keys=keys,
                 version_col=version_col, delete_col=delete_col,
             )
-            # the write finishes before the commit de-references the
-            # snapshot files it read; only vacuum ever deletes them
-            adds, stats = self._write_files(merged)
-            try:
-                self._commit(
-                    base_snap.version + 1, adds, list(base_snap.files),
-                    self._evolved_schema(base_snap, merged), stats,
-                )
-                return base_snap.version + 1
-            except CommitConflict:
-                # orphaned `adds` files are reclaimed by vacuum()
-                continue
-        raise CommitConflict(f"gave up after {_max_retries} retries")
 
-    def optimize(
-        self,
-        spark: SparkSession,
-        min_files: int = 2,
-        target_file_bytes: int = 128 << 20,
-        _max_retries: int = 5,
-    ) -> int | None:
-        """Small-file compaction as ONE atomic commit — the OPTIMIZE
-        analog of Delta/Iceberg table maintenance: rewrite the current
-        snapshot's files into ceil(total_bytes / target_file_bytes)
-        right-sized files and commit (adds=new, removes=old), so
-        readers see the pre- or post-compaction snapshot, never a mix;
-        the superseded files stay on disk for time travel until
-        ``vacuum`` reclaims them. Content is unchanged — pure layout
-        maintenance (per-append file sets from a streaming ingest are
-        the usual input); zone maps are recomputed for the new files.
-        No-op (returns None) below `min_files`.
-
-        Concurrency: compaction removes specific files, so it
-        conflicts with ANY concurrent commit; on CommitConflict the
-        whole rewrite re-runs against the new snapshot (the
-        merge_upsert optimistic loop — compactions do not commute)."""
-        for _ in range(_max_retries):
-            snap = self.snapshot()
-            if snap.version == -1 or len(snap.files) < min_files:
-                return None
-            total = sum((self.path / f).stat().st_size for f in snap.files)
-            n_out = max(1, (total + target_file_bytes - 1) // target_file_bytes)
-            df = self.read(spark, version=snap.version).coalesce(int(n_out))
-            adds, stats = self._write_files(df)
-            try:
-                self._commit(
-                    snap.version + 1, adds, list(snap.files),
-                    self._evolved_schema(snap, df), stats,
-                )
-                return snap.version + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up after {_max_retries} retries")
+        return self.rewrite(spark, merged)
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
         """Delete data files not referenced by any of the last
@@ -570,13 +530,14 @@ class TxLogTable:
         retention contract as Delta VACUUM; idempotence tokens are
         kept, so a batch replayed later is still skipped. Returns
         deleted paths."""
-        latest = self.latest_version()
-        if latest < 0:
+        entries = self._log_entries()  # the one log read
+        if not entries:
             return []
+        latest = entries[-1]["version"]
         cutoff = max(latest - keep_versions + 1, 0)
         referenced: set[str] = set()
         for v in range(cutoff, latest + 1):
-            referenced |= set(self.snapshot(v).files)
+            referenced |= set(self._replay(entries, v).files)
         deleted = []
         for p in sorted(self.path.rglob("*.parquet")):  # listed before any rmdir
             rel = p.relative_to(self.path)
@@ -599,8 +560,8 @@ class TxLogTable:
         # snapshot(cutoff) resolves to exactly the base file set
         # (replay applies an entry's removes before its adds).
         if cutoff > 0:
-            base = self.snapshot(cutoff)
-            pre = [e for e in self._log_entries() if e["version"] < cutoff]
+            base = self._replay(entries, cutoff)
+            pre = [e for e in entries if e["version"] < cutoff]
             ever_added: set[str] = set()
             for e in pre:
                 ever_added |= set(e["adds"])

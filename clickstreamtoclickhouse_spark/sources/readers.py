@@ -25,6 +25,7 @@ earlier. Documented deviation: reference parity would be FAILFAST.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .flatten import flatten
 
@@ -42,7 +43,17 @@ def read_ndjson(spark: SparkSession, path: str) -> DataFrame:
     parallel (vs the reference's sequential loop). ``parse_events``
     turns the result into flat events.
     """
-    return spark.read.options(**NDJSON_OPTIONS).json(path)
+    raw = spark.read.options(**NDJSON_OPTIONS).json(path)
+    if raw.columns == [CORRUPT_COL]:
+        # no line parsed to a JSON object with a field, and Spark refuses
+        # a raw JSON scan of the corrupt column alone: quarantine every
+        # non-blank line from a text read of the same files
+        return (
+            spark.read.text(path)
+            .where(F.trim("value") != "")
+            .select(F.col("value").alias(CORRUPT_COL))
+        )
+    return raw
 
 
 def parse_events(raw: DataFrame) -> DataFrame:

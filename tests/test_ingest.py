@@ -377,6 +377,26 @@ def test_batch_with_a_bad_line_is_cached_once(spark, tmp_path):
         res.unpersist()
 
 
+@pytest.mark.parametrize("extra", [{}, {"ist_timestamp": "Asia/Kolkata"}])
+def test_batch_of_only_malformed_lines_lands_nothing(spark, tmp_path, extra):
+    # every line is bad JSON, so the batch has only the corrupt column:
+    # both lines are quarantined and no table is written
+    from clickstreamtoclickhouse_spark.app import store_result
+    from clickstreamtoclickhouse_spark.sinks.parquet_sink import ParquetWarehouse
+
+    d = tmp_path / "ndjson"
+    d.mkdir()
+    (d / "bad.json").write_text('{"messageId": "m-1", "type": "track",\n{"type": \n')
+    res = EventPipeline(spark, extra_timestamps=extra).ingest_json_dir(str(d))
+    lake = tmp_path / "lake"
+    try:
+        assert res.corrupt.count() == 2
+        store_result(res, [ParquetWarehouse(spark, str(lake))], "ns")
+    finally:
+        res.unpersist()
+    assert not lake.exists()
+
+
 def test_parquet_batch_lands_unflattened(spark, tmp_path):
     # S4: a parquet batch skips flatten and decamelize
     # (send_to_warehouse.py:325-328), so its columns land as they are

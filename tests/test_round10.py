@@ -1,12 +1,9 @@
-"""Round-10 behavioral pins: the four ADVICE items (NULL-ts
-accounting in the late monitor, metadata-only IVM commits, txlog
-token-reuse warning) plus round-10 additions."""
+"""Round-10 behavioral pins: NULL-ts accounting in the late monitor
+plus round-10 additions."""
 from __future__ import annotations
 
 import json as _json
-import logging
 
-import pytest
 from pyspark.sql import functions as F
 
 from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
@@ -66,105 +63,6 @@ def test_late_monitor_quarantines_null_ts(spark, tmp_path):
     counts = TxLogTable(str(tmp_path / "null_counts")).read(spark).collect()
     # v=1 and v=4 counted; accounting total = counted + quarantined
     assert sum(r.n_rows for r in counts) == 2
-
-
-# -- ADVICE r9 #2: IVM high-water mark advances without a rewrite --
-
-
-def test_ivm_metadata_only_commit_when_no_new_files(spark, tmp_path):
-    """When the source gained commits but no data files, the rollup's
-    high-water mark must advance via a METADATA-ONLY commit (empty
-    adds/removes, prior file set kept) — not an O(table) overwrite
-    that rewrites every rollup file just to record the token."""
-    from clickstreamtoclickhouse_spark.operators.incremental import (
-        txlog_incremental_rollup,
-    )
-    from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
-
-    src = TxLogTable(str(tmp_path / "ivm_src"))
-    roll = TxLogTable(str(tmp_path / "ivm_roll"))
-    schema = "event_type string, value double"
-    src.append(spark.createDataFrame([("click", 1.00)], schema))
-    assert txlog_incremental_rollup(spark, src, roll)[0] == 0
-    files_before = set(roll.snapshot().files)
-
-    # a data-free source commit (token-only) advances the version
-    src.commit_txn(("external-writer", 0))
-    assert src.latest_version() == 1
-    v, n_new = txlog_incremental_rollup(spark, src, roll)
-    assert (v, n_new) == (1, 0)
-
-    # the mark advanced...
-    assert roll.last_txn_version(str(src.path)) == 1
-    # ...through a commit that touched ZERO data files
-    entry = _json.loads(
-        (roll.log_dir / f"{roll.latest_version():020d}.json").read_text()
-    )
-    assert entry["adds"] == [] and entry["removes"] == []
-    assert set(roll.snapshot().files) == files_before
-    # and the rollup still reads correctly
-    got = {r.event_type: r.value_cents for r in roll.read(spark).collect()}
-    assert got == {"click": 100}
-    # idempotent: a replayed refresh is a pure no-op
-    rv = roll.latest_version()
-    assert txlog_incremental_rollup(spark, src, roll) == (1, 0)
-    assert roll.latest_version() == rv
-
-
-# -- ADVICE r9 #3: token below the high-water mark logs a warning --
-
-
-def test_txlog_below_highwater_token_warns(spark, tmp_path, caplog):
-    """Tokens persist forever: a token version BELOW the app's
-    high-water mark means either a benign replay or a reset
-    checkpoint reusing the app id (silent data loss). The skip stays
-    (idempotence contract) but must be loud."""
-    from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
-
-    t = TxLogTable(str(tmp_path / "warn_tx"))
-    df = spark.createDataFrame([(1,)], "a long")
-    t.append(df, txn=("appA", 5))
-    v = t.latest_version()
-
-    with caplog.at_level(logging.WARNING,
-                         logger="clickstreamtoclickhouse_spark.sinks.txlog"):
-        # exact replay of the committed version: skip, NO warning
-        assert t.append(df, txn=("appA", 5)) == v
-        assert not [r for r in caplog.records if "high-water" in r.message]
-        # token below the mark: skip + warning
-        assert t.append(df, txn=("appA", 3)) == v
-        warned = [r for r in caplog.records if "high-water" in r.message]
-        assert len(warned) == 1
-    assert t.read(spark).count() == 1
-
-    with caplog.at_level(logging.WARNING,
-                         logger="clickstreamtoclickhouse_spark.sinks.txlog"):
-        caplog.clear()
-        assert t.overwrite(df, txn=("appA", 2)) == v
-        assert [r for r in caplog.records if "high-water" in r.message]
-
-
-def test_txlog_commit_txn_metadata_only(spark, tmp_path):
-    """commit_txn advances the token with no data movement, conflicts
-    retry, and replays are skipped."""
-    from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
-
-    t = TxLogTable(str(tmp_path / "meta_tx"))
-    df = spark.createDataFrame([(1,), (2,)], "a long")
-    t.append(df)
-    files = set(t.snapshot().files)
-    v = t.commit_txn(("ivm", 7))
-    assert v == 1
-    assert set(t.snapshot().files) == files
-    assert t.read(spark).count() == 2
-    assert t.last_txn_version("ivm") == 7
-    # replay: no new commit
-    assert t.commit_txn(("ivm", 7)) == 1
-    assert t.latest_version() == 1
-    # works on an EMPTY table too (schema is None until data arrives)
-    empty = TxLogTable(str(tmp_path / "meta_empty"))
-    assert empty.commit_txn(("boot", 0)) == 0
-    assert empty.last_txn_version("boot") == 0
 
 
 # -- verdict r9 #6: explicit eviction of the session caches --

@@ -230,56 +230,6 @@ def test_matryoshka_recall_perfect_when_info_in_prefix(spark, tmp_path):
         assert r.mean_recall_at_5 == 1.0
 
 
-def test_txlog_incremental_rollup_log_diff(spark, tmp_path):
-    """Incremental view maintenance over a txlog table: refresh #2
-    must aggregate ONLY the files added since the last processed
-    commit (log diff), the high-water mark must ride the rollup
-    commit (idempotent replay), and a history rewrite must raise."""
-    import pytest
-
-    from clickstreamtoclickhouse_spark.operators.incremental import (
-        txlog_incremental_rollup,
-    )
-    from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
-
-    src = TxLogTable(str(tmp_path / "events_tx"))
-    roll = TxLogTable(str(tmp_path / "rollup_tx"))
-    schema = "event_type string, value double"
-
-    src.append(spark.createDataFrame(
-        [("click", 1.00), ("view", 2.50), ("click", 0.25)], schema))
-    v, n_new = txlog_incremental_rollup(spark, src, roll)
-    assert v == 0 and n_new >= 1
-    got = {r.event_type: (r.n_rows, r.value_cents)
-           for r in roll.read(spark).collect()}
-    assert got == {"click": (2, 125), "view": (1, 250)}
-
-    # already current: no new commit, no files processed
-    rv = roll.latest_version()
-    assert txlog_incremental_rollup(spark, src, roll) == (0, 0)
-    assert roll.latest_version() == rv
-
-    # append a second batch; refresh must read ONLY its files
-    src.append(spark.createDataFrame(
-        [("click", 10.00), ("purchase", 5.00)], schema))
-    before = set(src.snapshot(0).files)
-    v, n_new = txlog_incremental_rollup(spark, src, roll)
-    after = set(src.snapshot(1).files)
-    assert v == 1 and n_new == len(after - before)
-    got = {r.event_type: (r.n_rows, r.value_cents)
-           for r in roll.read(spark).collect()}
-    assert got == {
-        "click": (3, 1125), "view": (1, 250), "purchase": (1, 500)
-    }
-
-    # history rewrite (OPTIMIZE compaction) invalidates the additive
-    # delta -> the refresh must refuse, not silently double-count
-    src.append(spark.createDataFrame([("view", 1.00)], schema))
-    src.optimize(spark)
-    with pytest.raises(ValueError, match="rebuild"):
-        txlog_incremental_rollup(spark, src, roll)
-
-
 def test_bm25_planted_relevance_ordering(spark, tmp_path):
     """Coverage and idf invariants on a planted corpus: the doc
     matching ALL query terms outranks partial matches; matching a

@@ -137,12 +137,47 @@ def test_parquet_compact_interrupted_loses_nothing(spark, landing, tmp_path, mon
     assert on_disk == set(TxLogTable(str(table)).snapshot().files)
 
 
+@pytest.mark.parametrize("inject_into", ["_clustered", "_write_files"])
+def test_compact_keeps_a_commit_that_lands_mid_compact(spark, tmp_path, monkeypatch, inject_into):
+    # another writer commits after compact has read the table (while
+    # its view is clustered) or while compact writes its files: the
+    # compacted table must hold the view plus that row
+    from clickstreamtoclickhouse_spark.sinks import parquet_sink
+    from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
+
+    def batch(*rows):
+        return spark.createDataFrame(rows, "message_id string, timestamp string").withColumn(
+            "timestamp", F.to_timestamp("timestamp")
+        )
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "lake"))
+    wh.insert_df("ns", "t", batch(("m1", "2026-01-01 00:00:01"), ("m2", "2026-01-01 00:00:02")))
+    wh.insert_df("ns", "t", batch(("m2", "2026-01-01 00:00:02")))
+    other = TxLogTable(str(tmp_path / "lake" / "ns" / "t"), partition_col="event_date")
+    m3 = parquet_sink._clustered(batch(("m3", "2026-01-02 00:00:03")))
+
+    owner = parquet_sink if inject_into == "_clustered" else TxLogTable
+    inner = getattr(owner, inject_into)
+    landed = []
+
+    def commit_first(*args, **kwargs):
+        if not landed:
+            landed.append("m3")  # before the append, which writes files too
+            other.append(m3)
+        return inner(*args, **kwargs)
+
+    monkeypatch.setattr(owner, inject_into, commit_first)
+    wh.compact("ns", "t")
+    assert landed
+    assert sorted(r["message_id"] for r in wh.read_table("ns", "t").collect()) == ["m1", "m2", "m3"]
+
+
 def test_txlog_vacuum_drops_emptied_partition_dirs(spark, tmp_path):
     from clickstreamtoclickhouse_spark.sinks.txlog import TxLogTable
 
     t = TxLogTable(str(tmp_path / "t"), partition_col="d")
     t.append(spark.createDataFrame([(1, "2026-01-01"), (2, "2026-01-02")], "id long, d string"))
-    t.overwrite(spark.createDataFrame([(3, "2026-01-02")], "id long, d string"))
+    t.rewrite(spark, lambda _: spark.createDataFrame([(3, "2026-01-02")], "id long, d string"))
     assert len(t.vacuum()) == 2
     assert sorted(p.name for p in (tmp_path / "t").iterdir()) == [
         "_staging", "_txlog", "d=2026-01-02",

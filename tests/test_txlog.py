@@ -1,7 +1,12 @@
 """Native transaction log (sinks/txlog.py): snapshot isolation, time
-travel, atomic merge, optimistic concurrency, vacuum retention."""
+travel, atomic merge, optimistic concurrency, vacuum retention,
+idempotence tokens and the incremental rollup that commits through
+them."""
 
 from __future__ import annotations
+
+import json as _json
+import logging
 
 import pytest
 
@@ -23,8 +28,9 @@ def test_append_and_read_roundtrip(spark, tmp_path):
 
 
 def test_token_append_replays_log_once_per_attempt(spark, tmp_path, monkeypatch):
-    # a token append replays the log once for its replay check and
-    # once per commit attempt; a skipped replay reads it once
+    # every uncontended write replays the log once: that one snapshot
+    # holds the token check and the rows a rewrite builds from. A
+    # skipped replay and vacuum read the log once too.
     t = TxLogTable(str(tmp_path / "t"))
     t.append(_df(spark, [(1, 10)]), txn=("s", 0))
     t.append(_df(spark, [(2, 20)]), txn=("s", 1))
@@ -33,12 +39,21 @@ def test_token_append_replays_log_once_per_attempt(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(
         TxLogTable, "_log_entries", lambda self: replays.append(1) or entries(self)
     )
-    assert t.append(_df(spark, [(3, 30)]), txn=("s", 2)) == 2
-    assert len(replays) == 2
-    replays.clear()
-    assert t.append(_df(spark, [(3, 30)]), txn=("s", 2)) == 2
-    assert len(replays) == 1
-    assert t.snapshot().txns == {"s": 2}
+
+    def replays_of(write):
+        replays.clear()
+        write()
+        return len(replays)
+
+    assert replays_of(lambda: t.append(_df(spark, [(3, 30)]), txn=("s", 2))) == 1
+    assert replays_of(lambda: t.append(_df(spark, [(3, 30)]), txn=("s", 2))) == 1
+    assert replays_of(lambda: t.append(_df(spark, [(4, 40)]))) == 1
+    assert replays_of(lambda: t.rewrite(spark, lambda rows: rows.filter("id > 1"))) == 1
+    assert replays_of(lambda: t.merge_upsert(spark, _df(spark, [(5, 50)]), keys=["id"])) == 1
+    assert replays_of(lambda: t.commit_txn(("ivm", 0))) == 1
+    assert replays_of(lambda: t.vacuum(keep_versions=1)) == 1
+    assert t.snapshot().txns == {"s": 2, "ivm": 0}
+    assert sorted(r["id"] for r in t.read(spark).collect()) == [2, 3, 4, 5]
 
 
 def test_vacuum_keeps_idempotence_tokens(spark, tmp_path):
@@ -114,9 +129,9 @@ def test_time_travel_and_overwrite_isolation(spark, tmp_path):
     t = TxLogTable(str(tmp_path / "t"))
     t.append(_df(spark, [(1, 10)]))
     t.append(_df(spark, [(2, 20)]))
-    # a reader holding version 0 is unaffected by the overwrite below
+    # a reader holding version 0 is unaffected by the rewrite below
     old = t.read(spark, version=0)
-    t.overwrite(_df(spark, [(9, 90)]))
+    t.rewrite(spark, lambda _: _df(spark, [(9, 90)]))
     assert [(r["id"], r["v"]) for r in old.collect()] == [(1, 10)]
     assert [(r["id"], r["v"]) for r in t.read(spark).collect()] == [(9, 90)]
     assert sorted(
@@ -189,8 +204,8 @@ def test_merge_on_empty_table(spark, tmp_path):
 def test_vacuum_reclaims_unreferenced_files(spark, tmp_path):
     t = TxLogTable(str(tmp_path / "t"))
     t.append(_df(spark, [(1, 10)]))
-    t.overwrite(_df(spark, [(2, 20)]))
-    t.overwrite(_df(spark, [(3, 30)]))
+    t.rewrite(spark, lambda _: _df(spark, [(2, 20)]))
+    t.rewrite(spark, lambda _: _df(spark, [(3, 30)]))
     deleted = t.vacuum(keep_versions=1)
     assert deleted  # versions 0/1's exclusive files are gone
     # latest snapshot intact after vacuum
@@ -198,36 +213,6 @@ def test_vacuum_reclaims_unreferenced_files(spark, tmp_path):
     # history outside the retention window is pruned
     with pytest.raises(ValueError):
         t.snapshot(version=0)
-
-
-def test_optimize_compacts_in_one_commit(spark, tmp_path):
-    """OPTIMIZE rewrites the per-append file pile into a right-sized
-    set in one atomic commit: contents unchanged, time travel to the
-    pre-compaction version still works (until vacuum), and vacuum then
-    reclaims the superseded files."""
-    t = TxLogTable(str(tmp_path / "t"), stats_cols=("id",))
-    for i in range(3):
-        t.append(_df(spark, [(i * 10 + j, j) for j in range(3)]))
-    pre = t.snapshot()
-    assert len(pre.files) >= 3
-    v = t.optimize(spark)
-    assert v == pre.version + 1
-    post = t.snapshot()
-    assert len(post.files) < len(pre.files)
-    rows = sorted((r["id"], r["v"]) for r in t.read(spark).collect())
-    assert rows == sorted((i * 10 + j, j) for i in range(3) for j in range(3))
-    # zone maps recomputed for the new files
-    assert post.stats and all(f in post.stats for f in post.files)
-    # time travel to the pre-compaction version still reads old files
-    assert sorted(
-        (r["id"], r["v"]) for r in t.read(spark, version=pre.version).collect()
-    ) == rows
-    # vacuum reclaims the superseded pile; latest snapshot unaffected
-    deleted = t.vacuum(keep_versions=1)
-    assert set(deleted) == set(pre.files)
-    assert sorted((r["id"], r["v"]) for r in t.read(spark).collect()) == rows
-    # idempotence: a fresh optimize on a compacted table is a no-op
-    assert t.optimize(spark) is None
 
 
 def test_vacuum_fold_is_crash_safe_at_every_intermediate_state(spark, tmp_path):
@@ -241,8 +226,8 @@ def test_vacuum_fold_is_crash_safe_at_every_intermediate_state(spark, tmp_path):
 
     t = TxLogTable(str(tmp_path / "t"))
     t.append(_df(spark, [(1, 10)]))          # v0: adds A
-    t.overwrite(_df(spark, [(2, 20)]))       # v1: removes A, adds B
-    t.overwrite(_df(spark, [(3, 30)]))       # v2: removes B, adds C
+    t.rewrite(spark, lambda _: _df(spark, [(2, 20)]))  # v1: removes A, adds B
+    t.rewrite(spark, lambda _: _df(spark, [(3, 30)]))  # v2: removes B, adds C
     base_files = set(t.snapshot(2).files)
 
     # state 1: folded v2 written, pre-cutoff entries STILL PRESENT
@@ -347,8 +332,8 @@ def test_zone_map_data_skipping(spark, tmp_path):
 def test_zone_maps_survive_vacuum(spark, tmp_path):
     t = TxLogTable(str(tmp_path / "t"), stats_cols=("id",))
     t.append(_df(spark, [(1, 10)]).coalesce(1))
-    t.overwrite(_df(spark, [(2, 20)]).coalesce(1))
-    t.overwrite(_df(spark, [(3, 30)]).coalesce(1))
+    t.rewrite(spark, lambda _: _df(spark, [(2, 20)]).coalesce(1))
+    t.rewrite(spark, lambda _: _df(spark, [(3, 30)]).coalesce(1))
     t.vacuum(keep_versions=1)
     snap = t.snapshot()
     assert snap.stats and all("id" in zm for zm in snap.stats.values())
@@ -377,7 +362,7 @@ def test_log_replay_matches_model_over_random_ops(spark, tmp_path):
             t.append(_df(spark, rows))
             model.update(dict(rows))
         elif op == "overwrite":
-            t.overwrite(_df(spark, rows))
+            t.rewrite(spark, lambda _: _df(spark, rows))
             model = dict(rows)
         else:
             upd = [(k, v, 1) for k, v in rows]
@@ -427,3 +412,138 @@ def test_concurrent_appends_all_land(spark, tmp_path):
     assert t.latest_version() == 11  # 12 contiguous commits, 0..11
     ids = sorted(r["id"] for r in t.read(spark).collect())
     assert len(ids) == 12
+
+
+def test_txlog_incremental_rollup_log_diff(spark, tmp_path):
+    """Incremental view maintenance over a txlog table: refresh #2
+    must aggregate ONLY the files added since the last processed
+    commit (log diff), the high-water mark must ride the rollup
+    commit (idempotent replay), and a history rewrite must raise."""
+    from clickstreamtoclickhouse_spark.operators.incremental import (
+        txlog_incremental_rollup,
+    )
+
+    src = TxLogTable(str(tmp_path / "events_tx"))
+    roll = TxLogTable(str(tmp_path / "rollup_tx"))
+    schema = "event_type string, value double"
+
+    src.append(spark.createDataFrame(
+        [("click", 1.00), ("view", 2.50), ("click", 0.25)], schema))
+    v, n_new = txlog_incremental_rollup(spark, src, roll)
+    assert v == 0 and n_new >= 1
+    got = {r.event_type: (r.n_rows, r.value_cents)
+           for r in roll.read(spark).collect()}
+    assert got == {"click": (2, 125), "view": (1, 250)}
+
+    # already current: no new commit, no files processed
+    rv = roll.latest_version()
+    assert txlog_incremental_rollup(spark, src, roll) == (0, 0)
+    assert roll.latest_version() == rv
+
+    # append a second batch; refresh must read ONLY its files
+    src.append(spark.createDataFrame(
+        [("click", 10.00), ("purchase", 5.00)], schema))
+    before = set(src.snapshot(0).files)
+    v, n_new = txlog_incremental_rollup(spark, src, roll)
+    after = set(src.snapshot(1).files)
+    assert v == 1 and n_new == len(after - before)
+    got = {r.event_type: (r.n_rows, r.value_cents)
+           for r in roll.read(spark).collect()}
+    assert got == {
+        "click": (3, 1125), "view": (1, 250), "purchase": (1, 500)
+    }
+
+    # history rewrite (a compaction) invalidates the additive delta ->
+    # the refresh must refuse, not silently double-count
+    src.append(spark.createDataFrame([("view", 1.00)], schema))
+    src.rewrite(spark, lambda rows: rows.coalesce(1))
+    with pytest.raises(ValueError, match="rebuild"):
+        txlog_incremental_rollup(spark, src, roll)
+
+
+def test_ivm_metadata_only_commit_when_no_new_files(spark, tmp_path):
+    """When the source gained commits but no data files, the rollup's
+    high-water mark must advance via a METADATA-ONLY commit (empty
+    adds/removes, prior file set kept) — not an O(table) overwrite
+    that rewrites every rollup file just to record the token."""
+    from clickstreamtoclickhouse_spark.operators.incremental import (
+        txlog_incremental_rollup,
+    )
+
+    src = TxLogTable(str(tmp_path / "ivm_src"))
+    roll = TxLogTable(str(tmp_path / "ivm_roll"))
+    schema = "event_type string, value double"
+    src.append(spark.createDataFrame([("click", 1.00)], schema))
+    assert txlog_incremental_rollup(spark, src, roll)[0] == 0
+    files_before = set(roll.snapshot().files)
+
+    # a data-free source commit (token-only) advances the version
+    src.commit_txn(("external-writer", 0))
+    assert src.latest_version() == 1
+    v, n_new = txlog_incremental_rollup(spark, src, roll)
+    assert (v, n_new) == (1, 0)
+
+    # the mark advanced...
+    assert roll.last_txn_version(str(src.path)) == 1
+    # ...through a commit that touched ZERO data files
+    entry = _json.loads(
+        (roll.log_dir / f"{roll.latest_version():020d}.json").read_text()
+    )
+    assert entry["adds"] == [] and entry["removes"] == []
+    assert set(roll.snapshot().files) == files_before
+    # and the rollup still reads correctly
+    got = {r.event_type: r.value_cents for r in roll.read(spark).collect()}
+    assert got == {"click": 100}
+    # idempotent: a replayed refresh is a pure no-op
+    rv = roll.latest_version()
+    assert txlog_incremental_rollup(spark, src, roll) == (1, 0)
+    assert roll.latest_version() == rv
+
+
+def test_txlog_below_highwater_token_warns(spark, tmp_path, caplog):
+    """Tokens persist forever: a token version BELOW the app's
+    high-water mark means either a benign replay or a reset
+    checkpoint reusing the app id (silent data loss). The skip stays
+    (idempotence contract) but must be loud."""
+    t = TxLogTable(str(tmp_path / "warn_tx"))
+    df = spark.createDataFrame([(1,)], "a long")
+    t.append(df, txn=("appA", 5))
+    v = t.latest_version()
+
+    with caplog.at_level(logging.WARNING,
+                         logger="clickstreamtoclickhouse_spark.sinks.txlog"):
+        # exact replay of the committed version: skip, NO warning
+        assert t.append(df, txn=("appA", 5)) == v
+        assert not [r for r in caplog.records if "high-water" in r.message]
+        # token below the mark: skip + warning
+        assert t.append(df, txn=("appA", 3)) == v
+        warned = [r for r in caplog.records if "high-water" in r.message]
+        assert len(warned) == 1
+    assert t.read(spark).count() == 1
+
+    with caplog.at_level(logging.WARNING,
+                         logger="clickstreamtoclickhouse_spark.sinks.txlog"):
+        caplog.clear()
+        assert t.rewrite(spark, lambda _: df, txn=("appA", 2)) == v
+        assert [r for r in caplog.records if "high-water" in r.message]
+
+
+def test_txlog_commit_txn_metadata_only(spark, tmp_path):
+    """commit_txn advances the token with no data movement, conflicts
+    retry, and replays are skipped."""
+    t = TxLogTable(str(tmp_path / "meta_tx"))
+    df = spark.createDataFrame([(1,), (2,)], "a long")
+    t.append(df)
+    files = set(t.snapshot().files)
+    v = t.commit_txn(("ivm", 7))
+    assert v == 1
+    assert set(t.snapshot().files) == files
+    assert t.read(spark).count() == 2
+    assert t.last_txn_version("ivm") == 7
+    # replay: no new commit
+    assert t.commit_txn(("ivm", 7)) == 1
+    assert t.latest_version() == 1
+    # works on an EMPTY table too (schema is None until data arrives)
+    empty = TxLogTable(str(tmp_path / "meta_empty"))
+    assert empty.commit_txn(("boot", 0)) == 0
+    assert empty.last_txn_version("boot") == 0
